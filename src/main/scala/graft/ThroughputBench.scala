@@ -22,7 +22,7 @@ import graft.streaming.TransactionPipeline
   */
 object ThroughputBench {
 
-  private def merchants(spark: SparkSession, n: Int): DataFrame =
+  private[graft] def merchants(spark: SparkSession, n: Int): DataFrame =
     spark.range(n).select(
       concat(lit("m"), col("id")).as("merchant_id"),
       (pmod(xxhash64(col("id"), lit(7L)), lit(100L)).cast("double") / 1000.0)

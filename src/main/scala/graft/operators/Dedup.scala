@@ -883,82 +883,7 @@ object Dedup {
         .select(col("src").as("_1"), col("dst").as("_2"))
         .as(tupleEnc)
         .coalesce(1)
-        .mapPartitions { it =>
-          // Primitive-long open-addressing parent table (r16 ADVICE):
-          // the boxed HashMap[Long,Long] + Vector output buffer cost
-          // ~150-300 MB at the 2M-edge gate; three flat arrays
-          // (17 B/slot, load ≤ 0.75) put the gate-boundary graph at
-          // ~70 MB and the output is a streamed iterator, never
-          // buffered. Parents are stored as NODE IDS (not slot
-          // indices), so a rehash just re-places (key, parent) pairs.
-          var cap = 1 << 12
-          var key = new Array[Long](cap)
-          var used = new Array[Boolean](cap)
-          var par = new Array[Long](cap)
-          var size = 0
-          def slotIn(k: Long, ks: Array[Long], us: Array[Boolean],
-                     c: Int): Int = {
-            var h = (java.lang.Long.hashCode(
-              k * 0x9E3779B97F4A7C15L) & (c - 1))
-            while (us(h) && ks(h) != k) h = (h + 1) & (c - 1)
-            h
-          }
-          def rehash(): Unit = {
-            val ok = key; val ou = used; val op = par; val oc = cap
-            cap <<= 1
-            key = new Array[Long](cap)
-            used = new Array[Boolean](cap)
-            par = new Array[Long](cap)
-            var i = 0
-            while (i < oc) {
-              if (ou(i)) {
-                val h = slotIn(ok(i), key, used, cap)
-                used(h) = true; key(h) = ok(i); par(h) = op(i)
-              }
-              i += 1
-            }
-          }
-          def slotOf(k: Long): Int = {
-            var h = slotIn(k, key, used, cap)
-            if (!used(h)) {
-              if ((size + 1) * 4 >= cap * 3) {
-                rehash(); h = slotIn(k, key, used, cap)
-              }
-              used(h) = true; key(h) = k; par(h) = k; size += 1
-            }
-            h
-          }
-          // NOTE every par(...) index is computed into a local FIRST:
-          // slotOf can rehash and swap the arrays, and in
-          // `par(slotOf(r))` Scala loads the array reference BEFORE
-          // the index expression runs — a rehash in between indexes
-          // (or writes!) the stale array.
-          def root(x: Long): Long = {
-            var r = x
-            var s = slotOf(r)
-            while (par(s) != r) { r = par(s); s = slotOf(r) }
-            var c = x // path compression
-            while (c != r) {
-              val sc = slotOf(c); val nx = par(sc); par(sc) = r; c = nx
-            }
-            r
-          }
-          it.foreach { case (a, b) =>
-            val ra = root(a); val rb = root(b)
-            if (ra < rb) { val s = slotOf(rb); par(s) = ra }
-            else if (rb < ra) { val s = slotOf(ra); par(s) = rb }
-          }
-          new Iterator[(Long, Long)] {
-            private var i = 0
-            def hasNext: Boolean = {
-              while (i < cap && !used(i)) i += 1
-              i < cap
-            }
-            def next(): (Long, Long) = {
-              val k = key(i); i += 1; (k, root(k))
-            }
-          }
-        }(tupleEnc)
+        .mapPartitions(LongUnionFind.components)(tupleEnc)
         .toDF("node", "cluster_id")
       return nodes.select(col(idCol).as("node"))
         .join(local, Seq("node"), "left")
@@ -1380,5 +1305,90 @@ object Dedup {
         when(col("is_exact") === 1, "dup_exact")
           .when(col("is_near") === 1, "dup_near")
           .otherwise("new").as("status"))
+  }
+}
+
+/** Single-task union-find over an edge stream: (node, component
+  * minimum) for every node that appears in an edge, streamed.
+  */
+private[graft] object LongUnionFind {
+  def components(it: Iterator[(Long, Long)]): Iterator[(Long, Long)] = {
+    // Primitive-long open-addressing parent table (r16 ADVICE):
+    // the boxed HashMap[Long,Long] + Vector output buffer cost
+    // ~150-300 MB at the 2M-edge gate; three flat arrays
+    // (17 B/slot, load ≤ 0.75) put the gate-boundary graph at
+    // ~70 MB and the output is a streamed iterator, never
+    // buffered. Parents are stored as NODE IDS (not slot
+    // indices), so a rehash just re-places (key, parent) pairs.
+    var cap = 1 << 12
+    var key = new Array[Long](cap)
+    var used = new Array[Boolean](cap)
+    var par = new Array[Long](cap)
+    var size = 0
+    def slotIn(k: Long, ks: Array[Long], us: Array[Boolean],
+               c: Int): Int = {
+      var h = (java.lang.Long.hashCode(
+        k * 0x9E3779B97F4A7C15L) & (c - 1))
+      while (us(h) && ks(h) != k) h = (h + 1) & (c - 1)
+      h
+    }
+    def rehash(): Unit = {
+      val ok = key; val ou = used; val op = par; val oc = cap
+      cap <<= 1
+      key = new Array[Long](cap)
+      used = new Array[Boolean](cap)
+      par = new Array[Long](cap)
+      var i = 0
+      while (i < oc) {
+        if (ou(i)) {
+          val h = slotIn(ok(i), key, used, cap)
+          used(h) = true; key(h) = ok(i); par(h) = op(i)
+        }
+        i += 1
+      }
+    }
+    def slotOf(k: Long): Int = {
+      var h = slotIn(k, key, used, cap)
+      if (!used(h)) {
+        if ((size + 1) * 4 >= cap * 3) {
+          rehash(); h = slotIn(k, key, used, cap)
+        }
+        used(h) = true; key(h) = k; par(h) = k; size += 1
+      }
+      h
+    }
+    // NOTE every par(...) index is computed into a local FIRST:
+    // slotOf can rehash and swap the arrays, and in
+    // `par(slotOf(r))` Scala loads the array reference BEFORE
+    // the index expression runs — a rehash in between indexes
+    // (or writes!) the stale array.
+    def root(x: Long): Long = {
+      var r = x
+      var s = slotOf(r)
+      while (par(s) != r) { r = par(s); s = slotOf(r) }
+      var c = x // path compression
+      while (c != r) {
+        val sc = slotOf(c); val nx = par(sc); par(sc) = r; c = nx
+      }
+      r
+    }
+    it.foreach { case (a, b) =>
+      val ra = root(a); val rb = root(b)
+      if (ra < rb) { val s = slotOf(rb); par(s) = ra }
+      else if (rb < ra) { val s = slotOf(ra); par(s) = rb }
+    }
+    new Iterator[(Long, Long)] {
+      private var i = 0
+      def hasNext: Boolean = {
+        while (i < cap && !used(i)) i += 1
+        i < cap
+      }
+      // advances on its own: without a preceding hasNext it must
+      // not read an unused slot (key 0) nor insert it via root
+      def next(): (Long, Long) = {
+        if (!hasNext) throw new NoSuchElementException("union-find labels exhausted")
+        val k = key(i); i += 1; (k, root(k))
+      }
+    }
   }
 }

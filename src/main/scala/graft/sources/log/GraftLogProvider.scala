@@ -8,7 +8,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
-import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, ReadMaxRows, SupportsAdmissionControl, SupportsTriggerAvailableNow}
+import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, ReadMaxRows, ReportsSourceMetrics, SupportsAdmissionControl, SupportsTriggerAvailableNow}
 import org.apache.spark.sql.connector.write.{LogicalWriteInfo, WriteBuilder}
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types._
@@ -198,7 +198,7 @@ final class GraftLogScan(opts: GraftLogOptions) extends Scan {
 
 final class GraftLogMicroBatchStream(opts: GraftLogOptions)
     extends MicroBatchStream with SupportsAdmissionControl
-    with SupportsTriggerAvailableNow {
+    with SupportsTriggerAvailableNow with ReportsSourceMetrics {
 
   // Trigger.AvailableNow contract (the Kafka source's behavior): the
   // end offsets are FROZEN at query start; admission control still
@@ -206,6 +206,10 @@ final class GraftLogMicroBatchStream(opts: GraftLogOptions)
   // after the freeze wait for the next run, and the query stops on
   // its own when the frozen ends are reached.
   @volatile private var frozenEnds: Option[Map[Int, Long]] = None
+  /** The end offsets the last `latestOffset` read; progress reporting
+    * and the lag metrics reuse them instead of listing the log again.
+    */
+  @volatile private var lastEnds: Option[Map[Int, Long]] = None
 
   override def prepareForTriggerAvailableNow(): Unit =
     frozenEnds = Some(GraftLogFormat.endOffsets(opts.dir))
@@ -238,7 +242,22 @@ final class GraftLogMicroBatchStream(opts: GraftLogOptions)
   override def getDefaultReadLimit: ReadLimit =
     opts.maxRecordsPerTrigger.map(ReadLimit.maxRows).getOrElse(ReadLimit.allAvailable())
 
-  override def reportLatestOffset(): Offset = GraftLogOffset(currentEnds())
+  override def reportLatestOffset(): Offset =
+    GraftLogOffset(lastEnds.getOrElse(currentEnds()))
+
+  /** Consumer lag in records, under the Kafka source's metric names:
+    * per partition, the latest end minus the offset just consumed.
+    */
+  override def metrics(latestConsumedOffset: java.util.Optional[Offset]): JMap[String, String] =
+    (lastEnds, Option(latestConsumedOffset.orElse(null))) match {
+      case (Some(ends), Some(consumed)) if ends.nonEmpty =>
+        val at = consumed.asInstanceOf[GraftLogOffset].ends
+        val behind = ends.map { case (p, e) => e - at.getOrElse(p, 0L) }
+        Map("minOffsetsBehindLatest" -> behind.min.toString,
+          "maxOffsetsBehindLatest" -> behind.max.toString,
+          "avgOffsetsBehindLatest" -> (behind.sum.toDouble / behind.size).toString).asJava
+      case _ => java.util.Collections.emptyMap()
+    }
 
   /** Cap the batch at the read limit, spreading the row budget across
     * partitions proportionally to backlog (largest-remainder rounding
@@ -247,6 +266,7 @@ final class GraftLogMicroBatchStream(opts: GraftLogOptions)
     */
   override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
     val ends = currentEnds()
+    lastEnds = Some(ends)
     val from = start.asInstanceOf[GraftLogOffset].ends
     limit match {
       case m: ReadMaxRows =>

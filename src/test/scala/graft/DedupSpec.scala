@@ -108,4 +108,19 @@ class DedupSpec extends AnyFunSuite {
     assert(local(40L) == 1L && local(105L) == 100L &&
       local(208L) == 200L && local(777L) == 777L)
   }
+
+  test("union-find label iterator: next() alone advances and ends cleanly") {
+    import graft.operators.LongUnionFind
+    // 5 is never an edge end, and no node is 0: a next() that read an
+    // unused slot would emit (0, 0) and insert key 0 into the table
+    val edges = Seq((3L, 7L), (7L, 9L), (12L, 4L))
+    val expected = Map(3L -> 3L, 7L -> 3L, 9L -> 3L, 12L -> 4L, 4L -> 4L)
+    val it = LongUnionFind.components(edges.iterator)
+    val pulled = Seq.fill(expected.size)(it.next())
+    assert(pulled.toMap == expected && pulled.size == expected.size)
+    assert(!it.hasNext)
+    intercept[NoSuchElementException](it.next())
+    // the hasNext-driven path yields the same labels
+    assert(LongUnionFind.components(edges.iterator).toMap == expected)
+  }
 }

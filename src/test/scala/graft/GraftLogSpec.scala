@@ -124,6 +124,38 @@ class GraftLogSpec extends AnyFunSuite {
     assert(s.count(_ > 0) >= 5, s"backlog split across triggers, got $s")
   }
 
+  test("consumer lag: progress carries Kafka's offsets-behind-latest metrics") {
+    val root = tmp("glog_lag")
+    val dir = s"$root/log"
+    (1 to 60).map(i => (s"k$i", s"v$i")).toDF("key", "value")
+      .write.format("graftlog").option("path", dir)
+      .option("log.partitions", "2").mode("append").save()
+    val q = spark.readStream.format("graftlog").option("path", dir)
+      .option("startingOffsets", "earliest")
+      .option("maxRecordsPerTrigger", "20").load()
+      .writeStream.option("checkpointLocation", s"$root/ckpt")
+      .foreachBatch((df: org.apache.spark.sql.DataFrame, _: Long) => df.count(): Unit)
+      .start()
+    q.processAllAvailable(); q.stop()
+
+    val nParts = graft.sources.log.GraftLogFormat.endOffsets(dir).size
+    val batches = q.recentProgress.filter(_.numInputRows > 0).toSeq
+    assert(batches.size == 3, s"60 records at 20 per trigger: ${batches.map(_.numInputRows)}")
+    var consumed = 0L
+    batches.foreach { p =>
+      consumed += p.numInputRows
+      val m = p.sources.head.metrics
+      val (lo, avg, hi) = (m.get("minOffsetsBehindLatest").toLong,
+        m.get("avgOffsetsBehindLatest").toDouble, m.get("maxOffsetsBehindLatest").toLong)
+      assert(lo <= avg && avg <= hi, s"min <= avg <= max: $m")
+      // the lag summed over partitions is the backlog still unread
+      assert(math.abs(avg * nParts - (60 - consumed)) < 1e-9, s"after $consumed rows: $m")
+    }
+    assert(batches.last.sources.head.metrics.get("maxOffsetsBehindLatest") == "0")
+    assert(batches.head.sources.head.latestOffset == batches.last.sources.head.endOffset,
+      "the reported latest offset is the end offsets latestOffset read")
+  }
+
   test("streaming sink: a real writeStream lands records; epoch replay never duplicates") {
     val root = tmp("glog_sink")
     val dir = s"$root/log"

@@ -447,22 +447,41 @@ def looks_oom(err):
     return OOM_RE.search((err or "").lower()) is not None
 
 
+VALUE_OPTS = ("--only", "--json", "--child")
+
+
+def parse_args(argv):
+    """(positionals, {option: value}, {flag}); each of VALUE_OPTS takes
+    its value either as `--opt=V` or as the next argument (`--opt V`)."""
+    pos, vals, flags = [], {}, set()
+    i = 0
+    while i < len(argv):
+        a = argv[i]
+        name, eq, v = a.partition("=")
+        if name in VALUE_OPTS:
+            if not eq:
+                if i + 1 >= len(argv):
+                    sys.exit(f"{name} needs a value")
+                i += 1
+                v = argv[i]
+            vals[name] = v
+        elif a.startswith("--"):
+            flags.add(a)
+        else:
+            pos.append(a)
+        i += 1
+    return pos, vals, flags
+
+
 def main():
-    args = [a for a in sys.argv[1:] if not a.startswith("--")]
+    args, vals, flags = parse_args(sys.argv[1:])
     sfdir = args[0] if len(args) > 0 else "/root/testdata/sf0.001"
     outdir = args[1] if len(args) > 1 else "/tmp/graft_verify"
-    only = None
-    json_path = None
-    child = None
-    for a in sys.argv[1:]:
-        if a.startswith("--only"):
-            only = set(a.split("=", 1)[1].split(","))
-        if a.startswith("--json"):
-            json_path = Path(a.split("=", 1)[1])
-        if a.startswith("--child="):
-            child = a.split("=", 1)[1]
-    strict = "--lax" not in sys.argv
-    inproc = "--inproc" in sys.argv
+    only = set(vals["--only"].split(",")) if "--only" in vals else None
+    json_path = Path(vals["--json"]) if "--json" in vals else None
+    child = vals.get("--child")
+    strict = "--lax" not in flags
+    inproc = "--inproc" in flags
 
     if child is not None:
         child_main(sfdir, outdir, child, strict)
@@ -492,7 +511,7 @@ def main():
     if json_path is not None and not json_path.exists():
         json_path.write_text("{}")
 
-    if "--skip-run" not in sys.argv:
+    if "--skip-run" not in flags:
         # Bounded + survivable Verify leg (r16 verdict #1): the old
         # path exited the whole sweep on a non-zero sbt rc, so one
         # Spark-side death (or an OOM-killed JVM) zeroed the round's

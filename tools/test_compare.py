@@ -117,6 +117,25 @@ def main():
             AssertionError("must not sleep when meminfo is unreadable")))
     assert waited == 0, waited
 
+    # --json / --only / --child take their value in either spelling;
+    # the spaced value is not mistaken for a positional directory.
+    for argv in (["sf", "out", "--json", "r.json", "--only", "q_a,q_b"],
+                 ["sf", "--json=r.json", "out", "--only=q_a,q_b"],
+                 ["--json", "r.json", "sf", "--only", "q_a,q_b", "out"]):
+        pos, vals, flags = compare.parse_args(argv)
+        assert pos == ["sf", "out"] and not flags, (argv, pos, flags)
+        assert vals == {"--json": "r.json", "--only": "q_a,q_b"}, (argv, vals)
+    pos, vals, flags = compare.parse_args(
+        ["sf", "out", "--child", "q_x", "--lax", "--skip-run"])
+    assert vals == {"--child": "q_x"}, vals
+    assert flags == {"--lax", "--skip-run"}, flags
+    assert compare.parse_args([]) == ([], {}, set())
+    try:
+        compare.parse_args(["sf", "--json"])
+        raise AssertionError("a trailing --json without a value must fail")
+    except SystemExit:
+        pass
+
     print("test_compare: all assertions passed")
 
 
