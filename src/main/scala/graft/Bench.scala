@@ -1,6 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import scala.collection.mutable.ArrayBuffer
+import scala.jdk.CollectionConverters._
+
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import com.fasterxml.jackson.databind.node.ObjectNode
 
 /** Benchmark harness: times every SparkEntry query on the sf dir named
   * by SPARK_GRAFT_SF_DIR and emits ONE JSON line.
@@ -227,29 +230,45 @@ object Bench {
     }.min
   }
 
-  /** Per-query reference timings from a previously committed clean run.
-    * The file is the harness's own output format; the `"queries"`
-    * object is flat name->seconds, parsed with a regex (no nesting).
-    * Whitespace-tolerant: the round-8 additive REF merge rewrote the
-    * file through python json.dump, which emits `"queries": {` with a
-    * space — the original exact-`"queries":{` probe missed it and the
-    * whole drift gate silently disabled itself (reference parsed
-    * empty, run_drift pinned at 1.0). Both key probes now accept
-    * optional whitespace around the colon; BenchParseSpec pins both
-    * spellings.
+  private val mapper = new ObjectMapper()
+
+  /** An insertion-ordered JSON object. Values may be Double, Int,
+    * Boolean, String, a JsonNode, or a Seq of Doubles (an array).
+    */
+  private[graft] def jsonObject(fields: (String, Any)*): ObjectNode = {
+    val o = mapper.createObjectNode()
+    fields.foreach {
+      case (k, v: Double)   => o.put(k, v)
+      case (k, v: Int)      => o.put(k, v)
+      case (k, v: Boolean)  => o.put(k, v)
+      case (k, v: String)   => o.put(k, v)
+      case (k, v: JsonNode) => o.set[JsonNode](k, v)
+      case (k, vs: Seq[_])  =>
+        val a = o.putArray(k); vs.foreach(v => a.add(v.asInstanceOf[Double]))
+      case (k, v) => throw new IllegalArgumentException(s"$k: $v")
+    }
+    o
+  }
+
+  /** Write `node` as one compact JSON line. */
+  private[graft] def writeJson(path: String, node: JsonNode): Unit =
+    java.nio.file.Files.write(java.nio.file.Paths.get(path),
+      (mapper.writeValueAsString(node) + "\n").getBytes("UTF-8"))
+
+  /** A JSON file's root, or None if it is missing or malformed. */
+  private def readJson(path: String): Option[JsonNode] =
+    try Option(mapper.readTree(new java.io.File(path)))
+    catch { case scala.util.control.NonFatal(_) => None }
+
+  /** Per-query reference timings from a previously committed clean run:
+    * the numeric fields of the top-level `"queries"` object. Empty when
+    * the file or the key is missing.
     */
   private[graft] def loadReference(path: String): Map[String, Double] =
-    try {
-      val txt = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(path)), "UTF-8")
-      "\"queries\"\\s*:\\s*\\{".r.findFirstMatchIn(txt) match {
-        case None => Map.empty
-        case Some(m) =>
-          val body = txt.substring(m.end, txt.indexOf('}', m.end))
-          "\"([A-Za-z0-9_]+)\"\\s*:\\s*([0-9.Ee+-]+)".r.findAllMatchIn(body)
-            .map(g => g.group(1) -> g.group(2).toDouble).toMap
-      }
-    } catch { case _: Throwable => Map.empty }
+    readJson(path).toSeq
+      .flatMap(_.path("queries").properties().asScala)
+      .collect { case e if e.getValue.isNumber => e.getKey -> e.getValue.asDouble }
+      .toMap
 
   /** Single-thread calibration seconds from the reference file, if it
     * carries one (refreshed references do; see [[cpuCalibration]]).
@@ -263,57 +282,11 @@ object Bench {
   private[graft] def loadRefCpuAlloc(path: String): Option[Double] =
     loadRefField(path, "cpu_alloc")
 
-  private def loadRefField(path: String, name: String): Option[Double] =
-    try {
-      val txt = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(path)), "UTF-8")
-      topLevelNumber(txt, name)
-    } catch { case _: Throwable => None }
-
-  /** Numeric value of a TOP-LEVEL JSON key, found by a string-aware
-    * depth scanner rather than a raw-text regex: BENCH_REF carries
-    * provenance note strings, and a note that merely quotes a key like
-    * `"cpu_alloc": 0.1` would have satisfied the old first-match regex
-    * before (or instead of) the real field, silently shifting
-    * host_factor. String literals are consumed whole (escapes
-    * honoured), so quoted decoys inside notes can never surface as
-    * keys; only a key at object depth 1 followed by `:` and a number
-    * matches. BenchParseSpec pins a decoy-bearing fixture.
+  /** A numeric TOP-LEVEL field: a key quoted inside a note string or
+    * nested in `"queries"` never matches (BenchParseSpec pins both).
     */
-  private[graft] def topLevelNumber(txt: String, name: String): Option[Double] = {
-    val n = txt.length
-    var i = 0
-    var depth = 0
-    while (i < n) {
-      val c = txt.charAt(i)
-      if (c == '"') {
-        val start = i + 1
-        i += 1
-        while (i < n && txt.charAt(i) != '"') {
-          if (txt.charAt(i) == '\\') i += 1
-          i += 1
-        }
-        val content = if (i <= n) txt.substring(start, math.min(i, n)) else ""
-        i += 1
-        if (depth == 1 && content == name) {
-          var j = i
-          while (j < n && txt.charAt(j).isWhitespace) j += 1
-          if (j < n && txt.charAt(j) == ':') {
-            j += 1
-            while (j < n && txt.charAt(j).isWhitespace) j += 1
-            val k = j
-            while (j < n && "0123456789.eE+-".indexOf(txt.charAt(j)) >= 0) j += 1
-            if (j > k)
-              try return Some(txt.substring(k, j).toDouble)
-              catch { case _: NumberFormatException => }
-          }
-        }
-      } else if (c == '{' || c == '[') { depth += 1; i += 1 }
-      else if (c == '}' || c == ']') { depth -= 1; i += 1 }
-      else i += 1
-    }
-    None
-  }
+  private def loadRefField(path: String, name: String): Option[Double] =
+    readJson(path).map(_.path(name)).filter(_.isNumber).map(_.asDouble)
 
   /** Host normalization factor for the drift gate (r13 verdict #5):
     * the MEAN of the available calibration ratios — md5 digest
@@ -333,27 +306,66 @@ object Bench {
     else math.max(1.0, ratios.sum / ratios.size)
   }
 
+  /** The artifact's `"methodology"` text. */
+  private val Methodology =
+    "forcing = full materialization of the query plan via toRdd (r15; " +
+    ".count() let Catalyst prune projections and eliminate unique-key " +
+    "joins, under-measuring projection-heavy queries); min of 2 runs per " +
+    "query (run 1 pays one-time codegen/broadcast builds); >3x run " +
+    "disagreement -> third evidence run, value = min of all runs (r15: " +
+    "the median of [fast, comparable, codegen-heavy] returned the slower " +
+    "comparable run and stamped warm-fast queries 2-3x over anchor at " +
+    "true idle; wall noise is one-sided so min is sound); readings >5x " +
+    "the committed BENCH_REF.json value retried up to 2x spaced 500ms " +
+    "then flagged suspect (ambient-load audit: per-run times in runs, " +
+    "1-min loadavg before/after each query in load); clean_total " +
+    "substitutes reference values for suspect readings; run-level gate: " +
+    "if suspect-substituted total exceeds 1.25x the reference total over " +
+    "jointly-known queries (normalized by host_factor = mean of this " +
+    "host's calibration ratios over the reference's - single-thread md5 " +
+    "cpu_1t and small-string alloc/hash-group cpu_alloc, the " +
+    "explode-family regime md5 cannot see - floored at 1; rounds land on " +
+    "different-speed hosts), one full extra pass re-measures every query " +
+    "(min taken), and a run still above the gate is stamped run_suspect; " +
+    "load defense: the run waits up to SPARK_GRAFT_LOAD_WAIT_SECS " +
+    "(default 600s) for 1-min loadavg <= SPARK_GRAFT_LOAD_MAX (default " +
+    "2.0) before measuring and is stamped invalid_load if it must start " +
+    "loaded, a daemon thread additionally samples FOREIGN cpu (system " +
+    "busy jiffies minus this process, /proc/stat vs /proc/self/stat, " +
+    "every 5s) for the whole suite and a mean above " +
+    "SPARK_GRAFT_FOREIGN_MAX (default 2.0 cores) stamps " +
+    "midrun_load_breach and run_suspect - the start-only loadavg gate is " +
+    "blind to co-tenants arriving mid-run and raw loadavg cannot police " +
+    "the middle of a run that itself runs local[32], and any query still " +
+    ">=2x its reference after in-flight retries gets one end-of-suite " +
+    "requeue (min taken); BENCH_REF refresh rule: a new reference " +
+    "requires two back-to-back verified-idle runs agreeing within ~1%, a " +
+    "committed tools/bench_trend.py comparison vs the outgoing anchor, " +
+    "and a stated cause in the commit - serial refreshes without that " +
+    "evidence could hide a slow creep; scaling evidence (r16 verdict #2): " +
+    "cpus/default_parallelism record the session parallelism " +
+    "($SPARK_GRAFT_CPUS is honored - master local[cpus], " +
+    "shuffle.partitions=cpus) and jobs/tasks carry per-query driver-job " +
+    "and task counts from the min-time run (passive SparkListener; " +
+    "onJobStart/onStageSubmitted fire before the work they announce, so " +
+    "counts are complete when the synchronous force() returns) - at bench " +
+    "SF most queries are near the per-job scheduling floor, so a flat " +
+    "wall ratio between cpu counts is attributable to driver-job latency, " +
+    "not to ignored cores"
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH.json")
     val refPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_REF", "BENCH_REF.json")
     val reference = loadReference(refPath)
     // first calibration sample before the Spark session exists; a
     // second runs after the queries (see below) — early samples read
     // up to ~20% slow while the JIT compiler storm shares cores
-    val (cpu1tStart, cpuMt) = cpuCalibration(cpus.toInt)
+    val (cpu1tStart, cpuMt) = cpuCalibration(cpus)
     val cpuAllocStart = allocCalibration()
     val refCpu1t = loadRefCpu1t(refPath)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(cpus)
     // == Scaling legibility (r16 verdict item 2) ==
     // At sf0.1 the suite is driver-job-latency-bound: 198 queries in
     // ~130 s is ~0.66 s/query, most of it scheduling floor, so the
@@ -540,7 +552,7 @@ object Bench {
     // the loadavg evidence is already in "load"/"load_start".
     // end-of-run calibration sample: the JVM is fully warm and idle
     // between queries, so min(start, end) is the host's real speed
-    val cpu1t = math.min(cpu1tStart, cpuCalibration(cpus.toInt)._1)
+    val cpu1t = math.min(cpu1tStart, cpuCalibration(cpus)._1)
     val cpuAlloc = math.min(cpuAllocStart, allocCalibration())
     // a slower host inflates every query by ~the calibration ratio;
     // never scale BELOW 1 (a faster host must not excuse a regression)
@@ -580,29 +592,10 @@ object Bench {
       .filter { case (_, v, ref) => v > 5 * ref }
     val results = timings.toSeq
     val loadEnd = load1()
-    def esc(s: String): String =
-      s.flatMap {
-        case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
-        case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
-      }
     def r3(v: Double): Double = math.rint(v * 1000) / 1000
-    val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    val errJson = failed.map { case (k, m) => s""""$k":"${esc(m)}"""" }
-      .mkString("{", ",", "}")
-    val runsJson = allRuns.toSeq
-      .map { case (k, rs) => "\"" + k + "\":[" + rs.map(r3).mkString(",") + "]" }
-      .mkString("{", ",", "}")
-    val loadJson = loads.result()
-      .map { case (k, (a, b)) => "\"" + k + s"""\":[$a,$b]""" }
-      .mkString("{", ",", "}")
-    val suspectJson = suspectList
-      .map { case (k, v, ref) => "\"" + k + s"""\":{"value":${r3(v)},"ref":$ref}""" }
-      .mkString("{", ",", "}")
-    val jobsJson = qJobs.toSeq.map { case (k, v) => "\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    val tasksJson = qTasks.toSeq.map { case (k, v) => "\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
+    def suspectJson(list: Seq[(String, Double, Double)]): ObjectNode =
+      jsonObject(list.map { case (k, v, ref) =>
+        k -> jsonObject("value" -> r3(v), "ref" -> ref) }: _*)
     val defaultPar = spark.sparkContext.defaultParallelism
     val total = if (results.nonEmpty) results.map(_._2).sum else 0.0
     // total with suspect readings replaced by their committed reference
@@ -610,24 +603,50 @@ object Bench {
     val suspectNames = suspectList.map(_._1).toSet
     val cleanTotal = results.map { case (k, v) =>
       if (suspectNames(k)) reference(k) else v }.sum
-    val json = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"cpus":$cpus,"default_parallelism":$defaultPar,"jobs":$jobsJson,"tasks":$tasksJson,"runs":$runsJson,"load":$loadJson,"load_start":$loadStart,"load_end":$loadEnd,"suspect":$suspectJson,"clean_total":${r3(cleanTotal)},"cpu_1t":${r3(cpu1t)},"cpu_mt":${r3(cpuMt)},"cpu_alloc":${r3(cpuAlloc)},"host_factor":${r3(hostFactor)},"run_drift":${r3(runDrift)},"run_drift_norm":${r3(runDriftNorm)},"run_retried":$runRetried,"run_suspect":$runSuspect,"invalid_load":$invalidLoad,"foreign_mean":${r3(foreignMean)},"foreign_peak":${r3(foreignPeak)},"foreign_n":${foreignSamples.size},"midrun_load_breach":$midrunBreach,"errors":$errJson,"failed":${failed.size},"sf":"$sfDir","methodology":"forcing = full materialization of the query plan via toRdd (r15; .count() let Catalyst prune projections and eliminate unique-key joins, under-measuring projection-heavy queries); min of 2 runs per query (run 1 pays one-time codegen/broadcast builds); >3x run disagreement -> third evidence run, value = min of all runs (r15: the median of [fast, comparable, codegen-heavy] returned the slower comparable run and stamped warm-fast queries 2-3x over anchor at true idle; wall noise is one-sided so min is sound); readings >5x the committed BENCH_REF.json value retried up to 2x spaced 500ms then flagged suspect (ambient-load audit: per-run times in runs, 1-min loadavg before/after each query in load); clean_total substitutes reference values for suspect readings; run-level gate: if suspect-substituted total exceeds 1.25x the reference total over jointly-known queries (normalized by host_factor = mean of this host's calibration ratios over the reference's - single-thread md5 cpu_1t and small-string alloc/hash-group cpu_alloc, the explode-family regime md5 cannot see - floored at 1; rounds land on different-speed hosts), one full extra pass re-measures every query (min taken), and a run still above the gate is stamped run_suspect; load defense: the run waits up to SPARK_GRAFT_LOAD_WAIT_SECS (default 600s) for 1-min loadavg <= SPARK_GRAFT_LOAD_MAX (default 2.0) before measuring and is stamped invalid_load if it must start loaded, a daemon thread additionally samples FOREIGN cpu (system busy jiffies minus this process, /proc/stat vs /proc/self/stat, every 5s) for the whole suite and a mean above SPARK_GRAFT_FOREIGN_MAX (default 2.0 cores) stamps midrun_load_breach and run_suspect - the start-only loadavg gate is blind to co-tenants arriving mid-run and raw loadavg cannot police the middle of a run that itself runs local[32], and any query still >=2x its reference after in-flight retries gets one end-of-suite requeue (min taken); BENCH_REF refresh rule: a new reference requires two back-to-back verified-idle runs agreeing within ~1%, a committed tools/bench_trend.py comparison vs the outgoing anchor, and a stated cause in the commit - serial refreshes without that evidence could hide a slow creep; scaling evidence (r16 verdict #2): cpus/default_parallelism record the session parallelism ($$SPARK_GRAFT_CPUS is honored - master local[cpus], shuffle.partitions=cpus) and jobs/tasks carry per-query driver-job and task counts from the min-time run (passive SparkListener; onJobStart/onStageSubmitted fire before the work they announce, so counts are complete when the synchronous force() returns) - at bench SF most queries are near the per-job scheduling floor, so a flat wall ratio between cpu counts is attributable to driver-job latency, not to ignored cores"}"""
-    java.nio.file.Files.write(java.nio.file.Paths.get(outPath),
-      (json + "\n").getBytes("UTF-8"))
+    val artifact = jsonObject(
+      "metric" -> "total", "value" -> total, "unit" -> "sec",
+      "queries" -> jsonObject(results: _*),
+      "cpus" -> cpus, "default_parallelism" -> defaultPar,
+      "jobs" -> jsonObject(qJobs.toSeq: _*),
+      "tasks" -> jsonObject(qTasks.toSeq: _*),
+      "runs" -> jsonObject(allRuns.toSeq.map { case (k, rs) =>
+        k -> rs.toSeq.map(r3) }: _*),
+      "load" -> jsonObject(loads.result().map { case (k, (a, b)) =>
+        k -> Seq(a, b) }: _*),
+      "load_start" -> loadStart, "load_end" -> loadEnd,
+      "suspect" -> suspectJson(suspectList),
+      "clean_total" -> r3(cleanTotal), "cpu_1t" -> r3(cpu1t),
+      "cpu_mt" -> r3(cpuMt), "cpu_alloc" -> r3(cpuAlloc),
+      "host_factor" -> r3(hostFactor), "run_drift" -> r3(runDrift),
+      "run_drift_norm" -> r3(runDriftNorm), "run_retried" -> runRetried,
+      "run_suspect" -> runSuspect, "invalid_load" -> invalidLoad,
+      "foreign_mean" -> r3(foreignMean), "foreign_peak" -> r3(foreignPeak),
+      "foreign_n" -> foreignSamples.size,
+      "midrun_load_breach" -> midrunBreach,
+      "errors" -> jsonObject(failed: _*), "failed" -> failed.size,
+      "sf" -> sfDir, "methodology" -> Methodology)
+    writeJson(outPath, artifact)
     spark.stop()
     // The driver captures only the last 2000 BYTES of stdout (BENCH_r03
     // "tail" is 2000 chars and starts mid-line, so the full per-query
     // map never parses). Print a COMPACT line — total + the slowest N
     // queries at 3 dp — guaranteed to fit the capture window; the
     // complete map lives in the file written above.
-    def compactLine(n: Int): String = {
-      val slowest = results.sortBy(-_._2).take(n)
-        .map { case (k, v) => "\"" + k + "\":" + r3(v) }
-        .mkString("{", ",", "}")
-      val susp = suspectList.take(n)
-        .map { case (k, v, ref) => "\"" + k + s"""\":{"value":${r3(v)},"ref":$ref}""" }
-        .mkString("{", ",", "}")
-      s"""{"metric":"total","value":${r3(total)},"unit":"sec","queries":$slowest,"queries_run":${results.size},"cpus":$cpus,"default_parallelism":$defaultPar,"suspect":$susp,"clean_total":${r3(cleanTotal)},"cpu_1t":${r3(cpu1t)},"cpu_alloc":${r3(cpuAlloc)},"host_factor":${r3(hostFactor)},"run_drift":${r3(runDrift)},"run_drift_norm":${r3(runDriftNorm)},"run_suspect":$runSuspect,"invalid_load":$invalidLoad,"foreign_mean":${r3(foreignMean)},"foreign_peak":${r3(foreignPeak)},"midrun_load_breach":$midrunBreach,"load_start":$loadStart,"load_end":$loadEnd,"failed":${failed.size},"sf":"$sfDir","full_results":"$outPath"}"""
-    }
+    def compactLine(n: Int): String = mapper.writeValueAsString(jsonObject(
+      "metric" -> "total", "value" -> r3(total), "unit" -> "sec",
+      "queries" -> jsonObject(results.sortBy(-_._2).take(n)
+        .map { case (k, v) => k -> r3(v) }: _*),
+      "queries_run" -> results.size, "cpus" -> cpus,
+      "default_parallelism" -> defaultPar,
+      "suspect" -> suspectJson(suspectList.take(n)),
+      "clean_total" -> r3(cleanTotal), "cpu_1t" -> r3(cpu1t),
+      "cpu_alloc" -> r3(cpuAlloc), "host_factor" -> r3(hostFactor),
+      "run_drift" -> r3(runDrift), "run_drift_norm" -> r3(runDriftNorm),
+      "run_suspect" -> runSuspect, "invalid_load" -> invalidLoad,
+      "foreign_mean" -> r3(foreignMean), "foreign_peak" -> r3(foreignPeak),
+      "midrun_load_breach" -> midrunBreach, "load_start" -> loadStart,
+      "load_end" -> loadEnd, "failed" -> failed.size, "sf" -> sfDir,
+      "full_results" -> outPath))
     // hard guarantee the line fits the driver's capture window even if
     // query names grow: shrink the slowest-N list until it does
     val compact = (20 to 0 by -5).map(compactLine).find(_.length <= 1800)

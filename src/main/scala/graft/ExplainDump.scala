@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Writes EXPLAIN.md: formatted physical plans for the headline
   * queries — the artifact for reviewing scan pushdown, broadcast
   * choices, and codegen spans without re-running anything.
@@ -11,15 +9,8 @@ import org.apache.spark.sql.SparkSession
 object ExplainDump {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "false") // show full static plan
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local(4)
+    spark.conf.set("spark.sql.adaptive.enabled", "false") // show full static plan
     val headline = Seq("q_star_revenue", "q_enrich_orders", "q_user_velocity",
       "q_velocity_multi", "q_interval_join", "q_dedup_jaccard", "q_ann_topk",
       "q_event_features", "q_model_score", "q_emb_neardup", "q_graph_cooccur",
@@ -111,7 +102,7 @@ object ExplainDump {
         org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
       sb.append(s"\n## $name\n\n```\n$plan```\n")
     }
-    Files.writeString(Paths.get("/root/repo/EXPLAIN.md"), sb.toString)
+    Files.writeString(Paths.get("EXPLAIN.md"), sb.toString)
     println(s"wrote EXPLAIN.md (${headline.size} plans)")
     spark.stop()
   }

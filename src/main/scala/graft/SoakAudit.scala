@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -49,15 +49,10 @@ object SoakAudit {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val outPath = sys.env.getOrElse("SPARK_GRAFT_SOAK_OUT", "SOAK.json")
     val targetBatches = sys.env.getOrElse("SPARK_GRAFT_SOAK_BATCHES", "50").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark =
+      GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
 
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
       .select("doc_id", "text")

@@ -218,59 +218,23 @@ object ThroughputBench {
   }
 
   def main(args: Array[String]): Unit = {
-    if (args.headOption.contains("log-avro")) {
-      val n = args.lift(1).map(_.toLong).getOrElse(5000000L)
-      val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-      val spark = SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      spark.sparkContext.setLogLevel("ERROR")
-      runLogAvro(spark, n, cpus.toInt)
-      spark.stop()
-      return
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = GraftSession.local(cpus)
+    args.headOption match {
+      case Some("log-avro") =>
+        runLogAvro(spark, args.lift(1).map(_.toLong).getOrElse(5000000L), cpus)
+      case Some("log") =>
+        runLog(spark, args.lift(1).map(_.toLong).getOrElse(5000000L), cpus)
+      case Some("docs") =>
+        runDocs(spark, args.lift(1).map(_.toLong).getOrElse(2000000L), cpus)
+      case _ =>
+        runPipeline(spark, args.headOption.map(_.toLong).getOrElse(5000000L), cpus)
     }
-    if (args.headOption.contains("log")) {
-      val n = args.lift(1).map(_.toLong).getOrElse(5000000L)
-      val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-      val spark = SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      spark.sparkContext.setLogLevel("ERROR")
-      runLog(spark, n, cpus.toInt)
-      spark.stop()
-      return
-    }
-    if (args.headOption.contains("docs")) {
-      val n = args.lift(1).map(_.toLong).getOrElse(2000000L)
-      val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-      val spark = SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      spark.sparkContext.setLogLevel("ERROR")
-      runDocs(spark, n, cpus.toInt)
-      spark.stop()
-      return
-    }
-    val n = args.headOption.map(_.toLong).getOrElse(5000000L)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    spark.stop()
+  }
 
+  /** Batch then streaming rows/s of the full fraud pipeline. */
+  private def runPipeline(spark: SparkSession, n: Long, cpus: Int): Unit = {
     val users = graft.gen.DataGen.userProfiles(spark, 10000)
       .select("user_id", "risk_score", "avg_transaction_amount", "kyc_status")
     val merch = merchants(spark, 5000)
@@ -286,7 +250,7 @@ object ThroughputBench {
 
     // ---- batch ----
     val txns = graft.gen.DataGen.transactions(spark, n, nUsers = 10000)
-      .repartition(cpus.toInt)
+      .repartition(cpus)
     // warm (codegen + broadcast build)
     scored(txns.limit(10000)).agg(sum(col("fraud_score"))).collect()
     val t0 = System.nanoTime()
@@ -322,6 +286,5 @@ object ThroughputBench {
     }
 
     println(f"""{"batch_rows_per_sec":${batchRate}%.0f,"stream_rows_per_sec":${streamRate}%.0f,"rows":$n,"check":${agg.head.getLong(1)}}""")
-    spark.stop()
   }
 }

@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.storage.StorageLevel
 
 /** Registry of operator-INTERNAL cached frames.
   *
@@ -23,9 +24,13 @@ object OperatorCaches {
   private val frames =
     new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
 
-  /** Cache `df` and register it for later [[releaseAll]]. */
+  /** Cache `df` and register it for later [[releaseAll]]. A frame whose
+    * plan is already cached (tracked before, or cached by the caller)
+    * is returned as is: caching it again only logs a warning, and a
+    * second registration would double-count it.
+    */
   private[graft] def track(df: DataFrame): DataFrame = {
-    frames.add(df.cache())
+    if (df.storageLevel == StorageLevel.NONE) frames.add(df.cache())
     df
   }
 

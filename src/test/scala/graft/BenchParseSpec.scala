@@ -87,6 +87,23 @@ class BenchParseSpec extends AnyFunSuite {
     assert(Bench.loadRefCpuAlloc(s) === None)
   }
 
+  test("an artifact whose error text holds quotes, backslashes, a " +
+    "newline and a tab reads back through the reference parser") {
+    val msg = "RuntimeException: bad \"key\" at C:\\tmp\nnext\tline"
+    val p = tmp("")
+    Bench.writeJson(p, Bench.jsonObject(
+      "metric" -> "total", "value" -> 1.75, "unit" -> "sec",
+      "queries" -> Bench.jsonObject("q_a" -> 1.25, "q_b" -> 0.5),
+      "runs" -> Bench.jsonObject("q_a" -> Seq(1.25, 1.5)),
+      "cpu_1t" -> 0.051, "errors" -> Bench.jsonObject("q_c" -> msg),
+      "failed" -> 1))
+    assert(Bench.loadReference(p) === Map("q_a" -> 1.25, "q_b" -> 0.5))
+    assert(Bench.loadRefCpu1t(p) === Some(0.051))
+    val back = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(new java.io.File(p))
+    assert(back.path("errors").path("q_c").asText === msg)
+  }
+
   // == Blended host factor (r13 verdict #5) ==
 
   test("loadRefCpuAlloc parses both the compact and spaced spellings") {
