@@ -849,8 +849,7 @@ object SparkEntry {
           T(s, d)("events"), col("value"), col("ts"))
         .select(col("event_id"), col("merchant_degree"),
           col("p_fraud").as("p_graph"))),
-    // MLlib PipelineModel inference (published LR via .transform) +
-    // model/rule ensemble
+    // published-LR inference (FraudModel.score) + model/rule ensemble
     "q_model_score" -> ((s, d) => FraudQueries.modelScore(T(s, d)("events"))),
     // A4/geo: grid key, high-risk predicate, haversine
     "q_geo_features" -> ((s, d) => FraudQueries.geoFeatures(T(s, d)("events"))),

@@ -239,12 +239,10 @@ object ThroughputBench {
       .select("user_id", "risk_score", "avg_transaction_amount", "kyc_status")
     val merch = merchants(spark, 5000)
 
-    // full pipeline incl. model scoring — the columnar serving twin of
-    // the published LR (bit-identical margins, stays in codegen); the
-    // MLlib-transform route measures ~45% lower (row-based predictRaw)
+    // full pipeline incl. model scoring (the shipping scorer)
     def scored(txns: DataFrame) =
       TransactionPipeline.scoreAndDecide(
-        graft.ml.FraudModel.scoreColumnar(
+        graft.ml.FraudModel.score(
           TransactionPipeline.enrich(asPipelineInput(txns), users, merch),
           col("amount"), col("timestamp")))
 

@@ -32,9 +32,6 @@ object Features {
   /** amount / user-average ratio — :113. */
   def amountRatio(a: Column, avg: Column): Column = a / avg
 
-  /** (amount − avg) / avg deviation — :114. */
-  def amountDeviation(a: Column, avg: Column): Column = (a - avg) / avg
-
   /** Named amount bucket — :386-392 (micro/small/medium/large/
     * very_large CASE ladder).
     */

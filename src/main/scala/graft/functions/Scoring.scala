@@ -25,17 +25,6 @@ object Scoring {
       weighted.map { case (c, w) => c.cast("double") * lit(w) }
         .reduce(_ + _))
 
-  /** Canonical transaction rule score over pre-computed flag columns,
-    * mirroring the reference's factor groups (amount/velocity/geo/
-    * device/time/merchant).
-    */
-  def transactionRuleScore(highAmount: Column, highVelocity: Column,
-                           geoRisk: Column, newDevice: Column,
-                           nightTime: Column, merchantRisk: Column): Column =
-    ruleScore(Seq(
-      highAmount -> 0.25, highVelocity -> 0.20, geoRisk -> 0.15,
-      newDevice -> 0.15, nightTime -> 0.10, merchantRisk -> 0.15))
-
   // ---- ensemble combiners (ensemble_predictor.py:252-323, A11) ----
 
   /** Weighted average of model scores. */

@@ -1,29 +1,27 @@
 package graft.ml
 
 import org.apache.spark.ml.{Pipeline, PipelineModel}
-import org.apache.spark.ml.classification.{LogisticRegression, LogisticRegressionModel}
+import org.apache.spark.ml.classification.LogisticRegression
 import org.apache.spark.ml.feature.VectorAssembler
-import org.apache.spark.ml.functions.vector_to_array
-import org.apache.spark.ml.graftshim.ModelBridge
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** MLlib model-inference stage — the Spark-native analog of the
-  * reference's model service (services/ml-models/src/models/
-  * model_manager.py:279-307 dispatch, ensemble_predictor.py:75-148
-  * member scoring): a `PipelineModel` (VectorAssembler →
-  * LogisticRegressionModel) applied with `.transform`, entirely inside
-  * the executor — no HTTP hop, no per-row dispatch.
+/** Model-inference stage — the Spark-native analog of the reference's
+  * model service (services/ml-models/src/models/model_manager.py:279-307
+  * dispatch, ensemble_predictor.py:75-148 member scoring), evaluated
+  * entirely inside the executor — no HTTP hop, no per-row dispatch.
   *
-  * Two model sources, mirroring the reference's split between
-  * training jobs and the serving path:
-  *  - [[train]]: fit on DataGen's labeled fraud scenarios (fixed
-  *    seed ⇒ deterministic data); used by MlSpec to prove the
-  *    train→serve leg end-to-end.
-  *  - [[pretrained]]: the published coefficients of exactly that
-  *    training run, frozen as constants (the MLlib equivalent of the
-  *    reference's pickled model files) so the serving path — and the
-  *    q_model_score oracle — is reproducible bit-for-bit.
+  * Training and serving are split the way the reference splits its
+  * training jobs from its serving path:
+  *  - [[train]]: an MLlib `PipelineModel` (VectorAssembler →
+  *    LogisticRegression) fit on DataGen's labeled fraud scenarios
+  *    (fixed seed ⇒ deterministic data); MlSpec proves it reproduces
+  *    the published weights.
+  *  - [[score]]: those published weights, frozen as constants (the
+  *    analog of the reference's pickled model files), applied as
+  *    column algebra, so scoring fuses into whole-stage codegen with
+  *    the rest of the plan, batch or stream, and the q_model_score
+  *    oracle is reproducible bit-for-bit.
   */
 object FraudModel {
 
@@ -73,36 +71,15 @@ object FraudModel {
     6.949605774911317, 1.012399334285386)
   val PublishedIntercept: Double = -4.334628310389339
 
-  def pretrained(uid: String = "graft_lr"): LogisticRegressionModel =
-    ModelBridge.logistic(uid, PublishedWeights, PublishedIntercept)
-      .setFeaturesCol("features")
-
-  /** Score rows through the real MLlib path: assemble → transform →
-    * unpack the probability vector. Adds `margin` (the raw log-odds,
-    * exact linear algebra) and `p_fraud` (sigmoid of it).
+  /** Score rows with the published LR: adds `margin` (the raw log-odds)
+    * and `p_fraud` (its sigmoid `1/(1+e^-m)`). The margin is the
+    * left-associated sum of `w_i·x_i` in feature order plus the
+    * intercept — bit-identical to MLlib's `LogisticRegressionModel`
+    * (BLAS ddot accumulates the same way; MlSpec pins it). `p_fraud`
+    * agrees with MLlib's to ~1e-13 relative: MLlib's link calls
+    * Math.exp, Catalyst's EXP calls StrictMath.exp.
     */
   def score(df: DataFrame, amount: Column, ts: Column): DataFrame = {
-    val assembled = assembler.transform(withFeatures(df, amount, ts))
-    pretrained().transform(assembled)
-      .withColumn("margin", element_at(vector_to_array(col("rawPrediction")), 2))
-      .withColumn("p_fraud", element_at(vector_to_array(col("probability")), 2))
-      .drop(("features" +: "rawPrediction" +: "probability" +: "prediction" +:
-        FeatureNames): _*)
-  }
-
-  /** Columnar serving twin of [[score]]: the SAME published weights
-    * applied as pure column arithmetic, so scoring fuses into
-    * whole-stage codegen with the rest of the pipeline instead of
-    * crossing MLlib's row-based transform. The margin is bit-identical
-    * to the BLAS path (MlSpec pins it: ddot accumulates
-    * left-associated in index order, exactly this chain); p_fraud uses
-    * the same `1/(1+e^-m)` link and agrees to ~1e-13 relative (MLlib
-    * calls Math.exp, Catalyst EXP calls StrictMath.exp). Use for
-    * throughput-critical paths (~1.9M rows/s through the full pipeline
-    * vs ~1.2M via transform); [[score]] remains the
-    * Transformer-API-compatible route.
-    */
-  def scoreColumnar(df: DataFrame, amount: Column, ts: Column): DataFrame = {
     val margin = featureColumns(amount, ts).zip(PublishedWeights)
       .map { case ((_, c), w) => c * lit(w) }
       .reduce(_ + _) + lit(PublishedIntercept)

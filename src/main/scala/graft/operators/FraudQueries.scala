@@ -75,7 +75,7 @@ object FraudQueries {
     */
   def ensembleMulti(events: DataFrame): DataFrame = {
     import graft.ml.DeterministicModels
-    val scored = graft.ml.FraudModel.scoreColumnar(
+    val scored = graft.ml.FraudModel.score(
       graft.sources.Par.fan(events), col("value"), col("ts"))
     val lr = round(col("p_fraud"), 6)
     val tree = DeterministicModels.treeEnsembleScore(col("value"), col("ts"))
@@ -228,15 +228,14 @@ object FraudQueries {
       .select("event_id", "n_5min", "amt_5min", "n_1h", "amt_1h",
               "n_24h", "amt_24h")
 
-  /** MLlib inference stage (model_manager.py:279-307 serving path):
-    * the published LogisticRegressionModel applied via
-    * `PipelineModel`-style transform, its probability fed into the A11
-    * weighted-average ensemble next to the rule score.
+  /** Model inference stage (model_manager.py:279-307 serving path):
+    * the published LR (`FraudModel.score`), its probability fed into
+    * the A11 weighted-average ensemble next to the rule score.
     *
-    * `margin` is exact linear algebra (BLAS ddot accumulates
-    * left-associated in index order — MlSpec pins bit-equality with
-    * the closed-form chain); the sigmoid crosses libm, so the
-    * probability is rounded at 6dp in both engines before use.
+    * `margin` is exact linear algebra (the left-associated chain MLlib's
+    * BLAS ddot also computes — MlSpec pins bit-equality); the sigmoid
+    * crosses libm, so the probability is rounded at 6dp in both engines
+    * before use.
     */
   def modelScore(events: DataFrame): DataFrame = {
     val scored = graft.ml.FraudModel.score(

@@ -149,6 +149,9 @@ object Quality {
     val q = (col("n_cur") + 1).cast("double") / (col("t_cur") + col("k_bins"))
     val psiTerm = (p - q) * round(log(p / q), 6)
     import org.apache.spark.sql.expressions.Window
+    // unpartitioned by design: the CDF runs over at most `bins` rows
+    // (the bin is clamped to [0, bins)), so Spark's single-partition
+    // window warning here is not actionable
     val w = Window.orderBy(col("bin"))
       .rowsBetween(Window.unboundedPreceding, 0)
     val cumP = sum(col("n_ref")).over(w).cast("double") / col("t_ref")

@@ -171,9 +171,13 @@ object Retrieval {
     * by construction: rank the bounded lexical top list (doc_id,
     * bm25), take the vector leg's ranks as given, full-outer join,
     * score Σ 1/(rrfK + rank) with absent legs contributing 0, final
-    * top-k by (score desc, doc_id). All windows run over post-limit
-    * bounded frames — the single-partition exchanges are
-    * driver-sized, not a scale hazard.
+    * top-k by (score desc, doc_id). Both ranking windows are
+    * unpartitioned by design and run over bounded frames: the lexical
+    * top list, then the fused frame, which the optimizer caps at `k`
+    * rows (the `rn <= k` filter becomes a WindowGroupLimit). So
+    * Spark's "No Partition Defined for Window" warning here is not
+    * actionable: the single-partition input is driver-sized, not a
+    * scale hazard (PlanSpec pins both bounds).
     */
   private[graft] def rrfFuse(lexTop: DataFrame, vecTop: DataFrame,
                              k: Int, rrfK: Int): DataFrame = {

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Skew mitigation for hot keys (SURVEY §4 / builder brief: "skewed
@@ -8,8 +8,8 @@ import org.apache.spark.sql.functions._
   *
   * Two-phase salted aggregation: phase 1 aggregates on
   * (key, salt ∈ [0, buckets)) so a hot key's rows spread over
-  * `buckets` reducers; phase 2 merges the partials per key. Works for
-  * any algebraic aggregate (sum/count/min/max — anything with an
+  * `buckets` reducers; phase 2 merges the partials per key. The same
+  * two phases work for any algebraic aggregate (anything with an
   * associative merge, the same law the typed Aggregator encodes).
   * AQE's skew-join handling covers joins; this covers aggregation,
   * where AQE cannot split a single hot reduce key.
@@ -20,20 +20,7 @@ import org.apache.spark.sql.functions._
   */
 object Salt {
 
-  def saltedAgg(df: DataFrame, key: String, saltFrom: String, buckets: Int,
-                partials: Seq[(String, Column => Column, Column => Column)])
-      : DataFrame = {
-    val salted = df.withColumn("_salt",
-      pmod(xxhash64(col(saltFrom)), lit(buckets.toLong)))
-    val phase1 = salted.groupBy(col(key), col("_salt"))
-      .agg(partials.map { case (name, p, _) => p(col(name)).as(name) }.head,
-           partials.tail.map { case (name, p, _) => p(col(name)).as(name) }: _*)
-    phase1.groupBy(col(key))
-      .agg(partials.map { case (name, _, m) => m(col(name)).as(name) }.head,
-           partials.tail.map { case (name, _, m) => m(col(name)).as(name) }: _*)
-  }
-
-  /** Common case: salted count + exact (cent-scaled) sum per key. */
+  /** Salted count + exact (scaled-integer) sum per key. */
   def saltedCountSum(df: DataFrame, key: String, value: String,
                      saltFrom: String, buckets: Int = 32): DataFrame = {
     val salted = df.withColumn("_salt",

@@ -729,7 +729,10 @@ object TextAnalysis {
     // top-vocabSize and only those merge — where a bare
     // row_number window would shuffle EVERY distinct token of a
     // 100 TB corpus into one partition just to discard all but
-    // `vocabSize`. The window then ranks only the kept rows.
+    // `vocabSize`. The window then ranks only the kept rows: it is
+    // unpartitioned by design over at most `vocabSize` rows, so Spark's
+    // single-partition window warning here is not actionable (PlanSpec
+    // pins the bound).
     val top = tok.groupBy("tok").agg(count(lit(1)).as("n"))
       .orderBy(col("n").desc, col("tok")).limit(vocabSize)
     val vocab = top.withColumn("token_id", row_number().over(

@@ -38,11 +38,4 @@ object Velocity {
             .cast(DoubleType) / lit(1e4))
     }
   }
-
-  /** High-frequency flag per the reference thresholds
-    * (>5 in 5min, >20 in 1h — FeatureExtractor.java:346-358).
-    */
-  def withVelocityFlags(df: DataFrame): DataFrame =
-    df.withColumn("high_velocity_5min", col("n_5min") > 5)
-      .withColumn("high_velocity_1h", col("n_1h") > 20)
 }

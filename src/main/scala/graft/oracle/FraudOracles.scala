@@ -193,8 +193,8 @@ object FraudOracles {
   }
 
   /** Mirror of FraudQueries.modelScore: the published LR coefficients
-    * applied as a left-associated linear chain (bit-identical to
-    * MLlib's BLAS ddot — pinned by MlSpec), sigmoid rounded at 6dp
+    * applied as the same left-associated linear chain as
+    * FraudModel.score, sigmoid rounded at 6dp
     * (libm exp), ensemble over the rounded probability.
     */
   // Every literal is cast to DOUBLE: a bare multi-digit literal is a
@@ -214,7 +214,7 @@ object FraudOracles {
     flag(s"value < ${D(3.0)}"),
     flag(s"value > ${D(1500.0)}"))
 
-  /** Left-associated margin chain — bit-identical to MLlib BLAS ddot. */
+  /** Left-associated margin chain, as FraudModel.score computes it. */
   private def lrMarginSql: String =
     lrFeatSql.zip(graft.ml.FraudModel.PublishedWeights)
       .map { case (f, wi) => s"($f) * ${D(wi)}" }.mkString(" + ") +

@@ -62,38 +62,3 @@ final case class UserProfile(
     preferred_merchants: Seq[String],
     device_fingerprints: Seq[String],
     behavioral_patterns: BehavioralPatterns)
-
-/** simulator.py:62-75. */
-final case class MerchantProfile(
-    merchant_id: String,
-    name: String,
-    category: String,
-    mcc: String,
-    country: String,
-    city: String,
-    risk_level: String,
-    avg_transaction_amount: Double,
-    fraud_rate: Double,
-    is_blacklisted: Boolean,
-    operating_start_hour: Int,
-    operating_end_hour: Int)
-
-/** simulator.py:388-397 (user-behavior topic). */
-final case class UserBehaviorEvent(
-    user_id: String,
-    event_type: String,
-    transaction_id: String,
-    amount: Double,
-    merchant_category: String,
-    timestamp: Timestamp,
-    device_fingerprint: String)
-
-/** simulator.py:407-415 (fraud-alerts topic). */
-final case class FraudAlert(
-    alert_id: String,
-    transaction_id: String,
-    user_id: String,
-    fraud_score: Double,
-    fraud_type: String,
-    alert_level: String,
-    timestamp: Timestamp)

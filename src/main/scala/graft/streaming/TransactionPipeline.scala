@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -11,9 +11,9 @@ import graft.plans.ProfileLookup
 /** The main fraud pipeline (reference: FraudDetectionJob.java:33-107),
   * re-expressed as one declarative Structured Streaming plan:
   *
-  *   kafka → from_json (error-tolerant) → profile lookups →
-  *   feature columns → rule score → decision → high-risk / normal
-  *   splits → sinks
+  *   log source → from_json (error-tolerant) → profile lookups →
+  *   feature columns → model score → rule score + blend → decision →
+  *   log sink
   *
   * Differences from the reference by design (SURVEY §3.1):
   * - profile enrichment is an in-memory lookup into broadcast hash
@@ -23,11 +23,11 @@ import graft.plans.ProfileLookup
   *   query picks up new profiles (acceptable: reference TTLs are
   *   minutes–hours). With no join, a micro-batch plan has no exchange
   *   and runs as one job;
-  * - features/score/decision are columns fused into one codegen
-  *   stage, not per-row Java maps;
+  * - features/model score/rule score/decision are columns fused into
+  *   one codegen stage, not per-row Java maps;
   * - the ML ensemble is column arithmetic over pluggable score
   *   columns (model_manager degrades to deterministic scorers —
-  *   mirrored by `pseudoModelScores`).
+  *   mirrored by the deterministic members of `FraudModel.registry`).
   *
   * Every transform takes/returns DataFrame, so the identical plan runs
   * in batch (oracle-checkable) and streaming (MemoryStream-tested).
@@ -56,20 +56,6 @@ object TransactionPipeline {
       StructField("lat", DoubleType), StructField("lon", DoubleType)))),
     StructField("is_fraud", BooleanType),
     StructField("fraud_type", StringType)))
-
-  /** S1: Kafka source (FraudDetectionJob.java:141-157). Untested in
-    * this container (no broker) but the full option surface of the
-    * reference's consumer is carried over.
-    */
-  def fromKafka(spark: SparkSession, bootstrapServers: String,
-                topic: String = "payment-transactions"): DataFrame =
-    spark.readStream.format("kafka")
-      .option("kafka.bootstrap.servers", bootstrapServers)
-      .option("subscribe", topic)
-      .option("startingOffsets", "latest")
-      .option("kafka.isolation.level", "read_committed")
-      .load()
-      .select(col("value").cast("string").as("json"))
 
   /** S2: error-tolerant JSON decode. A corrupt record becomes the
     * reference's placeholder row (ERROR_* id, score 0.5, decision
@@ -108,9 +94,12 @@ object TransactionPipeline {
         coalesce(col("risk_level"), lit("medium")))
       .withColumn("is_blacklisted", coalesce(col("is_blacklisted"), lit(false)))
 
-  /** §2.6 feature subset + rule score + decision, as one projection. */
-  def scoreAndDecide(enriched: DataFrame,
-                     threshold: Double = 0.7): DataFrame = {
+  /** §2.6 feature subset + rule score + decision, as one projection.
+    * Expects the model's `p_fraud` column (`FraudModel.score`), blended
+    * with the rule score via the A11 ensemble — the reference's
+    * ensemble_predictor combining rule + model members.
+    */
+  def scoreAndDecide(modeled: DataFrame): DataFrame = {
     val amount = col("amount")
     val ts = col("timestamp")
     val geoDist = F.haversineKm(
@@ -124,18 +113,13 @@ object TransactionPipeline {
       (geoDist > 1000.0) -> 0.15,
       F.isHighRiskLocation(col("geolocation.lat"), col("geolocation.lon")) -> 0.10,
       F.isSuspiciousUserAgent(col("user_agent")) -> 0.10))
-    // When the MLlib stage ran upstream (pipeline() always runs it),
-    // blend its probability into the rule score via the A11 ensemble —
-    // the reference's ensemble_predictor combining rule + model members.
     val combined =
-      if (enriched.columns.contains("p_fraud"))
-        Scoring.weightedAverage(Seq(score -> 0.6, col("p_fraud") -> 0.4))
-      else score
+      Scoring.weightedAverage(Seq(score -> 0.6, col("p_fraud") -> 0.4))
     val finalScore =
       when(col("parse_error"), 0.5)
         .when(col("is_blacklisted"), 1.0)
         .otherwise(combined)
-    enriched
+    modeled
       .withColumn("fraud_score", finalScore)
       .withColumn("risk_level",
         when(col("parse_error"), "ERROR")
@@ -145,28 +129,12 @@ object TransactionPipeline {
           .otherwise(Decisions.decision(col("fraud_score"))))
   }
 
-  /** P1/P2 splits (FraudDetectionJob.java:66-74). */
-  def highRisk(scored: DataFrame, threshold: Double = 0.7): DataFrame =
-    scored.filter(col("fraud_score") > threshold)
-  def normal(scored: DataFrame, threshold: Double = 0.7): DataFrame =
-    scored.filter(col("fraud_score") <= threshold)
-
-  /** P3: alert projection (simulator.py:407-415 shape). */
-  def toAlerts(highRisk: DataFrame): DataFrame =
-    highRisk.select(
-      concat(lit("alert_"), col("transaction_id")).as("alert_id"),
-      col("transaction_id"), col("user_id"), col("fraud_score"),
-      coalesce(col("fraud_type"), lit("rule_based")).as("fraud_type"),
-      when(col("fraud_score") >= 0.9, "high").otherwise("medium")
-        .as("alert_level"),
-      col("timestamp"))
-
   /** Full pipeline: parse → enrich → model-score → blend+decide. Works
-    * on batch or streaming input identically — the MLlib transform is
-    * pure column algebra, so it runs inside the same micro-batch plan.
-    * Placeholder/parse-error rows carry null amount/timestamp; they are
-    * zero-filled for the assembler and their score is overridden by the
-    * parse_error branch anyway.
+    * on batch or streaming input identically — the model is column
+    * algebra, so the whole chain fuses into one codegen stage of the
+    * micro-batch plan. Placeholder/parse-error rows carry null
+    * amount/timestamp; they are zero-filled for the model and their
+    * score is overridden by the parse_error branch anyway.
     */
   def pipeline(raw: DataFrame, users: DataFrame,
                merchants: DataFrame): DataFrame = {
@@ -177,21 +145,11 @@ object TransactionPipeline {
     scoreAndDecide(modeled)
   }
 
-  /** S5-style Kafka sink for any stage (exactly-once via checkpoint +
-    * idempotent producer, FraudDetectionJob.java:162-213).
-    */
-  def toKafkaSink(df: DataFrame, bootstrapServers: String, topic: String,
-                  checkpoint: String) =
-    df.select(to_json(struct(df.columns.toIndexedSeq.map(col): _*)).as("value"))
-      .writeStream.format("kafka")
-      .option("kafka.bootstrap.servers", bootstrapServers)
-      .option("topic", topic)
-      .option("checkpointLocation", checkpoint)
-
-  /** S1, executable in-sandbox: the same value→json projection as
-    * `fromKafka`, over the graft log DSv2 source (graft.sources.log) —
-    * partitioned offsets, startingOffsets, admission control, and
-    * checkpoint resume all behave as the Kafka source's contract.
+  /** S1: the reference's Kafka consumer (FraudDetectionJob.java:141-157)
+    * as the graft log DSv2 source (graft.sources.log), projected to the
+    * record value as JSON — partitioned offsets, startingOffsets,
+    * admission control, and checkpoint resume all behave as the Kafka
+    * source's contract.
     */
   def fromLog(spark: SparkSession, dir: String,
               startingOffsets: String = "earliest",
@@ -203,9 +161,10 @@ object TransactionPipeline {
     r.load().select(col("value").cast("string").as("json"))
   }
 
-  /** S5, executable in-sandbox: exactly-once producer to the graft
-    * log — rows become (key = keyCol, value = JSON of all columns)
-    * records; epoch-idempotent commits make replay safe end-to-end.
+  /** S5: the reference's exactly-once Kafka producer
+    * (FraudDetectionJob.java:162-213) as a graft log sink — rows become
+    * (key = keyCol, value = JSON of all columns) records;
+    * epoch-idempotent commits make replay safe end-to-end.
     */
   def toLogSink(df: DataFrame, dir: String, checkpoint: String,
                 keyCol: String = "transaction_id") =

@@ -23,15 +23,6 @@ object WindowedStreams {
            sum(col("value")).as("total_value"),
            approx_count_distinct(col("event_type")).as("n_types_approx"))
 
-  /** A2: tumbling 1-h per-merchant stats with streaming-safe stddev. */
-  def hourlyStats(events: DataFrame, key: String = "user_id",
-                  ts: String = "ts",
-                  watermark: String = "10 seconds"): DataFrame =
-    events.withWatermark(ts, watermark)
-      .groupBy(window(col(ts), "1 hour"), col(key))
-      .agg(count(lit(1)).as("n"), avg(col("value")).as("avg_value"),
-           stddev_pop(col("value")).as("std_value"))
-
   /** A3: 30-min-gap session windows per key. */
   def sessions(events: DataFrame, key: String = "user_id",
                ts: String = "ts",

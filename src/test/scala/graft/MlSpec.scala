@@ -1,17 +1,33 @@
 package graft
 
 import org.apache.spark.ml.classification.LogisticRegressionModel
+import org.apache.spark.ml.functions.vector_to_array
+import org.apache.spark.ml.graftshim.ModelBridge
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ml.FraudModel
 
-/** The MLlib inference leg: train→serve determinism, the published
-  * serving model, named dispatch (model_manager.py:279-307), and the
+/** The model leg: train→serve determinism, the published serving
+  * model, named dispatch (model_manager.py:279-307), and the
   * bit-exactness contract the q_model_score oracle relies on.
   */
 class MlSpec extends AnyFunSuite {
   import TestSpark._
+
+  /** Reference scorer: the published weights as a real MLlib
+    * `LogisticRegressionModel`, applied through the Transformer API
+    * (assemble → transform → unpack the raw/probability vectors).
+    */
+  private def mllibScore(df: DataFrame, amount: Column, ts: Column): DataFrame = {
+    val lr = ModelBridge.logistic("graft_lr", FraudModel.PublishedWeights,
+      FraudModel.PublishedIntercept).setFeaturesCol("features")
+    lr.transform(FraudModel.assembler.transform(
+        FraudModel.withFeatures(df, amount, ts)))
+      .withColumn("margin", element_at(vector_to_array(col("rawPrediction")), 2))
+      .withColumn("p_fraud", element_at(vector_to_array(col("probability")), 2))
+  }
 
   test("training on the seeded simulator reproduces the published weights") {
     // Bitwise up to gradient-accumulation order: treeAggregate sums
@@ -42,7 +58,7 @@ class MlSpec extends AnyFunSuite {
     // q_model_score's oracle assumes BLAS ddot == left-associated sum
     // in index order; pin that here on real table data.
     val ev = sources.Tables(spark, sf, "events")
-    val scored = FraudModel.score(ev, col("value"), col("ts"))
+    val scored = mllibScore(ev, col("value"), col("ts"))
       .select(col("event_id"), col("margin"))
     val manual = FraudModel.withFeatures(ev, col("value"), col("ts"))
       .select(col("event_id"),
@@ -59,9 +75,9 @@ class MlSpec extends AnyFunSuite {
     // uses StrictMath.exp — a few-ulp exp divergence amplifies to
     // ~1e-14 relative in the probability; the margin is exact.
     val ev = sources.Tables(spark, sf, "events")
-    val a = FraudModel.score(ev, col("value"), col("ts"))
+    val a = mllibScore(ev, col("value"), col("ts"))
       .select(col("event_id"), col("margin"), col("p_fraud"))
-    val b = FraudModel.scoreColumnar(ev, col("value"), col("ts"))
+    val b = FraudModel.score(ev, col("value"), col("ts"))
       .select(col("event_id"), col("margin").as("m2"),
         col("p_fraud").as("p2"))
     val j = a.join(b, "event_id").cache()

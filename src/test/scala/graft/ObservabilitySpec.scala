@@ -43,6 +43,8 @@ class ObservabilitySpec extends AnyFunSuite {
         .writeStream.format("memory").queryName("obsq")
         .outputMode("append").start()
       q.processAllAvailable(); q.stop()
+      // progress events reach the listener on the bus's own thread
+      org.apache.spark.sql.graftshim.BusDrain(spark.sparkContext)
       assert(listener.stats.exists(_.numInputRows == 2))
     } finally spark.streams.removeListener(listener)
   }

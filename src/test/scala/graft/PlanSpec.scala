@@ -811,4 +811,66 @@ class PlanSpec extends AnyFunSuite {
     assert(sharded.forall(_.partitionSpec.nonEmpty),
       "sharded packSequences still has an unpartitioned WindowExec")
   }
+
+  test("the shipping pipeline scores in codegen: no ScalaUDF, margin/p_fraud inside a WholeStageCodegenExec") {
+    import org.apache.spark.sql.catalyst.expressions.{Alias, ScalaUDF}
+    import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+    import org.apache.spark.sql.execution.{InputAdapter, WholeStageCodegenExec}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import spark.implicits._
+    // read from files: over a local relation the optimizer would fold
+    // the whole projection away and leave no codegen stage to inspect
+    val dir = java.nio.file.Files.createTempDirectory("graft_pipeline_plan").toFile
+    (1 to 40).map { i =>
+      s"""{"transaction_id":"t$i","user_id":"u${i % 3}","merchant_id":"m${i % 2}",""" +
+        s""""amount":${i * 37.5},"timestamp":"2024-01-0${1 + i % 7}T0${i % 10}:00:00Z",""" +
+        """"geolocation":{"lat":40.0,"lon":-74.0},"merchant_location":{"lat":40.1,"lon":-74.1}}"""
+    }.toDF("value").coalesce(1).write.text(s"${dir.getAbsolutePath}/in")
+    val users = Seq(("u1", 0.9, "verified", 100.0))
+      .toDF("user_id", "risk_score", "kyc_status", "avg_transaction_amount")
+    val merchants = Seq(("m1", 0.2, "high", false))
+      .toDF("merchant_id", "fraud_rate", "risk_level", "is_blacklisted")
+    val df = graft.streaming.TransactionPipeline.pipeline(
+      spark.read.text(s"${dir.getAbsolutePath}/in").withColumnRenamed("value", "json"),
+      users, merchants)
+    assert(df.filter(col("decision").isNotNull && col("p_fraud") > 0.0).count() == 40L)
+
+    def all(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => a +: all(a.executedPlan)
+      case other => other +: (other.children ++ other.subqueries).flatMap(all)
+    }
+    val plan = df.queryExecution.executedPlan
+    val nodes = all(plan)
+    val udfs = nodes.flatMap(_.expressions.flatMap(_.collect { case u: ScalaUDF => u }))
+    assert(udfs.isEmpty, s"ScalaUDF in the pipeline plan: ${udfs.map(_.udfName)}\n$plan")
+    // the nodes a codegen stage fuses: its subtree down to the InputAdapters
+    def fused(p: SparkPlan): Seq[SparkPlan] = p match {
+      case _: InputAdapter => Nil
+      case other => other +: other.children.flatMap(fused)
+    }
+    def defines(p: SparkPlan, name: String) =
+      p.expressions.exists(_.exists { case a: Alias => a.name == name; case _ => false })
+    val stages = nodes.collect { case w: WholeStageCodegenExec => w }
+    Seq("margin", "p_fraud").foreach { name =>
+      val in = stages.filter(w => fused(w.child).exists(defines(_, name)))
+      assert(in.nonEmpty, s"$name is not computed inside a whole-stage codegen stage:\n$plan")
+      in.foreach(w => CodeGenerator.compile(w.doCodeGen()._2))
+    }
+  }
+
+  test("unpartitioned ranking windows run over bounded frames only (RRF, vocab)") {
+    // Spark warns "No Partition Defined for Window operation" for each
+    // of these; the warning is not actionable because every such
+    // window's input is a post-limit frame. Pin the bound.
+    def globalWindowInputs(df: org.apache.spark.sql.DataFrame): Seq[Option[Long]] =
+      df.queryExecution.optimizedPlan.collect {
+        case w: org.apache.spark.sql.catalyst.plans.logical.Window
+            if w.partitionSpec.isEmpty => w.child.maxRows
+      }
+    val rrf = globalWindowInputs(Retrieval.hybridRrf(t("documents"),
+      t("embeddings"), Seq("spark", "join"), queryVecId = 0L, k = 10, kLex = 20))
+    assert(rrf.sorted == Seq(Some(10L), Some(20L)), s"RRF window inputs: $rrf")
+    val vocab = globalWindowInputs(TextAnalysis.vocabEncode(t("documents"), vocabSize = 64))
+    assert(vocab == Seq(Some(64L)), s"vocab window inputs: $vocab")
+  }
 }

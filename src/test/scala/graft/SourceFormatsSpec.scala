@@ -359,10 +359,11 @@ class SourceFormatsSpec extends AnyFunSuite {
   test("Kafka connector absence is verified, not assumed") {
     // The reference consumes/produces Kafka (FraudDetectionJob.java:
     // 141-157,162-213). This sandbox ships neither spark-sql-kafka nor
-    // kafka-clients nor a broker — pin that fact so the partial status
-    // of S1/S5 is evidence-backed, and the suite flags it if the
-    // environment ever gains the jars (at which point the plumbing in
-    // TransactionPipeline.fromKafka/toKafkaSink becomes testable).
+    // kafka-clients nor a broker — pin that fact so serving S1/S5 from
+    // the graftlog source and sink (TransactionPipeline.fromLog/
+    // toLogSink) is evidence-backed, and the suite flags it if the
+    // environment ever gains the jars (at which point a Kafka source
+    // and sink become testable).
     assertThrows[ClassNotFoundException] {
       Class.forName("org.apache.kafka.clients.producer.KafkaProducer")
     }

@@ -64,6 +64,7 @@ when the box is idle).
 import json
 import math
 import re
+import shutil
 import subprocess
 import sys
 import time
@@ -473,6 +474,20 @@ def parse_args(argv):
     return pos, vals, flags
 
 
+def clear_dumps(outdir):
+    """Delete what an earlier Verify left in `outdir`: oracle_sql.json
+    and every per-query dump directory (one holding a Spark `_SUCCESS`
+    marker or parquet part files). Other files are left alone."""
+    out = Path(outdir)
+    if not out.is_dir():
+        return
+    (out / "oracle_sql.json").unlink(missing_ok=True)
+    for d in out.iterdir():
+        if d.is_dir() and ((d / "_SUCCESS").exists()
+                           or any(d.glob("*.parquet"))):
+            shutil.rmtree(d)
+
+
 def main():
     args, vals, flags = parse_args(sys.argv[1:])
     sfdir = args[0] if len(args) > 0 else "/root/testdata/sf0.001"
@@ -516,10 +531,11 @@ def main():
         # path exited the whole sweep on a non-zero sbt rc, so one
         # Spark-side death (or an OOM-killed JVM) zeroed the round's
         # correctness artifact. Now: bound the run, and on failure fall
-        # through to the compare if a usable oracle_sql.json + dumps
-        # exist (from a partial run or an earlier one) — queries whose
-        # dump is missing record "no spark output" err rows instead of
-        # the artifact not existing at all.
+        # through to the compare if this run wrote oracle_sql.json —
+        # queries whose dump is missing record "no spark output" err
+        # rows instead of the artifact not existing at all. Output of
+        # an earlier build is cleared first, so it can never grade.
+        clear_dumps(outdir)
         try:
             r = subprocess.run(
                 ["sbt", "-batch", f'runMain graft.Verify {sfdir} {outdir}'],

@@ -8,9 +8,13 @@ LOCAL/JUDGE greens). Plain-assert script, no test framework:
     python3 tools/test_compare.py
 """
 import json
+import subprocess
 import sys
 import tempfile
 from pathlib import Path
+
+import pyarrow as pa
+import pyarrow.parquet as pq
 
 sys.path.insert(0, str(Path(__file__).resolve().parent))
 import compare  # noqa: E402
@@ -26,6 +30,88 @@ def red(*names):
     return {n: {"rows_match": True, "schema_match": True,
                 "hash_match": False, "spark_rows": 1, "oracle_rows": 1,
                 "err": None} for n in names}
+
+
+def sweep(argv, verify):
+    """Run compare.main() with `verify(outdir)` standing in for the
+    sbt Verify leg; returns (exit code, {query: record})."""
+    real_run = compare.subprocess.run
+
+    def fake_run(cmd, *a, **kw):
+        if cmd[0] != "sbt":
+            return real_run(cmd, *a, **kw)
+        rc = verify(argv[1])
+        return subprocess.CompletedProcess(cmd, rc, "", "verify died")
+
+    old_argv = sys.argv
+    compare.subprocess.run = fake_run
+    sys.argv = ["compare.py"] + argv
+    try:
+        compare.main()
+        code = 0
+    except SystemExit as e:
+        code = e.code
+    finally:
+        compare.subprocess.run = real_run
+        sys.argv = old_argv
+    json_path = Path(argv[argv.index("--json") + 1])
+    return code, json.loads(json_path.read_text())
+
+
+def stale_dumps_never_grade():
+    """A dump left by an earlier build must not grade as PASS when this
+    run's Verify fails."""
+    oracle = {"q_stale": "SELECT 1 AS x", "q_fresh": "SELECT 2 AS x"}
+
+    def dump(outdir, name, x):
+        d = Path(outdir) / name
+        d.mkdir(parents=True, exist_ok=True)
+        pq.write_table(pa.table({"x": pa.array([x], pa.int32())}),
+                       d / "part-00000.parquet")
+        (d / "_SUCCESS").write_text("")
+
+    def write_oracle(outdir):
+        (Path(outdir) / "oracle_sql.json").write_text(json.dumps(oracle))
+
+    with tempfile.TemporaryDirectory() as td:
+        sf, out = Path(td) / "sf", Path(td) / "out"
+        sf.mkdir()
+        out.mkdir()
+        res = str(Path(td) / "r.json")
+        argv = [str(sf), str(out), "--inproc", "--json", res]
+        # an earlier, complete build's output
+        write_oracle(out)
+        dump(out, "q_stale", 1)
+        dump(out, "q_fresh", 2)
+        keep = out / "notes.txt"
+        keep.write_text("not a dump")
+
+        # Verify writes q_fresh and oracle_sql.json, then dies
+        def partial(outdir):
+            dump(outdir, "q_fresh", 2)
+            write_oracle(outdir)
+            return 1
+        code, recs = sweep(argv, partial)
+        assert code == 1, code
+        assert recs["q_fresh"]["hash_match"], recs
+        assert recs["q_stale"]["err"] == "no spark output", recs
+        assert keep.exists()
+
+        # Verify dies before writing oracle_sql.json: nothing grades
+        write_oracle(out)
+        dump(out, "q_stale", 1)
+        Path(res).unlink()
+        code, recs = sweep(argv, lambda outdir: 1)
+        assert code == 1 and recs == {}, (code, recs)
+
+        # --skip-run grades what is there
+        write_oracle(out)
+        dump(out, "q_stale", 1)
+        dump(out, "q_fresh", 2)
+        Path(res).unlink()
+        code, recs = sweep(argv + ["--skip-run"], lambda outdir: 1 / 0)
+        assert code == 0, (code, recs)
+        assert all(r["hash_match"] for r in recs.values()), recs
 
 
 def main():
@@ -135,6 +221,8 @@ def main():
         raise AssertionError("a trailing --json without a value must fail")
     except SystemExit:
         pass
+
+    stale_dumps_never_grade()
 
     print("test_compare: all assertions passed")
 
