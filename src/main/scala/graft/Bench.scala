@@ -4,6 +4,7 @@ import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.fasterxml.jackson.databind.node.ObjectNode
+import org.apache.spark.sql.graftshim.BusDrain
 
 /** Benchmark harness: times every SparkEntry query on the sf dir named
   * by SPARK_GRAFT_SF_DIR and emits ONE JSON line.
@@ -346,9 +347,9 @@ object Bench {
     "cpus/default_parallelism record the session parallelism " +
     "($SPARK_GRAFT_CPUS is honored - master local[cpus], " +
     "shuffle.partitions=cpus) and jobs/tasks carry per-query driver-job " +
-    "and task counts from the min-time run (passive SparkListener; " +
-    "onJobStart/onStageSubmitted fire before the work they announce, so " +
-    "counts are complete when the synchronous force() returns) - at bench " +
+    "and task counts from the min-time run (passive SparkListener, read " +
+    "after the listener bus is drained; the drain runs after the timed " +
+    "interval ends) - at bench " +
     "SF most queries are near the per-job scheduling floor, so a flat " +
     "wall ratio between cpu counts is attributable to driver-job latency, " +
     "not to ignored cores"
@@ -373,9 +374,9 @@ object Bench {
     // $SPARK_GRAFT_CPUS. The artifact must let a reader attribute that
     // flatness to its real cause, so a passive listener counts driver
     // jobs and tasks per query (from the min-time run) and the session
-    // records its parallelism. onJobStart/onStageSubmitted both fire
-    // BEFORE the work they announce, so by the time the synchronous
-    // force() returns the counts are complete — no sleep, no wall cost.
+    // records its parallelism. Listener events reach the listener on
+    // the bus's own thread, so each run drains the bus (BusDrain) after
+    // its clock stops and before it reads the counters.
     val jobsCtr = new java.util.concurrent.atomic.AtomicInteger(0)
     val tasksCtr = new java.util.concurrent.atomic.AtomicInteger(0)
     spark.sparkContext.addSparkListener(
@@ -438,8 +439,9 @@ object Bench {
           val t0 = System.nanoTime()
           try {
             force(fn(spark, sfDir))
-            Right(((System.nanoTime() - t0) / 1e9,
-              jobsCtr.get() - j0, tasksCtr.get() - k0))
+            val secs = (System.nanoTime() - t0) / 1e9
+            BusDrain(spark.sparkContext)
+            Right((secs, jobsCtr.get() - j0, tasksCtr.get() - k0))
           } catch {
             case e: Throwable =>
               Left(s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(200)}")
@@ -512,6 +514,7 @@ object Bench {
       try {
         force(fn(spark, sfDir))
         val t = (System.nanoTime() - t0) / 1e9
+        BusDrain(spark.sparkContext)
         allRuns(name) += t
         if (t < timings(name)) {
           timings(name) = t

@@ -7,6 +7,9 @@ Prints the host factor (cpu_1t ratio when both artifacts carry one),
 raw and normalized totals over jointly-known queries, and the N
 (default 15) queries with the worst normalized ratio — the ones worth
 investigating as code regressions rather than environment drift.
+When both artifacts carry per-query driver-job counts (`jobs`), it
+also prints the two suite job totals and every query whose job count
+changed (ref -> cur).
 """
 import json
 import sys
@@ -39,7 +42,22 @@ def main() -> int:
     print(f"\nworst {top_n} normalized ratios (cur s / ref s):")
     for ratio, q in rows[:top_n]:
         print(f"  {q:28s} {ratio:6.2f}   {cq[q]:7.3f} / {rq[q]:7.3f}")
+    if "jobs" in ref and "jobs" in cur:
+        print_jobs(ref["jobs"], cur["jobs"])
     return 0
+
+
+def print_jobs(rj, cj):
+    """Suite job totals (each over its own artifact) and every jointly
+    known query whose driver-job count changed."""
+    rt, ct = sum(rj.values()), sum(cj.values())
+    print(f"\ndriver jobs   : ref {rt} ({len(rj)} queries) -> "
+          f"cur {ct} ({len(cj)} queries)   {ct / rt:6.3f}")
+    moved = [(q, rj[q], cj[q]) for q in sorted(set(rj) & set(cj))
+             if rj[q] != cj[q]]
+    print(f"queries whose job count changed: {len(moved)}")
+    for q, r, c in moved:
+        print(f"  {q:28s} {r:4d} -> {c:4d}")
 
 
 if __name__ == "__main__":

@@ -21,7 +21,12 @@ exact CORRECTNESS schema ({name: {rows_match, schema_match, hash_match,
 spark_rows, oracle_rows, err}}), REWRITTEN AFTER EVERY QUERY so a crash
 mid-suite leaves a structured partial artifact instead of nothing (the
 r11/r12 driver sweeps both died without writing a single row — this is
-the local insurance against that failure mode).
+the local insurance against that failure mode). The file also holds a
+reserved "__meta__" record naming what was graded: git HEAD (and
+whether tracked files differed from it), the sf dir, the Verify exit
+code (null under --skip-run), sweep start and end times (UTC, ISO
+8601; end stays null while the sweep runs or if it dies) and the
+number of graded queries.
 
 == Sweep order: verification-debt first (r13 verdict #1) ==
 The sweep used to iterate sorted(oracle) — alphabetically — so when the
@@ -68,6 +73,7 @@ import shutil
 import subprocess
 import sys
 import time
+from datetime import datetime, timezone
 from pathlib import Path
 
 import duckdb
@@ -488,6 +494,28 @@ def clear_dumps(outdir):
             shutil.rmtree(d)
 
 
+META_KEY = "__meta__"
+
+
+def utc_now():
+    return datetime.now(timezone.utc).isoformat(timespec="seconds")
+
+
+def git_state(repo=None):
+    """(HEAD sha, tracked files differ from HEAD) of the checkout, or
+    (None, None) outside a git work tree."""
+    repo = REPO if repo is None else Path(repo)
+    try:
+        head = subprocess.run(["git", "rev-parse", "HEAD"], cwd=str(repo),
+                              capture_output=True, text=True, check=True)
+        dirty = subprocess.run(
+            ["git", "status", "--porcelain", "--untracked-files=no"],
+            cwd=str(repo), capture_output=True, text=True, check=True)
+    except (OSError, subprocess.CalledProcessError):
+        return None, None
+    return head.stdout.strip(), bool(dirty.stdout.strip())
+
+
 def main():
     args, vals, flags = parse_args(sys.argv[1:])
     sfdir = args[0] if len(args) > 0 else "/root/testdata/sf0.001"
@@ -503,28 +531,36 @@ def main():
         return
 
     # Incrementally-flushed driver-schema record: written after EVERY
-    # query so any crash leaves partial structured evidence.
-    records = {}
+    # query so any crash leaves partial structured evidence. The
+    # __meta__ record names the checkout and the run it grades.
+    head, dirty = git_state()
+    meta = {"git_head": head, "git_dirty": dirty, "sf": sfdir,
+            "verify_rc": None, "sweep_start": utc_now(), "sweep_end": None,
+            "queries": 0}
+    records = {META_KEY: meta}
+
+    def flush():
+        if json_path is None:
+            return
+        meta["queries"] = len(records) - 1
+        tmp = json_path.with_suffix(".tmp")
+        tmp.write_text(json.dumps(records, indent=1, sort_keys=True))
+        tmp.replace(json_path)
 
     def record(name, rows_match, schema_match, hash_match,
                spark_rows, oracle_rows, err):
-        if json_path is None:
-            return
         records[name] = {
             "rows_match": rows_match, "schema_match": schema_match,
             "hash_match": hash_match, "spark_rows": spark_rows,
             "oracle_rows": oracle_rows, "err": err,
         }
-        tmp = json_path.with_suffix(".tmp")
-        tmp.write_text(json.dumps(records, indent=1, sort_keys=True))
-        tmp.replace(json_path)
+        flush()
 
     # The artifact must exist from the first moment (r16: the driver's
     # round artifact came back a literal {} — a sweep that dies before
-    # its first record must still leave a parseable file, and every
-    # recorded row after that strictly improves on it).
-    if json_path is not None and not json_path.exists():
-        json_path.write_text("{}")
+    # its first record must still leave a parseable file naming the
+    # run, and every recorded row after that strictly improves on it).
+    flush()
 
     if "--skip-run" not in flags:
         # Bounded + survivable Verify leg (r16 verdict #1): the old
@@ -548,9 +584,13 @@ def main():
             tail = f"graft.Verify timed out after {VERIFY_TIMEOUT_S}s"
             verify_rc = -1
             out_all = ""
+        meta["verify_rc"] = verify_rc
+        flush()
         if verify_rc != 0:
             print(tail)
             if not Path(f"{outdir}/oracle_sql.json").exists():
+                meta["sweep_end"] = utc_now()
+                flush()
                 sys.exit(1)
             print("WARNING: graft.Verify failed; comparing against the "
                   "dumps that exist (missing dumps become err rows)",
@@ -647,6 +687,8 @@ def main():
                     pass
                 state["con"] = fresh_con(sfdir)
                 counters["since_reset"] = 0
+    meta["sweep_end"] = utc_now()
+    flush()
     print(f"\n{counters['pass']} pass / {counters['fail']} fail")
     sys.exit(1 if counters["fail"] else 0)
 

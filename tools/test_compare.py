@@ -8,9 +8,11 @@ LOCAL/JUDGE greens). Plain-assert script, no test framework:
     python3 tools/test_compare.py
 """
 import json
+import re
 import subprocess
 import sys
 import tempfile
+from datetime import datetime
 from pathlib import Path
 
 import pyarrow as pa
@@ -102,7 +104,9 @@ def stale_dumps_never_grade():
         dump(out, "q_stale", 1)
         Path(res).unlink()
         code, recs = sweep(argv, lambda outdir: 1)
-        assert code == 1 and recs == {}, (code, recs)
+        assert code == 1 and set(recs) == {compare.META_KEY}, (code, recs)
+        meta = recs[compare.META_KEY]
+        assert meta["verify_rc"] == 1 and meta["queries"] == 0, meta
 
         # --skip-run grades what is there
         write_oracle(out)
@@ -111,7 +115,55 @@ def stale_dumps_never_grade():
         Path(res).unlink()
         code, recs = sweep(argv + ["--skip-run"], lambda outdir: 1 / 0)
         assert code == 0, (code, recs)
+        meta = recs.pop(compare.META_KEY)
+        assert meta["verify_rc"] is None and meta["queries"] == 2, meta
+        assert set(recs) == {"q_stale", "q_fresh"}, recs
         assert all(r["hash_match"] for r in recs.values()), recs
+
+
+def meta_names_the_sweep():
+    """The artifact's __meta__ record names the checkout, the sf dir,
+    the Verify exit code, the sweep's start and end and the number of
+    graded queries — from the first flush on."""
+    oracle = {"q_a": "SELECT 1 AS x", "q_b": "SELECT 2 AS x"}
+    with tempfile.TemporaryDirectory() as td:
+        sf, out = Path(td) / "sf", Path(td) / "out"
+        sf.mkdir()
+        out.mkdir()
+        res = Path(td) / "r.json"
+        seen = {}
+
+        def verify(outdir):
+            # the artifact already names the run while Verify is running
+            seen.update(json.loads(res.read_text()))
+            for name, x in (("q_a", 1), ("q_b", 3)):
+                d = Path(outdir) / name
+                d.mkdir()
+                pq.write_table(pa.table({"x": pa.array([x], pa.int32())}),
+                               d / "part-00000.parquet")
+            (Path(outdir) / "oracle_sql.json").write_text(json.dumps(oracle))
+            return 0
+
+        code, recs = sweep([str(sf), str(out), "--inproc", "--json",
+                            str(res)], verify)
+        assert code == 1, code   # q_b's dump disagrees with its oracle
+        early = seen[compare.META_KEY]
+        assert early["verify_rc"] is None and early["sweep_end"] is None
+        assert early["queries"] == 0, early
+        assert set(seen) == {compare.META_KEY}, seen
+        meta = recs[compare.META_KEY]
+        head, dirty = compare.git_state()
+        assert meta["git_head"] == head and meta["git_dirty"] == dirty
+        assert head is None or re.fullmatch(r"[0-9a-f]{40}", head), head
+        assert meta["sf"] == str(sf), meta
+        assert meta["verify_rc"] == 0 and meta["queries"] == 2, meta
+        start = datetime.fromisoformat(meta["sweep_start"])
+        end = datetime.fromisoformat(meta["sweep_end"])
+        assert start.tzinfo is not None and start <= end, meta
+        assert recs["q_a"]["hash_match"] and not recs["q_b"]["hash_match"]
+        # the debt ordering skips the record: it holds no match flags
+        (Path(td) / "CORRECTNESS_LOCAL_r99.json").write_text(res.read_text())
+        assert compare.latest_green_round(td) == {"q_a": 98.5}
 
 
 def main():
@@ -223,6 +275,7 @@ def main():
         pass
 
     stale_dumps_never_grade()
+    meta_names_the_sweep()
 
     print("test_compare: all assertions passed")
 
