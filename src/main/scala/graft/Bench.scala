@@ -1,13 +1,24 @@
 package graft
+import java.util.concurrent.ConcurrentLinkedQueue
+import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
+
 import scala.collection.mutable.ArrayBuffer
 import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.fasterxml.jackson.databind.node.ObjectNode
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+  SparkListenerStageCompleted, SparkListenerStageSubmitted,
+  SparkListenerTaskEnd}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.graftshim.BusDrain
 
 /** Benchmark harness: times every SparkEntry query on the sf dir named
   * by SPARK_GRAFT_SF_DIR and emits ONE JSON line.
+  *
+  * SPARK_GRAFT_BENCH_ONLY=a,b restricts the run to the named queries;
+  * it may also name [[OptProbe]] sub-plan probes, which are timed and
+  * profiled by the same rules (the full suite never runs them).
   *
   * The JSON is (a) written to the file named by SPARK_GRAFT_BENCH_OUT
   * (default `BENCH.json` in the working directory) and (b) printed as
@@ -65,8 +76,69 @@ object Bench {
     * writing the result anywhere would pay — and that is the number
     * the bench claims to measure.
     */
-  private[graft] def force(df: org.apache.spark.sql.DataFrame): Long =
+  private[graft] def force(df: DataFrame): Long =
     df.queryExecution.toRdd.count()
+
+  /** A completed stage: seconds, tasks, first line of its call site. */
+  private[graft] final case class StageRun(sec: Double, tasks: Int,
+                                           site: String)
+
+  /** One timed run: wall seconds plus what the listener saw meanwhile —
+    * driver jobs, submitted tasks, completed stages with the three
+    * longest, and executor run/CPU time summed over finished tasks.
+    */
+  private[graft] final case class RunProfile(secs: Double, jobs: Int,
+      tasks: Int, stages: Int, top: Seq[StageRun], execRunMs: Long,
+      execCpuNs: Long)
+
+  /** Bench's one passive listener; [[measure]] resets it per run. */
+  private[graft] final class Profiler extends SparkListener {
+    private val jobs = new AtomicInteger
+    private val tasks = new AtomicInteger
+    private val runMs = new AtomicLong
+    private val cpuNs = new AtomicLong
+    private val stages = new ConcurrentLinkedQueue[StageRun]
+
+    override def onJobStart(e: SparkListenerJobStart): Unit =
+      jobs.incrementAndGet()
+    override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+      tasks.addAndGet(e.stageInfo.numTasks)
+    override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
+      val i = e.stageInfo
+      val sec = (for (a <- i.completionTime; b <- i.submissionTime)
+        yield (a - b) / 1000.0).getOrElse(-1.0)
+      stages.add(StageRun(sec, i.numTasks, i.name.takeWhile(_ != '\n')))
+    }
+    override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+      if (e.taskMetrics != null) {
+        runMs.addAndGet(e.taskMetrics.executorRunTime)
+        cpuNs.addAndGet(e.taskMetrics.executorCpuTime)
+      }
+
+    private[Bench] def reset(): Unit = {
+      jobs.set(0); tasks.set(0); runMs.set(0); cpuNs.set(0); stages.clear()
+    }
+
+    private[Bench] def profile(secs: Double): RunProfile = {
+      val ran = stages.asScala.toSeq
+      RunProfile(secs, jobs.get, tasks.get, ran.size,
+        ran.sortBy(-_.sec).take(3), runMs.get, cpuNs.get)
+    }
+  }
+
+  /** Time one forced run of `fn` (building the plan is inside the
+    * clock), then drain the listener bus and read `profiler`: counts
+    * are complete, and the drain stays outside the timed interval.
+    */
+  private[graft] def measure(spark: SparkSession, profiler: Profiler,
+      fn: (SparkSession, String) => DataFrame, sfDir: String): RunProfile = {
+    profiler.reset()
+    val t0 = System.nanoTime()
+    force(fn(spark, sfDir))
+    val secs = (System.nanoTime() - t0) / 1e9
+    BusDrain(spark.sparkContext)
+    profiler.profile(secs)
+  }
 
   /** 1-minute loadavg from /proc/loadavg; -1 where unreadable. */
   private def load1(): Double =
@@ -234,7 +306,8 @@ object Bench {
   private val mapper = new ObjectMapper()
 
   /** An insertion-ordered JSON object. Values may be Double, Int,
-    * Boolean, String, a JsonNode, or a Seq of Doubles (an array).
+    * Boolean, String, a JsonNode, or a Seq of Doubles or JsonNodes (an
+    * array).
     */
   private[graft] def jsonObject(fields: (String, Any)*): ObjectNode = {
     val o = mapper.createObjectNode()
@@ -245,7 +318,7 @@ object Bench {
       case (k, v: String)   => o.put(k, v)
       case (k, v: JsonNode) => o.set[JsonNode](k, v)
       case (k, vs: Seq[_])  =>
-        val a = o.putArray(k); vs.foreach(v => a.add(v.asInstanceOf[Double]))
+        val a = o.putArray(k); vs.foreach(v => a.add(mapper.valueToTree[JsonNode](v)))
       case (k, v) => throw new IllegalArgumentException(s"$k: $v")
     }
     o
@@ -352,7 +425,11 @@ object Bench {
     "interval ends) - at bench " +
     "SF most queries are near the per-job scheduling floor, so a flat " +
     "wall ratio between cpu counts is attributable to driver-job latency, " +
-    "not to ignored cores"
+    "not to ignored cores; the same listener and min-time run give each " +
+    "query's stage profile: stages (completed stages), top_stages (the " +
+    "three longest: seconds, tasks, first line of the call site) and " +
+    "executor_run_s/executor_cpu_s (executor run and CPU time summed over " +
+    "the run's tasks)"
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -372,24 +449,15 @@ object Bench {
     // ~130 s is ~0.66 s/query, most of it scheduling floor, so the
     // wall-clock 8c/32c ratio reads ≈1 even though the session honors
     // $SPARK_GRAFT_CPUS. The artifact must let a reader attribute that
-    // flatness to its real cause, so a passive listener counts driver
-    // jobs and tasks per query (from the min-time run) and the session
+    // flatness to its real cause, so a passive listener (Profiler)
+    // records each query's min-time run: driver jobs, tasks, stages and
+    // the three longest of them, and executor run/CPU time; the session
     // records its parallelism. Listener events reach the listener on
     // the bus's own thread, so each run drains the bus (BusDrain) after
-    // its clock stops and before it reads the counters.
-    val jobsCtr = new java.util.concurrent.atomic.AtomicInteger(0)
-    val tasksCtr = new java.util.concurrent.atomic.AtomicInteger(0)
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          jobsCtr.incrementAndGet()
-        override def onStageSubmitted(
-            ss: org.apache.spark.scheduler.SparkListenerStageSubmitted): Unit =
-          tasksCtr.addAndGet(ss.stageInfo.numTasks)
-      })
-    val qJobs = scala.collection.mutable.LinkedHashMap[String, Int]()
-    val qTasks = scala.collection.mutable.LinkedHashMap[String, Int]()
+    // its clock stops and before it reads the counters (see measure).
+    val profiler = new Profiler
+    spark.sparkContext.addSparkListener(profiler)
+    val qProf = scala.collection.mutable.LinkedHashMap[String, RunProfile]()
     // == Start-of-run load defense (round-12 verdict item 3) ==
     // Two consecutive driver rounds produced official artifacts from a
     // box at loadavg 5.8–7.6 (co-tenant load): per-query retries can
@@ -424,37 +492,29 @@ object Bench {
     val allRuns = scala.collection.mutable.LinkedHashMap[String, ArrayBuffer[Double]]()
     val loads = Seq.newBuilder[(String, (Double, Double))]
     val suspects = Seq.newBuilder[(String, Double, Double)] // name, value, ref
-    // optional comma-separated filter for local iteration on a subset
+    // optional comma-separated filter for local iteration on a subset;
+    // it may also name OptProbe sub-plan probes
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
       .map(_.split(",").toSet).getOrElse(Set.empty[String])
-    val benchQueries = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.isEmpty || only(n) }
+    val benchQueries =
+      if (only.isEmpty) SparkEntry.queries.toSeq.sortBy(_._1)
+      else (SparkEntry.queries ++ OptProbe.probes).toSeq.sortBy(_._1)
+        .filter { case (n, _) => only(n) }
     benchQueries
       .foreach { case (name, fn) =>
-        // (seconds, driver jobs, tasks) per run; the artifact keeps
-        // the counts of the MIN-time run (steady state — run 1's extra
-        // cache-fill jobs are the warm-up the min already excludes)
-        def once(): Either[String, (Double, Int, Int)] = {
-          val j0 = jobsCtr.get(); val k0 = tasksCtr.get()
-          val t0 = System.nanoTime()
-          try {
-            force(fn(spark, sfDir))
-            val secs = (System.nanoTime() - t0) / 1e9
-            BusDrain(spark.sparkContext)
-            Right((secs, jobsCtr.get() - j0, tasksCtr.get() - k0))
-          } catch {
-            case e: Throwable =>
-              Left(s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(200)}")
-          }
-        }
         val lBefore = load1()
         val ok = ArrayBuffer[Double]()
-        val okMeta = ArrayBuffer[(Int, Int)]()
+        val okProf = ArrayBuffer[RunProfile]()
         val bad = ArrayBuffer[String]()
-        def attempt(): Unit = once() match {
-          case Right((t, j, k)) => ok += t; okMeta += ((j, k))
-          case Left(e)          => bad += e
-        }
+        // one run; the artifact keeps the profile of the MIN-time run
+        // (steady state — run 1's extra cache-fill jobs are the warm-up
+        // the min already excludes)
+        def attempt(): Unit =
+          try { val p = measure(spark, profiler, fn, sfDir); ok += p.secs; okProf += p }
+          catch {
+            case e: Throwable =>
+              bad += s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(200)}"
+          }
         attempt(); attempt()
         // >3x disagreement between the two runs: one of them is
         // contaminated — take a third sample for evidence. The value
@@ -486,8 +546,7 @@ object Bench {
         val lAfter = load1()
         if (ok.nonEmpty) {
           timings(name) = value
-          val (mj, mk) = okMeta(ok.indexOf(value))
-          qJobs(name) = mj; qTasks(name) = mk
+          qProf(name) = okProf(ok.indexOf(value))
           if (bad.nonEmpty) errors += name -> s"flaky (${bad.size} failed attempt(s)): ${bad.head}"
         } else errors += name -> bad.head
         allRuns(name) = ok
@@ -507,20 +566,11 @@ object Bench {
     // — propagate: continuing the suite in a broken JVM would record
     // garbage as truth).
     def remeasure(name: String,
-                  fn: (org.apache.spark.sql.SparkSession,
-                       String) => org.apache.spark.sql.DataFrame): Unit = {
-      val j0 = jobsCtr.get(); val k0 = tasksCtr.get()
-      val t0 = System.nanoTime()
+                  fn: (SparkSession, String) => DataFrame): Unit = {
       try {
-        force(fn(spark, sfDir))
-        val t = (System.nanoTime() - t0) / 1e9
-        BusDrain(spark.sparkContext)
-        allRuns(name) += t
-        if (t < timings(name)) {
-          timings(name) = t
-          qJobs(name) = jobsCtr.get() - j0
-          qTasks(name) = tasksCtr.get() - k0
-        }
+        val p = measure(spark, profiler, fn, sfDir)
+        allRuns(name) += p.secs
+        if (p.secs < timings(name)) { timings(name) = p.secs; qProf(name) = p }
       } catch {
         case scala.util.control.NonFatal(e) =>
           System.err.println(s"[bench] remeasure $name failed, " +
@@ -600,6 +650,8 @@ object Bench {
       jsonObject(list.map { case (k, v, ref) =>
         k -> jsonObject("value" -> r3(v), "ref" -> ref) }: _*)
     val defaultPar = spark.sparkContext.defaultParallelism
+    def perQuery(f: RunProfile => Any): ObjectNode =
+      jsonObject(qProf.toSeq.map { case (k, p) => k -> f(p) }: _*)
     val total = if (results.nonEmpty) results.map(_._2).sum else 0.0
     // total with suspect readings replaced by their committed reference
     // values — what this commit measures once ambient load is excluded
@@ -610,8 +662,12 @@ object Bench {
       "metric" -> "total", "value" -> total, "unit" -> "sec",
       "queries" -> jsonObject(results: _*),
       "cpus" -> cpus, "default_parallelism" -> defaultPar,
-      "jobs" -> jsonObject(qJobs.toSeq: _*),
-      "tasks" -> jsonObject(qTasks.toSeq: _*),
+      "jobs" -> perQuery(_.jobs), "tasks" -> perQuery(_.tasks),
+      "stages" -> perQuery(_.stages),
+      "top_stages" -> perQuery(_.top.map(st => jsonObject("sec" -> st.sec,
+        "tasks" -> st.tasks, "site" -> st.site))),
+      "executor_run_s" -> perQuery(_.execRunMs / 1000.0),
+      "executor_cpu_s" -> perQuery(p => r3(p.execCpuNs / 1e9)),
       "runs" -> jsonObject(allRuns.toSeq.map { case (k, rs) =>
         k -> rs.toSeq.map(r3) }: _*),
       "load" -> jsonObject(loads.result().map { case (k, (a, b)) =>

@@ -232,6 +232,38 @@ class DocOpsSpec extends AnyFunSuite {
     assert(out(16) == 1.0)
   }
 
+  test("ann recall curve: every rung's assignment is served by the hoisted cache") {
+    import org.apache.spark.sql.catalyst.plans.logical.Project
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    val emb = graft.sources.Tables(spark,
+      sf.stripSuffix("sf0.001") + "sf0.01", "embeddings")
+    val nprobes = Seq(1, 2, 4, 8)
+    val curve = Similarity.annRecallCurve(emb, col("vec_id") < 8, k = 3,
+      nprobes = nprobes)
+    try {
+      // the corpus assignment annRecallCurve hoists and tracks, rebuilt
+      // here: its plan must resolve to a registered cache
+      val all = Similarity.prepared(emb, Similarity.Dim)
+      val hoisted = Similarity.assignBy(all,
+        Similarity.pivotArr(all, Similarity.DefaultNlist), Similarity.Dim)
+      val tracked = hoisted.queryExecution.withCachedData match {
+        case r: InMemoryRelation => r
+        case p => fail(s"the hoisted assignment is not cached:\n$p")
+      }
+      val plan = curve.queryExecution.withCachedData
+      val served = plan.collect {
+        case r: InMemoryRelation if r.cacheBuilder eq tracked.cacheBuilder => r
+      }
+      assert(served.size == nprobes.size,
+        s"${served.size} of ${nprobes.size} rungs read the assignment cache")
+      // no rung computes its own assignment beside the cache
+      val raw = plan.collect {
+        case p: Project if p.output.exists(_.name == "best_cos") => p
+      }
+      assert(raw.isEmpty, s"uncached assignment subtrees:\n${raw.mkString}")
+    } finally graft.operators.OperatorCaches.releaseAll()
+  }
+
   test("IVF-PQ ADC: probing all lists equals an independent full-ADC ranking") {
     val emb = graft.sources.Tables(spark, sf, "embeddings")
     // independent spelling of full ADC: reconstruct each vector from

@@ -8,11 +8,17 @@ raw and normalized totals over jointly-known queries, and the N
 (default 15) queries with the worst normalized ratio — the ones worth
 investigating as code regressions rather than environment drift.
 When both artifacts carry per-query driver-job counts (`jobs`), it
-also prints the two suite job totals and every query whose job count
-changed (ref -> cur).
+also prints the two suite job totals and, with both sides' values,
+every query whose job count changed or whose executor run or CPU time
+(`executor_run_s`, `executor_cpu_s`, where both artifacts carry them)
+moved by more than EXEC_MOVE of the reference and EXEC_FLOOR_S seconds.
 """
 import json
 import sys
+
+EXEC_KEYS = ("executor_run_s", "executor_cpu_s")
+EXEC_MOVE = 0.25     # relative change in an executor time that counts
+EXEC_FLOOR_S = 0.05  # ...when it is also at least this many seconds
 
 
 def main() -> int:
@@ -43,21 +49,42 @@ def main() -> int:
     for ratio, q in rows[:top_n]:
         print(f"  {q:28s} {ratio:6.2f}   {cq[q]:7.3f} / {rq[q]:7.3f}")
     if "jobs" in ref and "jobs" in cur:
-        print_jobs(ref["jobs"], cur["jobs"])
+        print_work(ref, cur)
     return 0
 
 
-def print_jobs(rj, cj):
-    """Suite job totals (each over its own artifact) and every jointly
-    known query whose driver-job count changed."""
+def exec_moved(r, c):
+    return abs(c - r) > max(EXEC_FLOOR_S, EXEC_MOVE * r)
+
+
+def print_work(ref, cur):
+    """Suite job totals (each over its own artifact), then both sides'
+    work counters for every jointly known query whose job count changed
+    or whose executor time moved."""
+    rj, cj = ref["jobs"], cur["jobs"]
     rt, ct = sum(rj.values()), sum(cj.values())
     print(f"\ndriver jobs   : ref {rt} ({len(rj)} queries) -> "
           f"cur {ct} ({len(cj)} queries)   {ct / rt:6.3f}")
-    moved = [(q, rj[q], cj[q]) for q in sorted(set(rj) & set(cj))
-             if rj[q] != cj[q]]
-    print(f"queries whose job count changed: {len(moved)}")
-    for q, r, c in moved:
-        print(f"  {q:28s} {r:4d} -> {c:4d}")
+    keys = [k for k in EXEC_KEYS if k in ref and k in cur]
+    moved = []
+    for q in sorted(set(rj) & set(cj)):
+        ex = [(ref[k].get(q), cur[k].get(q)) for k in keys]
+        if rj[q] != cj[q] or any(
+                r is not None and c is not None and exec_moved(r, c)
+                for r, c in ex):
+            moved.append((q, rj[q], cj[q], ex))
+    what = " or executor time moved" if keys else " changed"
+    print(f"queries whose job count{what}: {len(moved)}")
+    if keys:
+        print(f"  {'query':28s} {'jobs':>11s}   " +
+              "   ".join(f"{k:>17s}" for k in keys))
+    for q, r, c, ex in moved:
+        cells = "   ".join(f"{fmt(a):>7s} -> {fmt(b):>7s}" for a, b in ex)
+        print(f"  {q:28s} {r:4d} -> {c:4d}   {cells}".rstrip())
+
+
+def fmt(v):
+    return "-" if v is None else f"{v:.3f}"
 
 
 if __name__ == "__main__":
