@@ -1201,36 +1201,6 @@ object Multimodal {
   def grayLevel(id: Long, f: Int): Int =
     ((id * 16 + f * 32) % 232 + 12).toInt
 
-  /** Video frame sampling as metadata expansion (real, not stubbed):
-    * one row per sampled frame index at `everyMs` spacing — the
-    * explode happens on metadata only; bytes are never replicated.
-    */
-  def sampleFrames(media: DataFrame, everyMs: Int = 1000): DataFrame =
-    media.filter(col("kind") === "video")
-      .select(col("media_id"),
-        explode(sequence(lit(0),
-          greatest((col("meta.duration_ms") / everyMs).cast("int") - 1,
-            lit(0)))).as("frame_idx"))
-      .withColumn("offset_ms", col("frame_idx") * everyMs)
-
-  /** Resize PLAN: metadata-level target geometry with
-    * aspect-preserving math. Deliberately decode-free — computing
-    * target sizes from stored metadata costs a narrow projection,
-    * not a decode of every image; the actual pixel resample belongs
-    * in a decode kernel ([[decodeImages]]-shaped) at write time.
-    */
-  def resizePlan(media: DataFrame, maxSide: Int = 224): DataFrame =
-    media.filter(col("kind") === "image")
-      .withColumn("scale",
-        least(lit(maxSide) / col("meta.width"),
-              lit(maxSide) / col("meta.height"), lit(1.0)))
-      .withColumn("target_width",
-        floor(col("meta.width") * col("scale")).cast("int"))
-      .withColumn("target_height",
-        floor(col("meta.height") * col("scale")).cast("int"))
-      .select("media_id", "meta.width", "meta.height",
-              "target_width", "target_height")
-
   /** Bridge into the ANN surface: extracted features as an
     * `embedding`-shaped DataFrame for graft.operators.Similarity.
     */

@@ -187,10 +187,6 @@ object Similarity {
                (lit(0L) - p("pid")).as("npid"))))
       .drop("parr")
 
-  private def pivotScored(src: DataFrame, all: DataFrame, nlist: Int,
-                          dim: Int): DataFrame =
-    pivotScoredBy(src, pivotArr(all, nlist), dim)
-
   /** Vectors → (vec_id, v, nrm, list_id, best_cos): each assigned to
     * its max-cosine pivot of the given codebook, all row-local.
     * `best_cos` is the assignment quality — the codebook-drift signal

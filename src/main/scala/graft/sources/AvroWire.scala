@@ -2,8 +2,6 @@ package graft.sources
 
 import java.io.ByteArrayOutputStream
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.avro.Schema
 import org.apache.avro.generic.{GenericData, GenericDatumReader, GenericDatumWriter, GenericRecord}
 import org.apache.avro.io.{DecoderFactory, EncoderFactory}
@@ -162,8 +160,4 @@ object AvroWire {
     }(Encoders.row(schema))
     out
   }
-
-  /** Sanity hook: field names the wire schema carries, for tests. */
-  def wireFieldNames(schemaJson: String): Seq[String] =
-    new Schema.Parser().parse(schemaJson).getFields.asScala.map(_.name).toSeq
 }

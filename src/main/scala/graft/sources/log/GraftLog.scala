@@ -72,9 +72,10 @@ object GraftLog {
     * update mode. Each micro-batch emits only the keys it touched
     * (update semantics), so a downstream `foreachBatch` upserts into
     * a serving store exactly like Kafka Streams materializes a
-    * changelog into RocksDB. State is O(live keys) — the KTable
-    * contract, not a leak; tombstone filtering is left to the reader
-    * (zero-length values surface so deletes propagate).
+    * changelog into RocksDB. State is one row per key ever written
+    * (an aggregation cannot evict a tombstoned key); tombstone
+    * filtering is left to the reader (zero-length values surface so
+    * deletes propagate).
     */
   def latestByKeyStream(spark: SparkSession, dir: String): DataFrame =
     spark.readStream.format("graftlog").option("path", dir)
@@ -87,64 +88,6 @@ object GraftLog {
       .select(col("key"), col("r.value").as("value"),
         col("r.partition").as("partition"), col("r.offset").as("offset"),
         col("r.timestamp").as("timestamp"))
-
-  private[log] final case class LogRec(key: Array[Byte], value: Array[Byte],
-                                       partition: Int, offset: Long,
-                                       timestamp: java.sql.Timestamp)
-  private[log] final case class KeyLatest(partition: Int, offset: Long,
-                                          value: Array[Byte],
-                                          timestamp: java.sql.Timestamp)
-
-  /** [[latestByKeyStream]] with Kafka-Streams tombstone semantics:
-    * a zero-length value DELETES the key — its state row is evicted
-    * (state stays O(LIVE keys), not O(keys ever written)) and the
-    * tombstone itself is emitted once so a downstream upsert sink can
-    * propagate the delete; afterwards the key never appears in an
-    * update again unless re-inserted (a repeated delete of an
-    * already-absent key is dropped — no marker state needed, relying
-    * on per-partition in-order delivery). The plain aggregation form above
-    * cannot evict (SS agg state keeps every group), so this face uses
-    * `flatMapGroupsWithState` in update mode: per key, the batch's
-    * highest-(partition, offset) record challenges the stored latest —
-    * newer wins, a winning tombstone removes the state. State per key
-    * is one record; per batch only touched keys do work, exactly the
-    * changelog→RocksDB materialization Kafka Streams performs.
-    */
-  def latestByKeyStreamEvicting(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
-    spark.readStream.format("graftlog").option("path", dir)
-      .option("startingOffsets", "earliest").load()
-      .filter(col("key").isNotNull)
-      .as[LogRec]
-      .groupByKey(_.key) // Array[Byte] groups by serialized content
-      .flatMapGroupsWithState[KeyLatest, LogRec](
-        OutputMode.Update, GroupStateTimeout.NoTimeout) { (key, rows, state) =>
-        val newest = rows.maxBy(r => (r.partition, r.offset))
-        val beatsStored = state.getOption.forall(s =>
-          newest.partition > s.partition ||
-            (newest.partition == s.partition && newest.offset > s.offset))
-        if (!beatsStored) Iterator.empty
-        else if (newest.value.isEmpty) {
-          // tombstone: evict + propagate ONCE. A delete with no stored
-          // state (duplicate tombstone after eviction, or delete of a
-          // never-inserted key) is a no-op and emits nothing — the
-          // materialized-KTable drop Kafka Streams applies when
-          // oldValue and newValue are both null. Without this, a
-          // repeated delete would beat the empty state vacuously and
-          // re-emit, breaking "never appears again unless re-inserted".
-          if (state.exists) { state.remove(); Iterator.single(newest) }
-          else Iterator.empty
-        } else {
-          state.update(KeyLatest(newest.partition, newest.offset,
-            newest.value, newest.timestamp))
-          Iterator.single(newest)
-        }
-      }
-      .toDF()
-      .select(col("key"), col("value"), col("partition"), col("offset"),
-        col("timestamp"))
-  }
 
   private val wireSchema = StructType(Seq(
     StructField("event_id", LongType),

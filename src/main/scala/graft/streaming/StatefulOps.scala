@@ -37,31 +37,6 @@ object StatefulOps {
     events.withWatermark("ts", watermarkDelay)
       .dropDuplicatesWithinWatermark("key")
 
-  /** Exactly-once file sink via foreachBatch: each micro-batch lands
-    * in a `batch_id=<n>` partition with dynamic-partition OVERWRITE,
-    * so a replayed batch (restart between sink write and offset
-    * commit) overwrites its own partition instead of duplicating —
-    * the idempotent-producer analog for object storage
-    * (FraudDetectionJob.java:162-213's exactly-once intent without a
-    * transactional broker).
-    */
-  def writeBatchIdempotent(batch: org.apache.spark.sql.DataFrame, id: Long,
-                           path: String): Unit =
-    batch.withColumn("batch_id", org.apache.spark.sql.functions.lit(id))
-      .write.mode("overwrite")
-      // per-write option, NOT a session-conf mutation — overwrite
-      // semantics of unrelated writers in the same app stay untouched
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(path)
-
-  def toIdempotentParquet(df: org.apache.spark.sql.DataFrame, path: String,
-                          checkpoint: String) =
-    df.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, id: Long) =>
-        writeBatchIdempotent(batch, id, path)
-      }
-
   // ---- A6: count-triggered high-frequency alerts ----
 
   final case class FreqAlert(key: String, count: Long, windowStart: Timestamp)
@@ -161,17 +136,30 @@ object StatefulOps {
         GroupStateTimeout.NoTimeout)(
         (key: String, it: Iterator[KeyedEvent],
          st: GroupState[SeqScoreState]) => {
-          var recent = st.getOption.map(_.recentScaled).getOrElse(Nil)
-          val out = it.toSeq.sortBy(e => (e.ts.getTime, e.value)).map { e =>
-            recent = (scaleAmount(e.value) :: recent).take(5)
-            val n = recent.size.toLong
-            val avg = (recent.sum.toDouble / 1.0e4) / n
-            SeqScoreOut(key, e.ts, n, avg,
-              math.min(math.max(avg / 1000.0, 0.0), 1.0))
-          }
+          val (out, recent) = scoreSequence(key, it,
+            st.getOption.map(_.recentScaled).getOrElse(Nil))
           st.update(SeqScoreState(recent))
           out.iterator
         })
+  }
+
+  /** One key's micro-batch through the sequence scorer, shared by both
+    * state APIs: in (ts, value) order, fold each scaled amount into the
+    * last ≤5 and score their average. Returns the outputs and the new
+    * state list.
+    */
+  private def scoreSequence(key: String, rows: Iterator[KeyedEvent],
+                            prior: List[Long])
+      : (Seq[SeqScoreOut], List[Long]) = {
+    var recent = prior
+    val out = rows.toSeq.sortBy(e => (e.ts.getTime, e.value)).map { e =>
+      recent = (scaleAmount(e.value) :: recent).take(5)
+      val n = recent.size.toLong
+      val avg = (recent.sum.toDouble / 1.0e4) / n
+      SeqScoreOut(key, e.ts, n, avg,
+        math.min(math.max(avg / 1000.0, 0.0), 1.0))
+    }
+    (out, recent)
   }
 
   /** ×10⁴ scaling with Catalyst `round` semantics — HALF_UP away from
@@ -200,14 +188,8 @@ object StatefulOps {
     override def handleInputRows(key: String, rows: Iterator[KeyedEvent],
         tv: org.apache.spark.sql.streaming.TimerValues)
         : Iterator[SeqScoreOut] = {
-      var kept = if (recent.exists()) recent.get().recentScaled else Nil
-      val out = rows.toSeq.sortBy(e => (e.ts.getTime, e.value)).map { e =>
-        kept = (scaleAmount(e.value) :: kept).take(5)
-        val n = kept.size.toLong
-        val avg = (kept.sum.toDouble / 1.0e4) / n
-        SeqScoreOut(key, e.ts, n, avg,
-          math.min(math.max(avg / 1000.0, 0.0), 1.0))
-      }
+      val (out, kept) = scoreSequence(key, rows,
+        if (recent.exists()) recent.get().recentScaled else Nil)
       recent.update(SeqScoreState(kept))
       out.iterator
     }

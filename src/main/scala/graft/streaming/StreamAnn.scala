@@ -251,10 +251,6 @@ object StreamAnn {
     Similarity.exactRerank(withVec, k, state.dim)
   }
 
-  /** Segment compaction for the code index. */
-  def consolidatePq(state: PqAnnState): PqAnnState =
-    state.copy(codes = state.codes.localCheckpoint(true))
-
   /** The RETRAIN + REINDEX the drift signal decides — the maintenance
     * op [[IngestAudit.meanBestCos]]'s scaladoc defers to "offline":
     * when assignment quality against the frozen books has fallen

@@ -164,24 +164,32 @@ class BenchParseSpec extends AnyFunSuite {
     // burn CPU in THIS process while sampling: own work must not be
     // attributed to foreign load (the whole point of the jiffies diff
     // — raw loadavg cannot make this distinction)
-    val sampler = new Bench.ForeignLoadSampler(periodMs = 300L)
-    val deadline = System.nanoTime() + 1500000000L
-    val burners = (1 to 4).map { _ =>
-      val th = new Thread(() => {
-        var x = 0L
-        while (System.nanoTime() < deadline) { x += 1 }
-        if (x == -1) println(x)  // defeat dead-code elimination
-      })
-      th.start(); th
+    def sample(burnThreads: Int): Vector[Double] = {
+      val sampler = new Bench.ForeignLoadSampler(periodMs = 300L)
+      val deadline = System.nanoTime() + 1500000000L
+      val burners = (1 to burnThreads).map { _ =>
+        val th = new Thread(() => {
+          var x = 0L
+          while (System.nanoTime() < deadline) { x += 1 }
+          if (x == -1) println(x)  // defeat dead-code elimination
+        })
+        th.start(); th
+      }
+      burners.foreach(_.join())
+      Thread.sleep(math.max(0L, (deadline - System.nanoTime()) / 1000000L))
+      val samples = sampler.finish()
+      assert(samples.nonEmpty, "sampler collected nothing in 1.5s at 300ms")
+      samples
     }
-    burners.foreach(_.join())
-    val samples = sampler.finish()
-    assert(samples.nonEmpty, "sampler collected nothing in 1.5s at 300ms")
+    // other tenants' load right now, with the same period and duration:
+    // the burn is judged against it, so a busy host cannot fail the test
+    val baseline = sample(0)
+    val samples = sample(4)
+    val baseMean = baseline.sum / baseline.size
     val mean = samples.sum / samples.size
-    // 4 cores of OWN burn; foreign reading must stay far below it.
-    // Ambient CI noise allowance: < 2.0 (the gate ceiling itself).
-    assert(mean < 2.0,
+    // 4 cores of OWN burn; the foreign reading may rise by < 1 core
+    assert(mean < baseMean + 1.0,
       s"own burn leaked into foreign reading: mean=$mean " +
-        s"samples=${samples.mkString(",")}")
+        s"samples=${samples.mkString(",")} baseline=${baseline.mkString(",")}")
   }
 }

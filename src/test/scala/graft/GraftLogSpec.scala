@@ -547,62 +547,6 @@ class GraftLogSpec extends AnyFunSuite {
       "streaming KTable must equal the batch latestByKey snapshot")
   }
 
-  test("evicting streaming KTable: a tombstone deletes state and the key never re-emits") {
-    import graft.sources.log.GraftLog
-    val root = tmp("glog_ktevict")
-    val dir = s"$root/log"
-    def put(rows: (String, String)*): Unit =
-      rows.toSeq.toDF("key", "value")
-        .write.format("graftlog").option("path", dir)
-        .option("log.partitions", "3").mode("append").save()
-    put("u1" -> "v1", "u2" -> "v2", "u3" -> "v3")
-
-    val perBatch = new java.util.concurrent.ConcurrentLinkedQueue[Map[String, String]]()
-    val q = GraftLog.latestByKeyStreamEvicting(spark, dir)
-      .select(col("key").cast("string").as("k"), col("value").cast("string").as("v"))
-      .writeStream.outputMode("update")
-      .option("checkpointLocation", s"$root/ckpt")
-      .foreachBatch { (df: org.apache.spark.sql.DataFrame, _: Long) =>
-        val m = df.collect().map(r => r.getString(0) -> r.getString(1)).toMap
-        if (m.nonEmpty) perBatch.add(m)
-        (): Unit
-      }
-      .start()
-    def stateRows(): Long = q.recentProgress.reverse
-      .find(_.stateOperators.nonEmpty).get.stateOperators(0).numRowsTotal
-    q.processAllAvailable()
-    import scala.collection.JavaConverters._
-    assert(perBatch.asScala.last == Map("u1" -> "v1", "u2" -> "v2", "u3" -> "v3"))
-    assert(stateRows() == 3L)
-
-    put("u2" -> "") // tombstone: emitted once (delete propagates) ...
-    q.processAllAvailable()
-    assert(perBatch.asScala.last == Map("u2" -> ""))
-    assert(stateRows() == 2L, "tombstoned key must leave the state store")
-
-    put("u4" -> "v4") // ... and u2 is gone from later updates
-    q.processAllAvailable()
-    assert(perBatch.asScala.last == Map("u4" -> "v4"))
-    assert(stateRows() == 3L) // u1, u3, u4 — still no u2
-
-    put("u2" -> "v2-again") // re-insert after delete wins cleanly
-    q.processAllAvailable()
-    assert(perBatch.asScala.last == Map("u2" -> "v2-again"))
-
-    put("u2" -> "") // the real delete: emitted once
-    q.processAllAvailable()
-    assert(perBatch.asScala.last == Map("u2" -> ""))
-    val emitted = perBatch.size()
-    put("u2" -> "") // DUPLICATE delete in a later batch: state is gone,
-    q.processAllAvailable()
-    put("u9" -> "") // ... and a delete of a never-inserted key
-    q.processAllAvailable(); q.stop()
-    // neither may re-emit off the empty state (materialized-KTable
-    // drop); without it the duplicate beats the absent state vacuously
-    assert(perBatch.size() == emitted,
-      s"duplicate/no-op tombstones leaked: ${perBatch.asScala.toSeq.drop(emitted)}")
-  }
-
   test("cleanup.policy tokens and retention options are validated, not silently ignored") {
     val dir = tmp("glog_badopt") + "/log"
     (1 to 4).map(i => (s"k$i", s"v$i")).toDF("key", "value")

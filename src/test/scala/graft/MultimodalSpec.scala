@@ -64,24 +64,6 @@ class MultimodalSpec extends AnyFunSuite {
     assert(out.forall(_.features.length == 16))
   }
 
-  test("frame sampling expands metadata only, bytes untouched") {
-    val frames = Multimodal.sampleFrames(media, everyMs = 1000)
-    assert(!frames.columns.contains("bytes"))
-    val r = frames.filter($"media_id" === 2).collect() // video, 3s
-    assert(r.map(_.getAs[Int]("frame_idx")).sorted.toSeq == Seq(0, 1, 2))
-    assert(r.map(_.getAs[Int]("offset_ms")).sorted.toSeq == Seq(0, 1000, 2000))
-  }
-
-  test("resize plan preserves aspect ratio and never upscales") {
-    val plan = Multimodal.resizePlan(media, maxSide = 224).collect()
-    plan.foreach { r =>
-      val (w, h) = (r.getAs[Int]("width"), r.getAs[Int]("height"))
-      val (tw, th) = (r.getAs[Int]("target_width"), r.getAs[Int]("target_height"))
-      assert(tw <= 224 + 1 && th <= 224 + 1)
-      assert(tw <= w && th <= h)
-    }
-  }
-
   test("extracted features flow into the ANN surface") {
     val emb = Multimodal.asEmbeddings(
       Multimodal.extractFeatures(media.as[MediaRow], dim = 16))

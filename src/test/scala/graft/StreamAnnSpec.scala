@@ -45,7 +45,6 @@ class StreamAnnSpec extends AnyFunSuite {
     var st = StreamAnn.buildPq(seed)
     st = StreamAnn.ingestPq(st, b1)
     st = StreamAnn.ingestPq(st, b2)
-    st = StreamAnn.consolidatePq(st)
     // the maintained store holds codes only — msub ints per vector,
     // never the raw floats (the compressed-layout contract)
     assert(st.codes.schema.fieldNames.toSeq == Seq("vec_id", "list_id", "codes"))

@@ -599,24 +599,6 @@ class StreamingSpec extends AnyFunSuite {
     assert(out.filter(col("key") === "a").count() == 1)
   }
 
-  test("idempotent parquet sink: a replayed micro-batch does not duplicate") {
-    import java.nio.file.Files
-    val root = Files.createTempDirectory("graft_sink").toFile.getAbsolutePath
-    val in = MemoryStream[StatefulOps.KeyedEvent](spark)
-    in.addData(StatefulOps.KeyedEvent("a", t(0), 1.0),
-               StatefulOps.KeyedEvent("b", t(0), 2.0))
-    val q = StatefulOps.toIdempotentParquet(
-      in.toDF(), s"$root/data", s"$root/cp").start()
-    q.processAllAvailable(); q.stop()
-    val once = spark.read.parquet(s"$root/data")
-    assert(once.count() == 2)
-    // redelivery: the sink-side replay of batch 0 (restart between the
-    // sink write and the offset commit) overwrites its own partition
-    StatefulOps.writeBatchIdempotent(
-      once.drop("batch_id"), 0L, s"$root/data")
-    assert(spark.read.parquet(s"$root/data").count() == 2)
-  }
-
   test("end-to-end pipeline: parse errors and blacklist drive decisions") {
     val users = Seq(("u1", 0.2, "verified", 100.0))
       .toDF("user_id", "risk_score", "kyc_status", "avg_transaction_amount")
