@@ -71,92 +71,62 @@ object RecallAudit {
       .localCheckpoint(true)
     OperatorCaches.releaseAll()
 
-    val rows = Seq.newBuilder[(String, Int, Double)]
-    for (nprobe <- Seq(1, 2, 4, 8)) {
-      rows += (("ivf_first16", nprobe,
-        recallOf(Similarity.ivfTopK(emb, qPred, k, nprobe = nprobe), truth, k)))
-      OperatorCaches.releaseAll()
-      rows += (("ivf_trained", nprobe,
-        recallOf(Similarity.ivfTopK(emb, qPred, k, nprobe = nprobe,
-          pivotsOpt = Some(trained)), truth, k)))
-      OperatorCaches.releaseAll()
-      rows += (("ivfpq_first16", nprobe,
-        recallOf(Similarity.ivfPqTopK(emb, qPred, k, nprobe = nprobe), truth, k)))
-      OperatorCaches.releaseAll()
-      rows += (("ivfpq_trained", nprobe,
-        recallOf(Similarity.ivfPqTopK(emb, qPred, k, nprobe = nprobe,
-          pivotsOpt = Some(trained), bookOpt = Some(trainedBook)), truth, k)))
-      OperatorCaches.releaseAll()
-      rows += (("ivfpq_residual", nprobe,
-        recallOf(Similarity.ivfPqResidualTopK(emb, qPred, k,
-          nprobe = nprobe), truth, k)))
-      OperatorCaches.releaseAll()
-      rows += (("ivfpq_residual_trained", nprobe,
-        recallOf(Similarity.ivfPqResidualTopK(emb, qPred, k,
-          nprobe = nprobe, bookOpt = Some(residualBook)), truth, k)))
-      OperatorCaches.releaseAll()
-      rows += (("ivfpq_rerank40", nprobe,
-        recallOf(Similarity.ivfPqRerankTopK(emb, qPred, k, rerank = 40,
-          nprobe = nprobe), truth, k)))
-      OperatorCaches.releaseAll()
-      rows += (("residual_rerank40", nprobe,
-        recallOf(Similarity.ivfPqResidualRerankTopK(emb, qPred, k,
-          rerank = 40, nprobe = nprobe), truth, k)))
-      OperatorCaches.releaseAll()
-      rows += (("trained_rerank40", nprobe,
-        recallOf(Similarity.ivfPqRerankTopK(emb, qPred, k, rerank = 40,
-          nprobe = nprobe, pivotsOpt = Some(samplePivots),
-          bookOpt = Some(sampleBook)), truth, k)))
-      OperatorCaches.releaseAll()
-      // RP rung has no nprobe; its dial is the shortlist pool —
-      // reuse the loop variable as pool = 10·nprobe for the sweep
-      rows += (("rp16_rerank_pool10x", nprobe,
-        recallOf(Similarity.rpRerankTopK(emb, qPred, k,
-          pool = 10 * nprobe), truth, k)))
-      OperatorCaches.releaseAll()
-    }
     // ---- clustered-regime twin --------------------------------------
     // Residual encoding pays exactly when the corpus CONCENTRATES
     // around the coarse cells (the IVFADC premise); the near-uniform
-    // synthetic embeddings above are the opposite regime. Derive a
-    // 16-cluster corpus from the first 16 corpus vectors (cluster
-    // centers = the operator's default pivots) with 40 hash-perturbed
-    // points each — residuals are then pure within-cell offsets and
-    // the residual book quantizes THEM instead of re-describing the
-    // cells.
-    // the generator is now the operator-surface Similarity
-    // .clusteredCopies (promoted in r16 so the clustered regime is
-    // oracle-checkable); the audit consumes the same corpus
+    // synthetic embeddings are the opposite regime. Derive a 16-cluster
+    // corpus from the first 16 corpus vectors (cluster centers = the
+    // operator's default pivots) with 40 hash-perturbed points each —
+    // residuals are then pure within-cell offsets and the residual
+    // book quantizes THEM instead of re-describing the cells. The
+    // generator is the operator-surface Similarity.clusteredCopies, so
+    // the audit consumes the oracle-checked corpus.
     val clustered = Similarity.clusteredCopies(emb)
       .localCheckpoint(true)
     val cqPred = col("vec_id") >= 320 && col("vec_id") < 328
     val ctruth = topkSets(Similarity.bruteForceTopK(clustered, cqPred, k))
     OperatorCaches.releaseAll()
-    for (nprobe <- Seq(1, 2, 4)) {
-      rows += (("clustered_pq_raw", nprobe,
-        recallOf(Similarity.ivfPqTopK(clustered, cqPred, k,
-          nprobe = nprobe), ctruth, k)))
-      OperatorCaches.releaseAll()
-      rows += (("clustered_pq_residual", nprobe,
-        recallOf(Similarity.ivfPqResidualTopK(clustered, cqPred, k,
-          nprobe = nprobe), ctruth, k)))
-      OperatorCaches.releaseAll()
-      rows += (("clustered_residual_rerank40", nprobe,
-        recallOf(Similarity.ivfPqResidualRerankTopK(clustered, cqPred, k,
-          rerank = 40, nprobe = nprobe), ctruth, k)))
-      OperatorCaches.releaseAll()
-      rows += (("clustered_rp16_rerank_pool10x", nprobe,
-        recallOf(Similarity.rpRerankTopK(clustered, cqPred, k,
-          pool = 10 * nprobe), ctruth, k)))
-      OperatorCaches.releaseAll()
-    }
 
-    val out = rows.result()
+    // (variant, nprobe, approximate top-k) per row, in print order; the
+    // RP rungs have no nprobe — their dial is the shortlist pool, swept
+    // as pool = 10·nprobe
+    import Similarity._
+    val uniform: Seq[(String, Int => DataFrame)] = Seq(
+      "ivf_first16" -> (np => ivfTopK(emb, qPred, k, nprobe = np)),
+      "ivf_trained" -> (np => ivfTopK(emb, qPred, k, nprobe = np,
+        pivotsOpt = Some(trained))),
+      "ivfpq_first16" -> (np => ivfPqTopK(emb, qPred, k, nprobe = np)),
+      "ivfpq_trained" -> (np => ivfPqTopK(emb, qPred, k, nprobe = np,
+        pivotsOpt = Some(trained), bookOpt = Some(trainedBook))),
+      "ivfpq_residual" -> (np => ivfPqResidualTopK(emb, qPred, k, nprobe = np)),
+      "ivfpq_residual_trained" -> (np => ivfPqResidualTopK(emb, qPred, k,
+        nprobe = np, bookOpt = Some(residualBook))),
+      "ivfpq_rerank40" -> (np => ivfPqRerankTopK(emb, qPred, k, rerank = 40,
+        nprobe = np)),
+      "residual_rerank40" -> (np => ivfPqResidualRerankTopK(emb, qPred, k,
+        rerank = 40, nprobe = np)),
+      "trained_rerank40" -> (np => ivfPqRerankTopK(emb, qPred, k, rerank = 40,
+        nprobe = np, pivotsOpt = Some(samplePivots), bookOpt = Some(sampleBook))),
+      "rp16_rerank_pool10x" -> (np => rpRerankTopK(emb, qPred, k, pool = 10 * np)))
+    val clusteredRows: Seq[(String, Int => DataFrame)] = Seq(
+      "clustered_pq_raw" -> (np => ivfPqTopK(clustered, cqPred, k, nprobe = np)),
+      "clustered_pq_residual" -> (np => ivfPqResidualTopK(clustered, cqPred, k,
+        nprobe = np)),
+      "clustered_residual_rerank40" -> (np => ivfPqResidualRerankTopK(clustered,
+        cqPred, k, rerank = 40, nprobe = np)),
+      "clustered_rp16_rerank_pool10x" -> (np => rpRerankTopK(clustered, cqPred,
+        k, pool = 10 * np)))
+    val table =
+      (for (np <- Seq(1, 2, 4, 8); (v, ann) <- uniform)
+        yield (v, np, () => recallOf(ann(np), truth, k))) ++
+      (for (np <- Seq(1, 2, 4); (v, ann) <- clusteredRows)
+        yield (v, np, () => recallOf(ann(np), ctruth, k)))
+    val out = table.map { case (v, np, recall) =>
+      try (v, np, recall()) finally OperatorCaches.releaseAll() }
     println("variant,nprobe,recall_at_10")
     out.foreach { case (v, np, r) => println(f"$v,$np,$r%.4f") }
-    val json = out.map { case (v, np, r) => s""""${v}_np$np":$r""" }
-      .mkString("{\"metric\":\"recall_at_10\",\"sf\":\"" + sfDir + "\",", ",", "}")
-    println(json)
+    println(Bench.jsonObject(Seq("metric" -> "recall_at_10", "sf" -> sfDir) ++
+      out.map { case (v, np, r) => s"${v}_np$np" -> r }: _*).toString)
     spark.stop()
   }
 }

@@ -633,15 +633,14 @@ object Multimodal {
     idxs.map(blockOf).reduceLeft((acc, blk) => acc * lit(256L) + blk)
   }
 
-  /** The 28 (i, j) byte-block index pairs — the 2-block
-    * specialization ([[bandSets]](2)) the image/stream/store faces
-    * ship as their default.
+  /** (band, bkey) rows of a 64-bit hash column, one per 2-block band
+    * ([[bandSets]](2): the 28 (i, j) byte-block pairs the image,
+    * stream and store faces ship as their default) — the band explode
+    * every hamming-family join keys on.
     */
-  private[graft] val bandPairs: IndexedSeq[(Int, Int)] =
-    bandSets(2).map { case Seq(i, j) => (i, j) }
-
-  private[graft] def bandKeyOf(c: Column, i: Int, j: Int): Column =
-    bandKeyOfSet(c, Seq(i, j))
+  private[graft] def bandExplode(h: Column): Column =
+    posexplode(array(bandSets(2).map(bandKeyOfSet(h, _)): _*))
+      .as(Seq("band", "bkey"))
 
   /** Index of the FIRST band on which two hashes agree — the
     * candidate-dedup rule shared by batch and stream (a candidate
@@ -999,7 +998,7 @@ object Multimodal {
     * frame (static scenes, black frames) would inflate past the
     * threshold from one genuinely shared frame (r15 ADVICE). Frame
     * candidates come from the SAME composite-band LSH as the image
-    * operator ([[bandPairs]] / [[bandKeyOf]] / [[firstSharedBand]] —
+    * operator ([[bandExplode]] / [[firstSharedBand]] —
     * one definition), verified by exact hamming, then rolled up per
     * video pair ([[rollupFramePairs]], shared verbatim with the
     * streaming twin [[graft.streaming.StreamVideoDedup]]).

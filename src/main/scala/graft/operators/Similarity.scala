@@ -84,22 +84,27 @@ object Similarity {
     * baseline): rank by raw cosine (bit-exact), tie-break on id.
     */
   def bruteForceTopK(embeddings: DataFrame, queryPred: Column,
-                     k: Int, dim: Int = Dim): DataFrame = {
+                     k: Int, dim: Int = Dim): DataFrame =
     // cached: consumed twice (query side + candidate side);
     // registered with OperatorCaches for caller-side release
-    val all = OperatorCaches.track(prepared(embeddings, dim))
-    val q = all.filter(queryPred)
+    bruteForceOn(OperatorCaches.track(prepared(embeddings, dim)),
+      queryPred, k, dim)
+
+  /** [[bruteForceTopK]] over an already-[[prepared]] corpus. */
+  private def bruteForceOn(all: DataFrame, queryPred: Column, k: Int,
+                           dim: Int): DataFrame =
+    exactRerank(notSelf(queriesOf(all, queryPred).crossJoin(all)), k, dim)
+
+  /** (query_id, qv, qnrm): the query side of every cosine search. */
+  private def queriesOf(all: DataFrame, queryPred: Column): DataFrame =
+    all.filter(queryPred)
       .select(col("vec_id").as("query_id"), col("v").as("qv"),
               col("nrm").as("qnrm"))
-    val scored = q.crossJoin(all)
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-              pairCos(col("qv"), col("qnrm"), col("v"), col("nrm"), dim).as("cos"))
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id"))
-    scored.withColumn("rn", row_number().over(w)).filter(col("rn") <= k)
-  }
+
+  /** Drop self matches; name the corpus side `neighbor_id`. */
+  private def notSelf(pairs: DataFrame): DataFrame =
+    pairs.filter(col("vec_id") =!= col("query_id"))
+      .withColumnRenamed("vec_id", "neighbor_id")
 
   /** Sign-bit LSH bucket over the first `bits` dimensions. */
   def signBucket(v: Column, bits: Int = 8): Column =
@@ -111,42 +116,20 @@ object Similarity {
     * design (documented scale path).
     */
   def lshTopK(embeddings: DataFrame, queryPred: Column, k: Int,
-              bits: Int = 8, dim: Int = Dim): DataFrame = {
-    val all = OperatorCaches.track(prepared(embeddings, dim)
-      .withColumn("bkt", signBucket(col("v"), bits)))
+              bits: Int = 8, dim: Int = Dim): DataFrame =
+    lshOn(prepared(embeddings, dim), queryPred, k, bits, dim)
+
+  /** [[lshTopK]] over a [[prepared]] corpus (bucketed view cached). */
+  private def lshOn(prepared: DataFrame, queryPred: Column, k: Int,
+                    bits: Int, dim: Int): DataFrame = {
+    val all = OperatorCaches.track(
+      prepared.withColumn("bkt", signBucket(col("v"), bits)))
     val q = all.filter(queryPred)
       .select(col("vec_id").as("query_id"), col("v").as("qv"),
               col("nrm").as("qnrm"), col("bkt").as("qbkt"))
-    val scored = q.join(all, col("bkt") === col("qbkt"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-              pairCos(col("qv"), col("qnrm"), col("v"), col("nrm"), dim).as("cos"))
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id"))
-    scored.withColumn("rn", row_number().over(w)).filter(col("rn") <= k)
+    exactRerank(notSelf(q.join(all, col("bkt") === col("qbkt"))), k, dim)
   }
 
-  /** IVF-style ANN: coarse quantizer + inverted lists + bounded probe.
-    *
-    * The codebook here is the degenerate-but-deterministic choice —
-    * the first `nlist` vectors act as pivots (a trained k-means
-    * codebook plugs into the same plan; the oracle needs a
-    * reproducible one). Every vector is assigned to its max-cosine
-    * pivot (one broadcast of `nlist` pivots, N×nlist scoring — linear
-    * scan, no shuffle of the corpus), queries probe their `nprobe`
-    * closest lists, and only those lists are scored exactly. Candidate
-    * count ≈ N·nprobe/nlist per query — the classic recall/throughput
-    * dial. Recall < 1 by design; the assignment and probe order are
-    * exact-cosine with id tiebreaks, so the result is reproducible in
-    * any engine (q_ann_ivf mirrors it in SQL).
-    */
-  /** The codebook as ONE broadcast-able array row — the first `nlist`
-    * corpus vectors as pivots (a trained k-means codebook plugs into
-    * the same single-row shape). Exposed to [[graft.streaming.StreamAnn]],
-    * which freezes this frame at build time and assigns every later
-    * batch against it.
-    */
   /** Codebook sizing for the within-cluster self-join operators
     * ([[semDedup]], [[knnGraph]]): nlist = max(16, ⌈√N⌉). With a FIXED
     * codebook, cluster mass grows linearly with the corpus and the
@@ -169,10 +152,23 @@ object Similarity {
   private def resolveNlist(all: DataFrame, nlist: Int): Int =
     if (nlist > 0) nlist else ivfAutoNlist(all.count())
 
+  /** The codebook as ONE broadcast-able array row — the first `nlist`
+    * corpus vectors as pivots (a trained k-means codebook plugs into
+    * the same single-row shape). Exposed to [[graft.streaming.StreamAnn]],
+    * which freezes this frame at build time and assigns every later
+    * batch against it.
+    */
   private[graft] def pivotArr(all: DataFrame, nlist: Int): DataFrame =
     all.filter(col("vec_id") < nlist)
       .agg(collect_list(struct(col("vec_id").as("pid"), col("v").as("pv"),
         col("nrm").as("pn"))).as("parr"))
+
+  /** The caller's pivots, or the default ones as a tracked cache (r16
+    * verdict #6): uncached, each pivot broadcast re-runs the agg.
+    */
+  private def pivotsOr(pivotsOpt: Option[DataFrame], all: DataFrame,
+                       nlist: Int): DataFrame =
+    pivotsOpt.getOrElse(OperatorCaches.track(pivotArr(all, nlist)))
 
   /** Row-local pivot scoring against an explicit codebook frame (see
     * [[pivotArr]]); adds a `pcs` array of (pcos, -pid) structs so
@@ -207,34 +203,50 @@ object Similarity {
     assignBy(all, pivotArr(all, nlist), dim)
       .select(col("vec_id"), col("v"), col("nrm"), col("list_id"))
 
+  /** IVF-style ANN: coarse quantizer + inverted lists + bounded probe.
+    *
+    * The codebook here is the degenerate-but-deterministic choice —
+    * the first `nlist` vectors act as pivots (a trained k-means
+    * codebook plugs into the same plan; the oracle needs a
+    * reproducible one). Every vector is assigned to its max-cosine
+    * pivot (one broadcast of `nlist` pivots, N×nlist scoring — linear
+    * scan, no shuffle of the corpus), queries probe their `nprobe`
+    * closest lists, and only those lists are scored exactly. Candidate
+    * count ≈ N·nprobe/nlist per query — the classic recall/throughput
+    * dial. Recall < 1 by design; the assignment and probe order are
+    * exact-cosine with id tiebreaks, so the result is reproducible in
+    * any engine (q_ann_ivf mirrors it in SQL).
+    */
   def ivfTopK(embeddings: DataFrame, queryPred: Column, k: Int,
               nlist: Int = DefaultNlist, nprobe: Int = 4, dim: Int = Dim,
-              pivotsOpt: Option[DataFrame] = None): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
+              pivotsOpt: Option[DataFrame] = None): DataFrame =
     // cached: scored against pivots twice (assignment + query probes)
-    val all = OperatorCaches.track(prepared(embeddings, dim))
-    // default pivots as a tracked cache (r16 verdict #6): both
-    // broadcast builds otherwise re-run the one-row agg subtree
-    val pv = pivotsOpt.getOrElse(
-      OperatorCaches.track(pivotArr(all, nlist)))
-    def pivotScores(src: DataFrame): DataFrame = pivotScoredBy(src, pv, dim)
-    val assigned = assignBy(all, pv, dim)
-      .select(col("vec_id"), col("v"), col("nrm"), col("list_id"))
-    val probes = pivotScores(all.filter(queryPred))
-      .withColumn("pp",
-        explode(slice(sort_array(col("pcs"), asc = false), 1, nprobe)))
+    ivfOn(OperatorCaches.track(prepared(embeddings, dim)), queryPred, k,
+      nlist, nprobe, dim, pivotsOpt)
+
+  /** [[ivfTopK]] over an already-[[prepared]] corpus. */
+  private def ivfOn(all: DataFrame, queryPred: Column, k: Int, nlist: Int,
+                    nprobe: Int, dim: Int,
+                    pivotsOpt: Option[DataFrame]): DataFrame = {
+    val pv = pivotsOr(pivotsOpt, all, nlist)
+    ivfSearch(all.filter(queryPred), pv, assignBy(all, pv, dim), k,
+      nprobe, dim)
+  }
+
+  /** The IVF search kernel over explicit index frames (shared by
+    * [[ivfTopK]], the recall ladder/curve and `StreamAnn.query`):
+    * [[prepared]] queries probe their `nprobe` closest lists of an
+    * [[assignBy]] frame, scored exactly by [[exactRerank]].
+    */
+  private[graft] def ivfSearch(queries: DataFrame, pivots: DataFrame,
+                               lists: DataFrame, k: Int, nprobe: Int,
+                               dim: Int): DataFrame = {
+    val probes = probed(queries, pivots, nprobe, dim)
       .select(col("vec_id").as("query_id"), col("v").as("qv"),
-              col("nrm").as("qnrm"),
-              (lit(0L) - col("pp")("npid")).as("plist"))
-    val scored = probes.join(assigned, col("plist") === col("list_id"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-              pairCos(col("qv"), col("qnrm"), col("v"), col("nrm"), dim)
-                .as("cos"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id"))
-    scored.withColumn("rn", row_number().over(w)).filter(col("rn") <= k)
-      .select("query_id", "neighbor_id", "cos", "rn")
+              col("nrm").as("qnrm"), col("plist"))
+    exactRerank(notSelf(probes.join(
+        lists.select(col("vec_id"), col("v"), col("nrm"), col("list_id")),
+        col("plist") === col("list_id"))), k, dim)
   }
 
   /** PQ codebook: first `ksub` corpus vectors as sub-space centroids,
@@ -259,6 +271,72 @@ object Similarity {
       d * d
     }.reduceLeft(_ + _)
 
+  /** `vec`'s per-sub-space nearest-centroid cids in the `carr` book. */
+  private def pqCodes(vec: Column, msub: Int, dim: Int): Column =
+    array((0 until msub).map { mi =>
+      array_min(transform(col("carr"), c =>
+        struct(subDist(vec, c("cv"), mi, dim / msub).as("d"),
+               c("cid").as("cid"))))("cid")
+    }: _*)
+
+  /** `vec`'s ADC table against the `carr` book: ||vec_m − c_mc||². */
+  private def adcTable(vec: Column, msub: Int, dim: Int): Column =
+    array((0 until msub).map { mi =>
+      transform(col("carr"), c => subDist(vec, c("cv"), mi, dim / msub))
+    }: _*)
+
+  /** (vec_id, list_id, codes): IVF assignment + PQ encoding fused in
+    * one row-local pass against the two broadcast one-row frames; the
+    * full vector is DROPPED on the way out. Shared with
+    * [[graft.streaming.StreamAnn]], which freezes pivots+book and
+    * encodes every later batch with this exact plan.
+    */
+  private[graft] def pqEncode(src: DataFrame, pivots: DataFrame,
+                              book: DataFrame, msub: Int,
+                              dim: Int): DataFrame =
+    encodeBy(assignBy(src, pivots, dim), book, col("v"), msub, dim)
+
+  /** (vec_id, list_id, codes): an assigned frame's `vec` encoded. */
+  private def encodeBy(assigned: DataFrame, book: DataFrame, vec: Column,
+                       msub: Int, dim: Int): DataFrame =
+    assigned.crossJoin(broadcast(book))
+      .select(col("vec_id"), col("list_id"), pqCodes(vec, msub, dim).as("codes"))
+
+  /** Each `qsrc` row once per probed list `plist`: its `nprobe`
+    * closest lists by exact pivot cosine, ids tie-broken — the probe
+    * planner shared by every IVF flavor.
+    */
+  private def probed(qsrc: DataFrame, pivots: DataFrame, nprobe: Int,
+                     dim: Int): DataFrame =
+    pivotScoredBy(qsrc, pivots, dim)
+      .withColumn("pp",
+        explode(slice(sort_array(col("pcs"), asc = false), 1, nprobe)))
+      .withColumn("plist", lit(0L) - col("pp")("npid"))
+
+  /** ADC approximate distance: fixed left-associated Σ_m dts[m][code_m]
+    * (the oracle mirrors the chain; SUM() would be order-dependent).
+    */
+  private def adcDist(msub: Int): Column =
+    (0 until msub).map { mi =>
+      element_at(element_at(col("dts"), mi + 1),
+        (element_at(col("codes"), mi + 1) + 1).cast("int"))
+    }.reduceLeft(_ + _)
+
+  /** The ADC ranking tail of both PQ kernels: candidates (`keys`,
+    * neighbor_id, codes) join their broadcast ADC tables (`keys`,
+    * dts); top `k` per query by [[adcDist]], ties to the smaller id.
+    */
+  private def adcRank(cand: DataFrame, qadc: DataFrame, k: Int, msub: Int,
+                      keys: Seq[String]): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val scored = cand.join(broadcast(qadc), keys)
+      .select(col("query_id"), col("neighbor_id"), adcDist(msub).as("adist"))
+    val w = Window.partitionBy(col("query_id"))
+      .orderBy(col("adist"), col("neighbor_id"))
+    scored.withColumn("rn", row_number().over(w)).filter(col("rn") <= k)
+      .select("query_id", "neighbor_id", "adist", "rn")
+  }
+
   /** IVF-PQ with asymmetric-distance (ADC) ranking — the published
     * billion-scale ANN layout (Jégou et al., "Product Quantization
     * for Nearest Neighbor Search"): vectors live in IVF inverted
@@ -277,97 +355,43 @@ object Similarity {
     * SQL. Production refine step (exact-cosine rerank of the ADC
     * top-R) composes as `bruteForceTopK` over the survivors.
     */
-  /** (vec_id, list_id, codes): IVF assignment + PQ encoding fused in
-    * one row-local pass against the two broadcast one-row frames; the
-    * full vector is DROPPED on the way out. Shared with
-    * [[graft.streaming.StreamAnn]], which freezes pivots+book and
-    * encodes every later batch with this exact plan.
-    */
-  private[graft] def pqEncode(src: DataFrame, pivots: DataFrame,
-                              book: DataFrame, msub: Int,
-                              dim: Int): DataFrame = {
-    val dsub = dim / msub
-    assignBy(src, pivots, dim)
-      .crossJoin(broadcast(book))
-      .select(col("vec_id"), col("list_id"),
-        array((0 until msub).map { mi =>
-          array_min(transform(col("carr"), c =>
-            struct(subDist(col("v"), c("cv"), mi, dsub).as("d"),
-                   c("cid").as("cid"))))("cid")
-        }: _*).as("codes"))
-  }
-
-  /** (query_id, plist): each query's `nprobe` closest inverted lists
-    * by exact pivot cosine, ids tie-broken — the probe planner shared
-    * by every IVF flavor.
-    */
-  private[graft] def probeLists(qsrc: DataFrame, pivots: DataFrame,
-                                nprobe: Int, dim: Int): DataFrame =
-    pivotScoredBy(qsrc, pivots, dim)
-      .withColumn("pp",
-        explode(slice(sort_array(col("pcs"), asc = false), 1, nprobe)))
-      .select(col("vec_id").as("query_id"),
-        (lit(0L) - col("pp")("npid")).as("plist"))
-
-  /** (query_id, dts): per-query ADC tables — dts[m][c] =
-    * ||q_m − centroid_mc||², built once per query against the
-    * broadcast book; every candidate afterwards costs `msub` lookups.
-    */
-  private[graft] def pqAdcTables(qsrc: DataFrame, book: DataFrame,
-                                 msub: Int, dim: Int): DataFrame = {
-    val dsub = dim / msub
-    qsrc.crossJoin(broadcast(book))
-      .select(col("vec_id").as("query_id"),
-        array((0 until msub).map { mi =>
-          transform(col("carr"), c => subDist(col("v"), c("cv"), mi, dsub))
-        }: _*).as("dts"))
-  }
-
-  /** ADC approximate distance: fixed left-associated Σ_m dts[m][code_m]
-    * (the oracle mirrors the chain; SUM() would be order-dependent).
-    */
-  private[graft] def adcDist(msub: Int): Column =
-    (0 until msub).map { mi =>
-      element_at(element_at(col("dts"), mi + 1),
-        (element_at(col("codes"), mi + 1) + 1).cast("int"))
-    }.reduceLeft(_ + _)
-
-  /** Rank probed candidates by ADC distance, k per query. `cand` must
-    * carry (query_id, neighbor_id, codes); `qadc` is [[pqAdcTables]].
-    */
-  private[graft] def adcRank(cand: DataFrame, qadc: DataFrame, k: Int,
-                             msub: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val scored = cand.join(broadcast(qadc), "query_id")
-      .select(col("query_id"), col("neighbor_id"), adcDist(msub).as("adist"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("adist"), col("neighbor_id"))
-    scored.withColumn("rn", row_number().over(w)).filter(col("rn") <= k)
-      .select("query_id", "neighbor_id", "adist", "rn")
-  }
-
   def ivfPqTopK(embeddings: DataFrame, queryPred: Column, k: Int,
                 nlist: Int = DefaultNlist, nprobe: Int = 4, msub: Int = DefaultMsub,
                 ksub: Int = DefaultKsub, dim: Int = Dim,
                 pivotsOpt: Option[DataFrame] = None,
-                bookOpt: Option[DataFrame] = None): DataFrame = {
-    require(dim % msub == 0, s"dim $dim must divide into $msub sub-spaces")
-    val all = OperatorCaches.track(prepared(embeddings, dim))
-    // default pivots/book as tracked caches (r16 verdict #6): pivots
-    // feed the encode assignment AND the probe planner, the book the
-    // encode AND the ADC tables — uncached, each broadcast build
-    // re-ran the one-row agg as its own driver job. Values unchanged:
-    // the cached frames ARE the default plans.
-    val pivots = pivotsOpt.getOrElse(
-      OperatorCaches.track(pivotArr(all, nlist)))
+                bookOpt: Option[DataFrame] = None): DataFrame =
+    ivfPqOn(OperatorCaches.track(prepared(embeddings, dim)), queryPred, k,
+      nlist, nprobe, msub, ksub, dim, pivotsOpt, bookOpt)
+
+  /** [[ivfPqTopK]] over an already-[[prepared]] corpus. */
+  private def ivfPqOn(all: DataFrame, queryPred: Column, k: Int, nlist: Int,
+                      nprobe: Int, msub: Int, ksub: Int, dim: Int,
+                      pivotsOpt: Option[DataFrame],
+                      bookOpt: Option[DataFrame]): DataFrame = {
+    val pivots = pivotsOr(pivotsOpt, all, nlist)
     val book = bookOpt.getOrElse(OperatorCaches.track(pqBook(all, ksub)))
-    val encoded = pqEncode(all, pivots, book, msub, dim)
-    val qsrc = all.filter(queryPred)
-    val cand = probeLists(qsrc, pivots, nprobe, dim)
-      .join(encoded, col("plist") === col("list_id"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"), col("codes"))
-    adcRank(cand, pqAdcTables(qsrc, book, msub, dim), k, msub)
+    ivfPqSearch(all.filter(queryPred), pivots, book,
+      pqEncode(all, pivots, book, msub, dim), k, nprobe, msub, dim)
+  }
+
+  /** The PQ search kernel over explicit index frames (shared by
+    * [[ivfPqTopK]], the recall ladder and `StreamAnn.queryPq`):
+    * [[prepared]] queries probe a [[pqEncode]] code index and rank
+    * the probed codes by ADC distance ([[adcRank]]).
+    */
+  private[graft] def ivfPqSearch(queries: DataFrame, pivots: DataFrame,
+                                 book: DataFrame, codes: DataFrame, k: Int,
+                                 nprobe: Int, msub: Int,
+                                 dim: Int): DataFrame = {
+    require(dim % msub == 0, s"dim $dim must divide into $msub sub-spaces")
+    val cand = notSelf(probed(queries, pivots, nprobe, dim)
+        .select(col("vec_id").as("query_id"), col("plist"))
+        .join(codes, col("plist") === col("list_id")))
+      .select(col("query_id"), col("neighbor_id"), col("codes"))
+    val qadc = queries.crossJoin(broadcast(book))
+      .select(col("vec_id").as("query_id"),
+        adcTable(col("v"), msub, dim).as("dts"))
+    adcRank(cand, qadc, k, msub, Seq("query_id"))
   }
 
   /** IVF-PQ with the production REFINE step: ADC ranks the probed
@@ -386,38 +410,32 @@ object Similarity {
                       rerank: Int = 20, nlist: Int = DefaultNlist, nprobe: Int = 4,
                       msub: Int = DefaultMsub, ksub: Int = DefaultKsub, dim: Int = Dim,
                       pivotsOpt: Option[DataFrame] = None,
-                      bookOpt: Option[DataFrame] = None): DataFrame =
-    rerankShortlist(embeddings, queryPred,
-      ivfPqTopK(embeddings, queryPred, rerank, nlist, nprobe,
-        msub, ksub, dim, pivotsOpt, bookOpt), k, dim)
-
-  /** The rerank scaffold shared by every batch two-stage operator
-    * (raw-PQ and residual-PQ shortlists): project the queries off the
-    * tracked prepared corpus, join the shortlist back to the full
-    * vectors, and rank through [[exactRerank]] — one definition so a
-    * join-shape change cannot land in one rerank operator and not
-    * the other.
-    */
-  private def rerankShortlist(embeddings: DataFrame, queryPred: Column,
-                              shortlist: DataFrame, k: Int,
-                              dim: Int): DataFrame = {
+                      bookOpt: Option[DataFrame] = None): DataFrame = {
     val all = OperatorCaches.track(prepared(embeddings, dim))
-    val q = all.filter(queryPred)
-      .select(col("vec_id").as("query_id"), col("v").as("qv"),
-        col("nrm").as("qnrm"))
-    exactRerank(shortlist.select(col("query_id"), col("neighbor_id"))
-      .join(q, "query_id")
-      .join(all.select(col("vec_id").as("neighbor_id"), col("v"), col("nrm")),
-        "neighbor_id"), k, dim)
+    rerankShortlist(all, queryPred,
+      ivfPqOn(all, queryPred, rerank, nlist, nprobe, msub, ksub, dim,
+        pivotsOpt, bookOpt), k, dim)
   }
 
-  /** The exact-rerank ranking tail shared by every two-stage serving
-    * operator (batch [[ivfPqRerankTopK]] and the streaming store's
-    * `StreamAnn.queryPqRerank`): score (query_id, neighbor_id, qv,
-    * qnrm, v, nrm) pairs by exact cosine and keep the top `k` per
-    * query, ties to the smaller neighbor id. ONE definition so the
-    * pinned batch≡stream bit-equality holds by construction — a
-    * tie-break or column change lands in both operators or neither.
+  /** The rerank scaffold shared by every batch two-stage operator
+    * (raw-PQ, residual-PQ and projected-cosine shortlists): project
+    * the queries off the caller's [[prepared]] corpus `all`, join the
+    * shortlist back to the full vectors, and rank through
+    * [[exactRerank]] — one definition so a join-shape change cannot
+    * land in one rerank operator and not the other.
+    */
+  private def rerankShortlist(all: DataFrame, queryPred: Column,
+                              shortlist: DataFrame, k: Int,
+                              dim: Int): DataFrame =
+    exactRerank(shortlist.select(col("query_id"), col("neighbor_id"))
+      .join(queriesOf(all, queryPred), "query_id")
+      .join(all.select(col("vec_id").as("neighbor_id"), col("v"), col("nrm")),
+        "neighbor_id"), k, dim)
+
+  /** The exact-cosine ranking tail of every cosine search, batch and
+    * streaming: score (query_id, neighbor_id, qv, qnrm, v, nrm) pairs
+    * and keep the top `k` per query, ties to the smaller neighbor id.
+    * ONE definition so batch≡stream bit-equality holds by construction.
     */
   private[graft] def exactRerank(pairs: DataFrame, k: Int,
                                  dim: Int): DataFrame = {
@@ -436,17 +454,23 @@ object Similarity {
   private def centroidOf(key: Column, parr: Column): Column =
     element_at(filter(parr, p => p("pid") === key), 1)("pv")
 
-  /** (vec_id, list_id, r): coarse-assign the prepared frame against
-    * `pivots`, then subtract the assigned centroid element-wise — the
-    * residual projection of the IVFADC layout, all row-local.
+  /** (vec_id, list_id, r): subtract each row's assigned centroid
+    * element-wise from an [[assignBy]] frame — the residual projection
+    * of the IVFADC layout, all row-local.
     */
-  private def residualOf(all: DataFrame, pivots: DataFrame,
-                         dim: Int): DataFrame =
-    assignBy(all, pivots, dim)
-      .crossJoin(broadcast(pivots))
+  private def residualOf(assigned: DataFrame, pivots: DataFrame): DataFrame =
+    assigned.crossJoin(broadcast(pivots))
       .withColumn("cvec", centroidOf(col("list_id"), col("parr")))
       .select(col("vec_id"), col("list_id"),
         zip_with(col("v"), col("cvec"), (a, b) => a - b).as("r"))
+
+  /** Default residual book: vectors `nlist..nlist+ksub`'s residuals. */
+  private def residualBook(resid: DataFrame, nlist: Int,
+                           ksub: Int): DataFrame =
+    resid.filter(col("vec_id") >= nlist && col("vec_id") < nlist + ksub)
+      .agg(sort_array(collect_list(
+        struct((col("vec_id") - nlist).as("cid"),
+          col("r").as("cv")))).as("carr"))
 
   /** The residual projection over a raw embeddings frame — exposed so
     * a trainer can fit a residual book (k-means over the residuals,
@@ -457,8 +481,8 @@ object Similarity {
                     dim: Int = Dim,
                     pivotsOpt: Option[DataFrame] = None): DataFrame = {
     val all = OperatorCaches.track(prepared(embeddings, dim))
-    residualOf(all,
-      pivotsOpt.getOrElse(OperatorCaches.track(pivotArr(all, nlist))), dim)
+    val pivots = pivotsOr(pivotsOpt, all, nlist)
+    residualOf(assignBy(all, pivots, dim), pivots)
   }
 
   /** IVF-PQ over RESIDUALS — the published IVFADC layout (Jégou et
@@ -498,58 +522,50 @@ object Similarity {
                         nlist: Int = DefaultNlist, nprobe: Int = 4, msub: Int = DefaultMsub,
                         ksub: Int = DefaultKsub, dim: Int = Dim,
                         pivotsOpt: Option[DataFrame] = None,
-                        bookOpt: Option[DataFrame] = None): DataFrame = {
-    require(dim % msub == 0, s"dim $dim must divide into $msub sub-spaces")
-    val dsub = dim / msub
-    import org.apache.spark.sql.expressions.Window
-    val all = OperatorCaches.track(prepared(embeddings, dim))
-    // default pivots/book hoisted into tracked caches (r16 verdict #6,
-    // the ladder-hoist pattern applied to the standalone entry points):
-    // the pivot frame feeds FOUR broadcast builds here (residual
-    // projection, probe planner, query-residual lookup, plus the
-    // encode's assignment) and the book two — uncached, every build
-    // re-ran the one-row agg subtree as its own driver job. Caching
-    // changes no value: the cached frame IS the default plan.
-    val pivots = pivotsOpt.getOrElse(
-      OperatorCaches.track(pivotArr(all, nlist)))
+                        bookOpt: Option[DataFrame] = None): DataFrame =
+    ivfPqResidualOn(OperatorCaches.track(prepared(embeddings, dim)), queryPred,
+      k, nlist, nprobe, msub, ksub, dim, pivotsOpt, bookOpt)
+
+  /** [[ivfPqResidualTopK]] over an already-[[prepared]] corpus. */
+  private def ivfPqResidualOn(all: DataFrame, queryPred: Column, k: Int,
+                              nlist: Int, nprobe: Int, msub: Int, ksub: Int,
+                              dim: Int, pivotsOpt: Option[DataFrame],
+                              bookOpt: Option[DataFrame]): DataFrame = {
+    val pivots = pivotsOr(pivotsOpt, all, nlist)
     // cached: feeds the residual-book derivation and the encode pass
-    val resid = OperatorCaches.track(residualOf(all, pivots, dim))
-    val book = bookOpt.getOrElse(OperatorCaches.track(
-      resid.filter(col("vec_id") >= nlist && col("vec_id") < nlist + ksub)
-        .agg(sort_array(collect_list(
-          struct((col("vec_id") - nlist).as("cid"),
-            col("r").as("cv")))).as("carr"))))
-    val encoded = resid.crossJoin(broadcast(book))
-      .select(col("vec_id"), col("list_id"),
-        array((0 until msub).map { mi =>
-          array_min(transform(col("carr"), c =>
-            struct(subDist(col("r"), c("cv"), mi, dsub).as("d"),
-                   c("cid").as("cid"))))("cid")
-        }: _*).as("codes"))
-    val qsrc = all.filter(queryPred)
-    val probes = OperatorCaches.track(
-      probeLists(qsrc, pivots, nprobe, dim))
+    val resid = OperatorCaches.track(
+      residualOf(assignBy(all, pivots, dim), pivots))
+    val book = bookOpt.getOrElse(
+      OperatorCaches.track(residualBook(resid, nlist, ksub)))
+    ivfPqResidualSearch(all.filter(queryPred), pivots, book,
+      encodeBy(resid, book, col("r"), msub, dim), k, nprobe, msub, dim)
+  }
+
+  /** The residual-PQ search kernel over explicit index frames (shared
+    * by [[ivfPqResidualTopK]] and the recall ladder): each (query,
+    * probed list) gets an ADC table over q − c(list) ([[adcRank]]).
+    */
+  private def ivfPqResidualSearch(queries: DataFrame, pivots: DataFrame,
+                                  book: DataFrame, codes: DataFrame, k: Int,
+                                  nprobe: Int, msub: Int,
+                                  dim: Int): DataFrame = {
+    require(dim % msub == 0, s"dim $dim must divide into $msub sub-spaces")
+    // cached: feeds the per-(query, list) ADC tables and the candidates
+    val probes = OperatorCaches.track(probed(queries, pivots, nprobe, dim)
+      .select(col("vec_id").as("query_id"), col("plist")))
     val qadc = probes
-      .join(qsrc.select(col("vec_id").as("query_id"), col("v")), "query_id")
+      .join(queries.select(col("vec_id").as("query_id"), col("v")),
+        "query_id")
       .crossJoin(broadcast(pivots))
       .withColumn("cvec", centroidOf(col("plist"), col("parr")))
       .withColumn("qr", zip_with(col("v"), col("cvec"), (a, b) => a - b))
       .drop("parr")
       .crossJoin(broadcast(book))
       .select(col("query_id"), col("plist"),
-        array((0 until msub).map { mi =>
-          transform(col("carr"), c => subDist(col("qr"), c("cv"), mi, dsub))
-        }: _*).as("dts"))
-    val cand = probes.join(encoded, col("plist") === col("list_id"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("plist"),
-        col("vec_id").as("neighbor_id"), col("codes"))
-    val scored = cand.join(broadcast(qadc), Seq("query_id", "plist"))
-      .select(col("query_id"), col("neighbor_id"), adcDist(msub).as("adist"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("adist"), col("neighbor_id"))
-    scored.withColumn("rn", row_number().over(w)).filter(col("rn") <= k)
-      .select("query_id", "neighbor_id", "adist", "rn")
+        adcTable(col("qr"), msub, dim).as("dts"))
+    val cand = notSelf(probes.join(codes, col("plist") === col("list_id")))
+      .select(col("query_id"), col("plist"), col("neighbor_id"), col("codes"))
+    adcRank(cand, qadc, k, msub, Seq("query_id", "plist"))
   }
 
   /** The full IVFADC serving stack: coarse probe → residual-ADC
@@ -565,10 +581,12 @@ object Similarity {
                               nprobe: Int = 4, msub: Int = DefaultMsub,
                               ksub: Int = DefaultKsub, dim: Int = Dim,
                               pivotsOpt: Option[DataFrame] = None,
-                              bookOpt: Option[DataFrame] = None): DataFrame =
-    rerankShortlist(embeddings, queryPred,
-      ivfPqResidualTopK(embeddings, queryPred, rerank, nlist,
-        nprobe, msub, ksub, dim, pivotsOpt, bookOpt), k, dim)
+                              bookOpt: Option[DataFrame] = None): DataFrame = {
+    val all = OperatorCaches.track(prepared(embeddings, dim))
+    rerankShortlist(all, queryPred,
+      ivfPqResidualOn(all, queryPred, rerank, nlist, nprobe, msub, ksub, dim,
+        pivotsOpt, bookOpt), k, dim)
+  }
 
   /** MMR (maximal-marginal-relevance) diversification over an ANN
     * shortlist — the standard RAG serving pass that trades raw
@@ -598,7 +616,7 @@ object Similarity {
     val all = OperatorCaches.track(prepared(embeddings, dim))
     mmrTail(
       OperatorCaches.track(
-        ivfTopK(embeddings, queryPred, pool, nlist, nprobe, dim)
+        ivfOn(all, queryPred, pool, nlist, nprobe, dim, None)
           .select(col("query_id"), col("neighbor_id"), col("cos").as("rel"))),
       all.select(col("vec_id").as("neighbor_id"), col("v"), col("nrm")),
       k, lam, dim)
@@ -743,27 +761,23 @@ object Similarity {
     */
   def rpRerankTopK(embeddings: DataFrame, queryPred: Column, k: Int = 3,
                    pool: Int = 20, pdim: Int = 16,
-                   dim: Int = Dim): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
+                   dim: Int = Dim): DataFrame =
+    rpRerankOn(OperatorCaches.track(prepared(embeddings, dim)), queryPred, k,
+      pool, pdim, dim)
+
+  /** [[rpRerankTopK]] over a [[prepared]] corpus: [[exactRerank]]
+    * in the projection, then [[rerankShortlist]] in full dimension.
+    */
+  private def rpRerankOn(all: DataFrame, queryPred: Column, k: Int,
+                         pool: Int, pdim: Int, dim: Int): DataFrame = {
     require(k >= 1 && pool >= k, s"need pool >= k >= 1, got k=$k pool=$pool")
-    val all = OperatorCaches.track(prepared(embeddings, dim))
     val signs = rpSigns(pdim, dim)
     val rp = OperatorCaches.track(all.select(col("vec_id"),
-        array(signs.map(s => dot(col("v"), lit(s), dim)): _*).as("pv"))
-      .withColumn("pnrm", norm(col("pv"), pdim)))
-    val q = rp.filter(queryPred)
-      .select(col("vec_id").as("query_id"), col("pv").as("qpv"),
-        col("pnrm").as("qpnrm"))
-    val scored = q.crossJoin(rp)
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        pairCos(col("qpv"), col("qpnrm"), col("pv"), col("pnrm"), pdim)
-          .as("pcos"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("pcos").desc, col("neighbor_id"))
-    val shortlist = scored.withColumn("prn", row_number().over(w))
-      .filter(col("prn") <= pool)
-    rerankShortlist(embeddings, queryPred, shortlist, k, dim)
+        array(signs.map(s => dot(col("v"), lit(s), dim)): _*).as("v"))
+      .withColumn("nrm", norm(col("v"), pdim)))
+    val shortlist = exactRerank(
+      notSelf(queriesOf(rp, queryPred).crossJoin(rp)), pool, pdim)
+    rerankShortlist(all, queryPred, shortlist, k, dim)
   }
 
   /** Hard-negative mining over the ANN shortlist — the contrastive-
@@ -1004,6 +1018,19 @@ object Similarity {
     * and that choice is semantic — callers must pick it consciously
     * at the query site rather than inherit a hidden default.
     */
+  /** Coordinate `j`'s noise (nibble − 7.5)/128, the nibble read from
+    * the md5 hex digest `da` (j ≤ 32) or `db`. Nibble via ascii
+    * arithmetic, not the 16-branch hexNibble CASE: 64 fused CASEs were
+    * the second half of the 64 KB codegen blowout (exact-integer
+    * equivalent: '0'-'9' → 48..57, 'a'-'f' → 97..102).
+    */
+  private def nibbleEps(j: Int): Column = {
+    val a = ascii(substring(if (j <= 32) col("da") else col("db"),
+      (j - 1) % 32 + 1, 1))
+    (when(a >= 97, a - 87).otherwise(a - 48).cast("double") - lit(7.5)) /
+      lit(128.0)
+  }
+
   /** Corpus ∪ deterministically perturbed copy of every vector — the
     * near-dup benchmark substrate. The driver's synthetic embeddings
     * are unit-norm with a continuous cosine tail and NO pair above
@@ -1045,20 +1072,10 @@ object Similarity {
     val withDigests = embeddings.select(col("vec_id"), col("embedding"),
       md5(concat(lit("pert:a:"), col("vec_id").cast("string"))).as("da"),
       md5(concat(lit("pert:b:"), col("vec_id").cast("string"))).as("db"))
-    // nibble via ascii arithmetic, not the 16-branch hexNibble CASE:
-    // 64 fused CASEs were the second half of the 64 KB codegen blowout
-    // (exact-integer equivalent: '0'-'9' → 48..57, 'a'-'f' → 97..102)
-    def eps(j: Int): Column = {
-      val digest = if (j <= 32) col("da") else col("db")
-      val pos = (j - 1) % 32 + 1
-      val a = ascii(substring(digest, pos, 1))
-      val nib = when(a >= 97, a - 87).otherwise(a - 48)
-      (nib.cast("double") - lit(7.5)) / lit(128.0)
-    }
     val perturbed = withDigests.select(
       (col("vec_id") + lit(idOffset)).as("vec_id"),
       array((1 to dim).map(j =>
-        element_at(col("embedding"), j).cast("double") + eps(j)): _*)
+        element_at(col("embedding"), j).cast("double") + nibbleEps(j)): _*)
         .as("embedding"))
     orig.unionByName(perturbed)
   }
@@ -1468,26 +1485,18 @@ object Similarity {
   def annRecallCurve(embeddings: DataFrame, queryPred: Column,
                      k: Int = 3, nprobes: Seq[Int] = Seq(1, 2, 4, 8),
                      dim: Int = Dim): DataFrame = {
-    val truth = OperatorCaches.track(
-      bruteForceTopK(embeddings, queryPred, k, dim)
-        .select("query_id", "neighbor_id"))
-    // shared coarse pivots, hoisted and cached once across the nprobe
-    // rungs (r16) — same plan each rung built for itself, so values
-    // are bit-identical; only the repeated derivation disappears
+    // the frames every nprobe rung shares (corpus, pivots, and the
+    // nprobe-independent assignment) are cached once and passed to the
+    // IVF kernel (r16/r17); values equal per-rung ivfTopK calls
     val all = OperatorCaches.track(prepared(embeddings, dim))
+    val truth = OperatorCaches.track(
+      bruteForceOn(all, queryPred, k, dim).select("query_id", "neighbor_id"))
     val pivots = OperatorCaches.track(pivotArr(all, DefaultNlist))
-    // shared corpus assignment (r17): each nprobe rung re-ran the
-    // 16-pivot × dim-dot assignment pass over the whole corpus —
-    // the assignment does not depend on nprobe. Registering the
-    // tracked frame here lets every rung's plan-identical assignBy
-    // subtree hit the CacheManager instead (the rawEncoded dedupe
-    // mechanism); values unchanged.
-    OperatorCaches.track(assignBy(all, pivots, dim))
+    val assigned = OperatorCaches.track(assignBy(all, pivots, dim))
+    val queries = all.filter(queryPred)
     val aggs = recallAggs("n_truth")
     nprobes.map { np =>
-      truthHits(truth,
-          ivfTopK(embeddings, queryPred, k, nprobe = np, dim = dim,
-            pivotsOpt = Some(pivots)))
+      truthHits(truth, ivfSearch(queries, pivots, assigned, k, np, dim))
         .agg(aggs.head, aggs.tail: _*)
         .select(lit(np).as("nprobe"), col("n_hits"), col("n_truth"),
           col("recall"))
@@ -1524,56 +1533,52 @@ object Similarity {
   def annRecallLadder(embeddings: DataFrame, queryPred: Column,
                       k: Int = 3, dim: Int = Dim,
                       methods: Seq[String] = LadderMethods): DataFrame = {
-    val truth = OperatorCaches.track(
-      bruteForceTopK(embeddings, queryPred, k, dim)
-        .select("query_id", "neighbor_id"))
-    // == shared index structures, hoisted and cached ONCE (r16) ==
-    // Every untrained IVF rung builds the same first-16 coarse pivots,
-    // the two raw-PQ rungs the same 16-centroid book, and both of
-    // those the same 8-byte corpus encoding — previously each rung
-    // re-derived them from the cached corpus (plan-identical subtrees,
-    // but uncached, so each rung re-ran the agg/encode: the 8-rung
-    // ladder executed 135 driver jobs). Tracking them here lets every
-    // rung's identical subtree hit the CacheManager instead; values
-    // (and therefore recalls) are bit-identical because the hoisted
-    // frames ARE the rungs' own default plans. Lazy, so a `methods`
-    // subset only builds what its rungs reference.
+    // == shared index structures, built ONCE and passed by argument ==
+    // pivots + assignment (untrained IVF rungs), book + 8-byte encoding
+    // (raw-PQ rungs), residual frame + book (residual rungs); per-rung
+    // rebuilds ran the ladder at 135 driver jobs (r16). They ARE the
+    // rungs' default plans, so recalls are bit-identical. Lazy: a
+    // `methods` subset builds only what its rungs reference.
+    val msub = DefaultMsub
     val all = OperatorCaches.track(prepared(embeddings, dim))
+    val truth = OperatorCaches.track(
+      bruteForceOn(all, queryPred, k, dim).select("query_id", "neighbor_id"))
+    val queries = all.filter(queryPred)
     lazy val pivots = OperatorCaches.track(pivotArr(all, DefaultNlist))
+    lazy val assigned = assignBy(all, pivots, dim)
     lazy val rawBook = OperatorCaches.track(pqBook(all, DefaultKsub))
-    lazy val rawEncoded = OperatorCaches.track(
-      pqEncode(all, pivots, rawBook, DefaultMsub, dim))
-    // the trained book is paid ONCE and reused for the trained rung
-    // (mirrors q_ann_trained_rerank's single-Lloyd-round training);
-    // lazy, so a `methods` subset that skips the trained rung never
-    // trains it
-    lazy val trainedBook = kmeansCarr(
-      embeddings.filter(pmod(col("vec_id"), lit(4L)) === 0),
-      k = 16, iters = 1)
-    def withRawEncode[A](body: => A): A = { rawEncoded; body }
-    val allMethods: Seq[(String, () => DataFrame)] = Seq(
-      "ivf" -> (() => ivfTopK(embeddings, queryPred, k, dim = dim,
-        pivotsOpt = Some(pivots))),
-      "lsh" -> (() => lshTopK(embeddings, queryPred, k, dim = dim)),
-      "ivfpq" -> (() => withRawEncode(
-        ivfPqTopK(embeddings, queryPred, k, dim = dim,
-          pivotsOpt = Some(pivots), bookOpt = Some(rawBook)))),
-      "ivfpq_rerank" -> (() => withRawEncode(
-        ivfPqRerankTopK(embeddings, queryPred, k, dim = dim,
-          pivotsOpt = Some(pivots), bookOpt = Some(rawBook)))),
-      "ivfpq_residual" -> (() =>
-        ivfPqResidualTopK(embeddings, queryPred, k, dim = dim,
-          pivotsOpt = Some(pivots))),
+    lazy val rawCodes = OperatorCaches.track(
+      encodeBy(assigned, rawBook, col("v"), msub, dim))
+    lazy val resid = OperatorCaches.track(residualOf(assigned, pivots))
+    lazy val residBook = OperatorCaches.track(
+      residualBook(resid, DefaultNlist, DefaultKsub))
+    lazy val residCodes = encodeBy(resid, residBook, col("r"), msub, dim)
+    def rawPq(n: Int): DataFrame =
+      ivfPqSearch(queries, pivots, rawBook, rawCodes, n, 4, msub, dim)
+    def residualPq(n: Int): DataFrame =
+      ivfPqResidualSearch(queries, pivots, residBook, residCodes, n, 4,
+        msub, dim)
+    // ONE Lloyd round over the 25% sample, the book in both roles
+    // (mirrors q_ann_trained_rerank)
+    def trainedPq(n: Int): DataFrame = {
+      val book = kmeansCarr(
+        embeddings.filter(pmod(col("vec_id"), lit(4L)) === 0),
+        k = 16, iters = 1)
+      val tp = carrToPivotArr(book)
+      ivfPqSearch(queries, tp, book, pqEncode(all, tp, book, msub, dim), n,
+        4, msub, dim)
+    }
+    val byName: Map[String, () => DataFrame] = Map(
+      "ivf" -> (() => ivfSearch(queries, pivots, assigned, k, 4, dim)),
+      "lsh" -> (() => lshOn(all, queryPred, k, 8, dim)),
+      "ivfpq" -> (() => rawPq(k)),
+      "ivfpq_rerank" -> (() => rerankShortlist(all, queryPred, rawPq(20), k, dim)),
+      "ivfpq_residual" -> (() => residualPq(k)),
       "residual_rerank" -> (() =>
-        ivfPqResidualRerankTopK(embeddings, queryPred, k, rerank = 40,
-          dim = dim, pivotsOpt = Some(pivots))),
-      "rp_rerank" -> (() =>
-        rpRerankTopK(embeddings, queryPred, k, dim = dim)),
+        rerankShortlist(all, queryPred, residualPq(40), k, dim)),
+      "rp_rerank" -> (() => rpRerankOn(all, queryPred, k, 20, 16, dim)),
       "trained_rerank" -> (() =>
-        ivfPqRerankTopK(embeddings, queryPred, k, rerank = 40, dim = dim,
-          pivotsOpt = Some(carrToPivotArr(trainedBook)),
-          bookOpt = Some(trainedBook))))
-    val byName = allMethods.toMap
+        rerankShortlist(all, queryPred, trainedPq(40), k, dim)))
     val chosen = methods.map { m =>
       m -> byName.getOrElse(m, throw new IllegalArgumentException(
         s"annRecallLadder: unknown method $m (have ${LadderMethods})"))
@@ -1622,17 +1627,10 @@ object Similarity {
           col("vec_id").cast("string"))).as("da"),
         md5(concat(lit("clu:"), col("c").cast("string"), lit(":b:"),
           col("vec_id").cast("string"))).as("db"))
-    def eps(j: Int): Column = {
-      val digest = if (j <= 32) col("da") else col("db")
-      val pos = (j - 1) % 32 + 1
-      val a = ascii(substring(digest, pos, 1))
-      val nib = when(a >= 97, a - 87).otherwise(a - 48)
-      (nib.cast("double") - lit(7.5)) / lit(128.0)
-    }
     val noisy = withD.select(
       (col("vec_id") + lit(nCenters.toLong) * col("c")).as("vec_id"),
       array((1 to dim).map(j =>
-        element_at(col("embedding"), j) + eps(j)): _*).as("embedding"))
+        element_at(col("embedding"), j) + nibbleEps(j)): _*).as("embedding"))
     // lineage CUT, not just cached: the corpus is a FIXED-SIZE
     // nCenters·(copies+1) frame behind a `copies`-branch union of
     // md5-heavy projections, and every ladder rung re-consumes it

@@ -1916,7 +1916,7 @@ object DocOracles {
     val pivotCols = (0 until 8).map(b =>
       s"MAX(CASE WHEN block = $b THEN bkey END) AS b$b").mkString(", ")
     // composite 2-block bands, lexicographic (i, j) order — mirrors
-    // Multimodal.bandPairs exactly (28 bands of 16-bit keys)
+    // Multimodal.bandSets(2) exactly (28 bands of 16-bit keys)
     val pairs = for { i <- 0 until 8; j <- (i + 1) until 8 } yield (i, j)
     val bandSel = pairs.zipWithIndex.map { case ((i, j), b) =>
       s"SELECT id, $b AS band, b$i * 256 + b$j AS key FROM pv" }

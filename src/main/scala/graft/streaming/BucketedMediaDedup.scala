@@ -107,9 +107,7 @@ final class BucketedMediaStore(spark: SparkSession, prefix: String,
         col("frame_idx"), col("fhash"))
     img.unionByName(vid)
       .select(col("media_id"), col("kind"), col("frame_idx"), col("fhash"),
-        posexplode(array(Multimodal.bandPairs.map { case (i, j) =>
-          Multimodal.bandKeyOf(col("fhash"), i, j) }: _*))
-          .as(Seq("band", "bkey")))
+        Multimodal.bandExplode(col("fhash")))
   }
 
   /** Decode the batch once and append its fingerprint rows into the
@@ -192,9 +190,7 @@ final class BucketedMediaStore(spark: SparkSession, prefix: String,
         s"only for maxHamming <= 6; got $maxHamming")
     val batch = Multimodal.imageDHashes(media).toDF()
       .select(col("media_id"), col("dhash").as("fhash"),
-        posexplode(array(Multimodal.bandPairs.map { case (i, j) =>
-          Multimodal.bandKeyOf(col("dhash"), i, j) }: _*))
-          .as(Seq("band", "bkey")))
+        Multimodal.bandExplode(col("dhash")))
     probe(batch, "image")
       .select(col("p.media_id").as("media_id"),
         col("c.media_id").as("corpus_id"),
@@ -214,9 +210,7 @@ final class BucketedMediaStore(spark: SparkSession, prefix: String,
         s"recall only for maxHamming <= 6; got $maxHamming")
     val batch = Multimodal.videoFrameHashes(media).toDF()
       .select(col("media_id"), col("frame_idx"), col("fhash"),
-        posexplode(array(Multimodal.bandPairs.map { case (i, j) =>
-          Multimodal.bandKeyOf(col("fhash"), i, j) }: _*))
-          .as(Seq("band", "bkey")))
+        Multimodal.bandExplode(col("fhash")))
     probe(batch, "video")
       .select(col("p.media_id").as("media_id"),
         col("p.frame_idx").as("frame_idx"),

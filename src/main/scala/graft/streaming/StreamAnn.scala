@@ -80,30 +80,16 @@ object StreamAnn {
     state.copy(index = state.index.unionAll(assigned))
   }
 
-  /** Top-k search over the maintained index — identical probe shape to
-    * the batch operator: queries rank the frozen pivots row-locally,
-    * probe their `nprobe` closest inverted lists, and only those lists
-    * are scored exactly.
+  /** Top-k search over the maintained index — the batch operator's
+    * own kernel ([[Similarity.ivfSearch]]) run on the frozen pivots
+    * and the maintained inverted lists: queries rank the pivots
+    * row-locally, probe their `nprobe` closest lists, and only those
+    * lists are scored exactly.
     */
   def query(state: AnnState, queries: DataFrame, k: Int,
-            nprobe: Int = 4): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val probes = Similarity.pivotScoredBy(
-        Similarity.prepared(queries, state.dim), state.pivots, state.dim)
-      .withColumn("pp",
-        explode(slice(sort_array(col("pcs"), asc = false), 1, nprobe)))
-      .select(col("vec_id").as("query_id"), col("v").as("qv"),
-        col("nrm").as("qnrm"), (lit(0L) - col("pp")("npid")).as("plist"))
-    val scored = probes.join(state.index, col("plist") === col("list_id"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        Similarity.pairCos(col("qv"), col("qnrm"), col("v"), col("nrm"),
-          state.dim).as("cos"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id"))
-    scored.withColumn("rn", row_number().over(w)).filter(col("rn") <= k)
-      .select("query_id", "neighbor_id", "cos", "rn")
-  }
+            nprobe: Int = 4): DataFrame =
+    Similarity.ivfSearch(Similarity.prepared(queries, state.dim),
+      state.pivots, state.index, k, nprobe, state.dim)
 
   /** Collapse the index's append-only union to one checkpointed
     * segment — scheduled compaction, amortized like the other
@@ -183,29 +169,16 @@ object StreamAnn {
         state.pivots, state.book, state.msub, state.dim)
         .localCheckpoint(true)))
 
-  /** ADC top-k over the maintained code index — identical probe and
-    * ranking shape to the batch operator: queries stay exact (their
-    * ADC tables are built from raw vectors), candidates cost `msub`
-    * lookups.
+  /** ADC top-k over the maintained code index — the batch operator's
+    * own kernel ([[Similarity.ivfPqSearch]]) run on the frozen books
+    * and the maintained codes: queries stay exact (their ADC tables
+    * are built from raw vectors), candidates cost `msub` lookups.
     */
   def queryPq(state: PqAnnState, queries: DataFrame, k: Int,
               nprobe: Int = 4): DataFrame =
-    queryPqOn(state, Similarity.prepared(queries, state.dim), k, nprobe)
-
-  /** [[queryPq]] over an already-[[Similarity.prepared]] query frame,
-    * so composing operators (the rerank stage) prepare the queries
-    * exactly once.
-    */
-  private def queryPqOn(state: PqAnnState, qsrc: DataFrame, k: Int,
-                        nprobe: Int): DataFrame = {
-    val cand = Similarity.probeLists(qsrc, state.pivots, nprobe, state.dim)
-      .join(state.codes, col("plist") === col("list_id"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"), col("codes"))
-    Similarity.adcRank(cand,
-      Similarity.pqAdcTables(qsrc, state.book, state.msub, state.dim),
-      k, state.msub)
-  }
+    Similarity.ivfPqSearch(Similarity.prepared(queries, state.dim),
+      state.pivots, state.book, state.codes, k, nprobe, state.msub,
+      state.dim)
 
   /** The production two-stage serving layout over the maintained code
     * index: [[queryPq]] ranks the probed candidates on compressed
@@ -233,7 +206,8 @@ object StreamAnn {
                     nprobe: Int = 4): DataFrame = {
     val qsrc = graft.operators.OperatorCaches.track(
       Similarity.prepared(queries, state.dim))
-    val shortlist = queryPqOn(state, qsrc, rerank, nprobe)
+    val shortlist = Similarity.ivfPqSearch(qsrc, state.pivots, state.book,
+        state.codes, rerank, nprobe, state.msub, state.dim)
       .select(col("query_id"), col("neighbor_id"))
     val q = qsrc.select(col("vec_id").as("query_id"), col("v").as("qv"),
       col("nrm").as("qnrm"))

@@ -20,8 +20,8 @@ import graft.multimodal.Multimodal.MediaRow
   *     mapPartitions kernel the batch operator uses — bytes never
   *     leave the partition, and mapPartitions is streaming-legal;
   *   - the banded candidate join uses the SAME composite 2-block
-  *     16-bit band enumeration ([[Multimodal.bandPairs]] /
-  *     `bandKeyOf` / `firstSharedBand` — one definition, so stream
+  *     16-bit band enumeration ([[Multimodal.bandExplode]] /
+  *     `firstSharedBand` — one definition, so stream
   *     and batch bucket layouts agree bit-for-bit by construction);
   *   - the query is STATELESS: append output mode, no watermark, no
   *     aggregation — per-batch cost is O(|batch| · 28) index probes
@@ -51,9 +51,7 @@ object StreamImageDedup {
     val h = Multimodal.imageDHashes(corpus).toDF()
     h.select(col("media_id").as("corpus_id"),
         col("dhash").as("corpus_hash"),
-        posexplode(array(Multimodal.bandPairs.map { case (i, j) =>
-          Multimodal.bandKeyOf(col("dhash"), i, j) }: _*))
-          .as(Seq("band", "bkey")))
+        Multimodal.bandExplode(col("dhash")))
   }
 
   /** Classify a stream of media rows against the standing corpus:
@@ -69,9 +67,7 @@ object StreamImageDedup {
         s"recall only for maxHamming <= 6; got $maxHamming")
     val probes = Multimodal.imageDHashes(stream).toDF()
       .select(col("media_id"), col("dhash"),
-        posexplode(array(Multimodal.bandPairs.map { case (i, j) =>
-          Multimodal.bandKeyOf(col("dhash"), i, j) }: _*))
-          .as(Seq("band", "bkey")))
+        Multimodal.bandExplode(col("dhash")))
     probes.join(bandIdx, Seq("band", "bkey"))
       .filter(col("media_id") =!= col("corpus_id"))
       .filter(col("band") ===

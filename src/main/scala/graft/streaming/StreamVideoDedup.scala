@@ -22,7 +22,7 @@ import graft.multimodal.Multimodal.MediaRow
   *     one hamming space with images, so a video arrival can also be
   *     probed against an IMAGE index and vice versa);
   *   - the banded candidate join uses the SAME composite 2-block
-  *     band enumeration ([[Multimodal.bandPairs]] / `bandKeyOf` /
+  *     band enumeration ([[Multimodal.bandExplode]] /
   *     `firstSharedBand`) — stream and batch bucket layouts agree
   *     bit-for-bit by construction;
   *   - the frame-match emission is STATELESS (append mode, no
@@ -56,9 +56,7 @@ object StreamVideoDedup {
     fh.select(col("media_id").as("corpus_id"),
         col("frame_idx").as("corpus_frame"),
         col("fhash").as("corpus_hash"),
-        posexplode(array(Multimodal.bandPairs.map { case (i, j) =>
-          Multimodal.bandKeyOf(col("fhash"), i, j) }: _*))
-          .as(Seq("band", "bkey")))
+        Multimodal.bandExplode(col("fhash")))
   }
 
   /** Classify a stream of video rows against the standing corpus:
@@ -74,9 +72,7 @@ object StreamVideoDedup {
         s"recall only for maxHamming <= 6; got $maxHamming")
     val probes = Multimodal.videoFrameHashes(stream).toDF()
       .select(col("media_id"), col("frame_idx"), col("fhash"),
-        posexplode(array(Multimodal.bandPairs.map { case (i, j) =>
-          Multimodal.bandKeyOf(col("fhash"), i, j) }: _*))
-          .as(Seq("band", "bkey")))
+        Multimodal.bandExplode(col("fhash")))
     probes.join(bandIdx, Seq("band", "bkey"))
       .filter(col("media_id") =!= col("corpus_id"))
       .filter(col("band") ===

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
@@ -13,12 +11,12 @@ import org.scalatest.funsuite.AnyFunSuite
   * must resume from the checkpoint and the sink must contain every
   * input row exactly once.
   */
-class CheckpointSpec extends AnyFunSuite {
+class CheckpointSpec extends AnyFunSuite with TempDirs {
   import TestSpark._
   import spark.implicits._
 
   test("streaming query resumes from checkpoint with exactly-once sink output") {
-    val root = Files.createTempDirectory("graft_ckpt").toFile.getAbsolutePath
+    val root = tempDir("graft_ckpt")
     val (srcDir, outDir, ckpt) = (s"$root/src", s"$root/out", s"$root/ckpt")
     new java.io.File(srcDir).mkdirs()
 

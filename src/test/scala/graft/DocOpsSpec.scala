@@ -264,6 +264,50 @@ class DocOpsSpec extends AnyFunSuite {
     } finally graft.operators.OperatorCaches.releaseAll()
   }
 
+  test("ann recall ladder: the PQ rungs read the one cached encoding and residual frame") {
+    import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project}
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    val emb = graft.sources.Tables(spark,
+      sf.stripSuffix("sf0.001") + "sf0.01", "embeddings")
+    val ladder = Similarity.annRecallLadder(emb, col("vec_id") < 8, k = 3,
+      methods = Seq("ivfpq", "ivfpq_rerank", "ivfpq_residual",
+        "residual_rerank"))
+    try {
+      // the raw encoding and the residual frame the ladder builds once,
+      // rebuilt here at the shipped defaults: each plan must resolve to
+      // a registered cache
+      def cacheOf(df: org.apache.spark.sql.DataFrame, what: String) =
+        df.queryExecution.withCachedData match {
+          case r: InMemoryRelation => r
+          case p => fail(s"the $what is not cached:\n$p")
+        }
+      val all = Similarity.prepared(emb, Similarity.Dim)
+      val pivots = Similarity.pivotArr(all, Similarity.DefaultNlist)
+      val rawCodes = cacheOf(Similarity.pqEncode(all, pivots,
+        Similarity.pqBook(all, Similarity.DefaultKsub),
+        Similarity.DefaultMsub, Similarity.Dim), "raw encoding")
+      val resid = cacheOf(Similarity.residualFrame(emb), "residual frame")
+      val plan = ladder.queryExecution.withCachedData
+      def reads(cache: InMemoryRelation): Int = plan.collect {
+        case r: InMemoryRelation if r.cacheBuilder eq cache.cacheBuilder => r
+      }.size
+      assert(reads(rawCodes) == 2,
+        s"${reads(rawCodes)} of 2 raw-PQ rungs read the encoding cache")
+      assert(reads(resid) == 2,
+        s"${reads(resid)} of 2 residual rungs read the residual cache")
+      // no rung encodes the corpus itself (a codes projection over a
+      // live assignment) or projects its own residuals
+      def outputs(p: LogicalPlan, name: String) = p.output.exists(_.name == name)
+      val ownEncode = plan.collect {
+        case p: Project if outputs(p, "codes") &&
+          p.exists(c => c.isInstanceOf[Project] && outputs(c, "best_cos")) => p
+      }
+      assert(ownEncode.isEmpty, s"uncached encode subtrees:\n${ownEncode.mkString}")
+      val ownResid = plan.collect { case p: Project if outputs(p, "r") => p }
+      assert(ownResid.isEmpty, s"uncached residual subtrees:\n${ownResid.mkString}")
+    } finally graft.operators.OperatorCaches.releaseAll()
+  }
+
   test("IVF-PQ ADC: probing all lists equals an independent full-ADC ranking") {
     val emb = graft.sources.Tables(spark, sf, "embeddings")
     // independent spelling of full ADC: reconstruct each vector from

@@ -20,7 +20,7 @@ import graft.streaming.TransactionPipeline
   * the change exists for: a streaming micro-batch with no exchange, no
   * adaptive wrapper, and one job.
   */
-class EnrichSpec extends AnyFunSuite {
+class EnrichSpec extends AnyFunSuite with TempDirs {
   import TestSpark._
   import spark.implicits._
 
@@ -143,7 +143,7 @@ class EnrichSpec extends AnyFunSuite {
 
   test("a log-fed pipeline micro-batch: no exchange, no AQE, lookup in codegen, one job") {
     assert(spark.conf.get("spark.sql.adaptive.enabled") == "true", "session defaults expected")
-    val root = java.nio.file.Files.createTempDirectory("graft_enrich_plan").toFile.getAbsolutePath
+    val root = tempDir("graft_enrich_plan")
     val (in, out, ckpt) = (s"$root/in", s"$root/out", s"$root/ckpt")
     def produce(ids: Seq[String]): Unit =
       ids.map(id => (id, txJson(id, "u1", "m1"))).toDF("key", "value")

@@ -7,7 +7,7 @@ import graft.functions.FeatureRegistry
 /** A10 registry semantics: the catalog drives profiling, null rates
   * surface real absence, categorical shares are a distribution.
   */
-class FeatureRegistrySpec extends AnyFunSuite {
+class FeatureRegistrySpec extends AnyFunSuite with TempDirs {
   import TestSpark._
 
   private lazy val events = sources.Tables(spark, sf, "events")
@@ -43,8 +43,7 @@ class FeatureRegistrySpec extends AnyFunSuite {
   test("feature store round trip: persisted values audit back to the " +
        "source, files own disjoint feature spans") {
     import org.apache.spark.sql.functions._
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_fstore_spec").toString
+    val dir = tempDir("graft_fstore_spec")
     val audit = graft.functions.FeatureStoreOps.roundTrip(events, dir)
       .collect().map(r => r.getString(1) -> r).toMap
     // every registered feature came back, with name/type recovered

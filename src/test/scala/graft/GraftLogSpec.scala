@@ -18,12 +18,11 @@ import graft.streaming.TransactionPipeline
   * broker-backed Kafka path is not (no kafka jars ship with the
   * image; that absence is pinned elsewhere).
   */
-class GraftLogSpec extends AnyFunSuite {
+class GraftLogSpec extends AnyFunSuite with TempDirs {
   import TestSpark._
   import spark.implicits._
 
-  private def tmp(prefix: String): String =
-    Files.createTempDirectory(prefix).toFile.getAbsolutePath
+  private def tmp(prefix: String): String = tempDir(prefix)
 
   test("batch round-trip: dense per-partition offsets, key co-partitioning, byte-exact values") {
     val dir = tmp("glog_rt") + "/log"

@@ -14,12 +14,11 @@ import graft.sources.JdbcCatalog
   * scalar columns, as here — the Postgres driver itself stays absent,
   * pinned by SourceFormatsSpec).
   */
-class JdbcCatalogSpec extends AnyFunSuite {
+class JdbcCatalogSpec extends AnyFunSuite with TempDirs {
   import TestSpark._
 
   private lazy val url = JdbcCatalog.derbyUrl(
-    java.nio.file.Files.createTempDirectory("graft_derby")
-      .resolve("catalog").toString)
+    tempDir("graft_derby") + "/catalog")
 
   // scalar profile catalog (init.sql users: ids, risk, status — no
   // array columns; JDBC tables are flat like the reference DDL)

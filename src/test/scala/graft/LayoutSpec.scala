@@ -5,7 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.Layout
 
-class LayoutSpec extends AnyFunSuite {
+class LayoutSpec extends AnyFunSuite with TempDirs {
   import TestSpark._
   import spark.implicits._
 
@@ -148,8 +148,7 @@ class LayoutSpec extends AnyFunSuite {
   }
 
   test("zorder layout prunes at the scan: a key-range read touches a fraction of rows") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_zprune")
-      .toString + "/events_z"
+    val dir = tempDir("graft_zprune") + "/events_z"
     val keyed = Layout.eventZorder(graft.sources.Tables(spark, sf, "events"))
     val total = keyed.count()
     Layout.writeRangeLayout(keyed, "zkey", numFiles = 8, path = dir)
@@ -169,8 +168,7 @@ class LayoutSpec extends AnyFunSuite {
   }
 
   test("range layout write yields files with disjoint key spans") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_layout")
-      .toString + "/events_z"
+    val dir = tempDir("graft_layout") + "/events_z"
     Layout.writeRangeLayout(
       Layout.eventZorder(graft.sources.Tables(spark, sf, "events")),
       "zkey", numFiles = 4, path = dir)

@@ -10,7 +10,7 @@ import graft.sources.Tables
 /** Physical-plan assertions: the plan shapes that matter at 100 TB,
   * pinned as tests so a refactor that silently degrades them fails.
   */
-class PlanSpec extends AnyFunSuite {
+class PlanSpec extends AnyFunSuite with TempDirs {
   import TestSpark._
 
   private def explainStr(df: org.apache.spark.sql.DataFrame): String =
@@ -72,8 +72,7 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("partition pruning: hive-partitioned layout prunes at the scan") {
-    val root = java.nio.file.Files.createTempDirectory("graft_part")
-      .toFile.getAbsolutePath
+    val root = tempDir("graft_part")
     t("events").write.partitionBy("event_type").parquet(s"$root/ev")
     val df = spark.read.parquet(s"$root/ev")
       .filter(col("event_type") === "error")
@@ -631,8 +630,7 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("graftlog scan: reader parallelism equals the log's partition count") {
-    val dir = java.nio.file.Files.createTempDirectory("glog_plan")
-      .toFile.getAbsolutePath + "/log"
+    val dir = tempDir("glog_plan") + "/log"
     import spark.implicits._
     (1 to 200).map(i => (s"k$i", s"v$i")).toDF("key", "value")
       .write.format("graftlog").option("path", dir)
@@ -663,8 +661,7 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("compacted graftlog: scan stays partition-parallel; changelog read shape unchanged") {
-    val dir = java.nio.file.Files.createTempDirectory("glog_cplan")
-      .toFile.getAbsolutePath + "/log"
+    val dir = tempDir("glog_cplan") + "/log"
     import spark.implicits._
     (1 to 200).map(i => (s"k${i % 20}", s"v$i")).toDF("key", "value")
       .write.format("graftlog").option("path", dir)
@@ -820,7 +817,7 @@ class PlanSpec extends AnyFunSuite {
     import spark.implicits._
     // read from files: over a local relation the optimizer would fold
     // the whole projection away and leave no codegen stage to inspect
-    val dir = java.nio.file.Files.createTempDirectory("graft_pipeline_plan").toFile
+    val dir = new java.io.File(tempDir("graft_pipeline_plan"))
     (1 to 40).map { i =>
       s"""{"transaction_id":"t$i","user_id":"u${i % 3}","merchant_id":"m${i % 2}",""" +
         s""""amount":${i * 37.5},"timestamp":"2024-01-0${1 + i % 7}T0${i % 10}:00:00Z",""" +

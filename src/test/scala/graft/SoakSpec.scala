@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -23,12 +21,12 @@ import graft.streaming.{CurationLoop, StreamClusters}
   *   3. the maintained labels equal the batch connected-components
   *      fixpoint over the full corpus at the end.
   */
-class SoakSpec extends AnyFunSuite {
+class SoakSpec extends AnyFunSuite with TempDirs {
   import TestSpark._
   import spark.implicits._
 
   test("graftlog-fed curation loop: flat maintenance, scheduled consolidation, final label parity") {
-    val root = Files.createTempDirectory("graft_soakspec").toFile.getAbsolutePath
+    val root = tempDir("graft_soakspec")
     val logDir = s"$root/log"
     // 300 docs: unique base text + every 10th a near-dup family pair
     val docs = (0 until 300).map { i =>

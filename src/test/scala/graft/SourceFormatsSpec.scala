@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -11,11 +9,11 @@ import graft.sources.Tables
   * through every bundled columnar/text format (parquet is the
   * primary; ORC, JSON, CSV prove the storage-agnostic loader story).
   */
-class SourceFormatsSpec extends AnyFunSuite {
+class SourceFormatsSpec extends AnyFunSuite with TempDirs {
   import TestSpark._
 
   test("events round-trip through ORC, JSON, and CSV with equal content") {
-    val root = Files.createTempDirectory("graft_fmt").toFile.getAbsolutePath
+    val root = tempDir("graft_fmt")
     val events = Tables(spark, sf, "events")
     val checksum = events.agg(
       sum(crc32(concat_ws("|", col("event_id"), col("user_id"),
@@ -61,8 +59,7 @@ class SourceFormatsSpec extends AnyFunSuite {
   test("keyed Avro producer shape round-trips through the graftlog") {
     import graft.sources.AvroWire
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("avro_keyed_log")
-      .toFile.getAbsolutePath
+    val root = tempDir("avro_keyed_log")
     val dir = s"$root/log"
     val events = Tables(spark, sf, "events")
       .select(col("user_id").cast("string").as("key"),
@@ -380,8 +377,7 @@ class SourceFormatsSpec extends AnyFunSuite {
     // different schema versions; the reader must union them without a
     // rewrite. v1 files lack the later `score` column.
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft_evolve")
-      .toFile.getAbsolutePath
+    val root = tempDir("graft_evolve")
     Seq((1L, "a"), (2L, "b")).toDF("id", "tag")
       .write.parquet(s"$root/p=1")
     Seq((3L, "c", 0.5), (4L, "d", 0.9)).toDF("id", "tag", "score")

@@ -9,7 +9,7 @@ import graft.sources.Tables
   * DataFrame-API results — the "SQL surface" a reference user would
   * expect (`spark.sql(...)` parity).
   */
-class SqlSurfaceSpec extends AnyFunSuite {
+class SqlSurfaceSpec extends AnyFunSuite with TempDirs {
   import TestSpark._
 
   private val ansiCompatible =
@@ -72,8 +72,7 @@ class SqlSurfaceSpec extends AnyFunSuite {
     // one spark.sql text — parity with the DataFrame path proves the
     // DSv2 table surface carries a real green query end-to-end.
     import graft.sources.log.GraftLog
-    val dir = java.nio.file.Files.createTempDirectory("glog_sqlq").toFile
-      .getAbsolutePath + "/log"
+    val dir = tempDir("glog_sqlq") + "/log"
     val events = spark.read.parquet(s"$sf/events.parquet")
     val viaDf = GraftLog.eventStatsThroughLog(events, dir)
       .collect().map(_.toSeq.map(String.valueOf).mkString("|")).sorted.toSeq

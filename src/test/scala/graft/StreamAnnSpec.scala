@@ -6,7 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.Similarity
 import graft.streaming.StreamAnn
 
-class StreamAnnSpec extends AnyFunSuite {
+class StreamAnnSpec extends AnyFunSuite with TempDirs {
   import TestSpark._
 
   private lazy val emb = graft.sources.Tables(spark, sf, "embeddings")
@@ -143,8 +143,7 @@ class StreamAnnSpec extends AnyFunSuite {
     def vecPart(m: Long) = col("vec_id") % 3 === m
     var ann = StreamAnn.build(emb.filter(vecPart(0) || col("vec_id") < 16))
     ann = StreamAnn.ingest(ann, emb.filter(vecPart(1) && col("vec_id") >= 16))
-    val dir = java.nio.file.Files.createTempDirectory("graft_annstore")
-      .toFile.getAbsolutePath
+    val dir = tempDir("graft_annstore")
     StreamAnn.save(ann, dir)
     val loaded = StreamAnn.load(spark, dir)
     assert(loaded.nlist == ann.nlist && loaded.dim == ann.dim)

@@ -6,7 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.Retrieval
 import graft.streaming.StreamIndex
 
-class StreamIndexSpec extends AnyFunSuite {
+class StreamIndexSpec extends AnyFunSuite with TempDirs {
   import TestSpark._
 
   private lazy val docs = graft.sources.Tables(spark, sf, "documents")
@@ -37,8 +37,7 @@ class StreamIndexSpec extends AnyFunSuite {
       st = StreamIndex.ingest(st,
         docs.filter(pmod(col("doc_id"), lit(3)) === i))
     }
-    val dir = java.nio.file.Files.createTempDirectory("graft_idxstore")
-      .toFile.getAbsolutePath
+    val dir = tempDir("graft_idxstore")
     StreamIndex.save(st, dir)
     val loaded = StreamIndex.load(spark, dir)
     assert(key(StreamIndex.query(loaded, terms, k = 20)) ==

@@ -1,9 +1,7 @@
 package graft
 
-import java.nio.file.Files
 import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.commons.io.FileUtils
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
@@ -23,7 +21,7 @@ import graft.sources.Tables
   * a repeated read starts no Spark job, yet reads exactly what an
   * uncached `spark.read.parquet` reads.
   */
-class TablesSpec extends AnyFunSuite {
+class TablesSpec extends AnyFunSuite with TempDirs {
   import TestSpark._
 
   // the sf0.01 tables next to the session's default sf0.001 ones
@@ -51,10 +49,8 @@ class TablesSpec extends AnyFunSuite {
     n.get()
   }
 
-  private def withTempDir(body: String => Unit): Unit = {
-    val dir = Files.createTempDirectory("graft_tables")
-    try body(dir.toString) finally FileUtils.deleteDirectory(dir.toFile)
-  }
+  private def withTempDir(body: String => Unit): Unit =
+    body(tempDir("graft_tables"))
 
   private def sameRows(a: DataFrame, b: DataFrame): Boolean =
     a.count() == b.count() && a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty
