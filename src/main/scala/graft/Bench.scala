@@ -79,9 +79,11 @@ object Bench {
   private[graft] def force(df: DataFrame): Long =
     df.queryExecution.toRdd.count()
 
-  /** A completed stage: seconds, tasks, first line of its call site. */
+  /** A completed stage: seconds, tasks, first line of its call site,
+    * and the RDD-scope name of its last scoped RDD (e.g. `Exchange`).
+    */
   private[graft] final case class StageRun(sec: Double, tasks: Int,
-                                           site: String)
+                                           site: String, scope: String)
 
   /** One timed run: wall seconds plus what the listener saw meanwhile —
     * driver jobs, submitted tasks, completed stages with the three
@@ -107,7 +109,9 @@ object Bench {
       val i = e.stageInfo
       val sec = (for (a <- i.completionTime; b <- i.submissionTime)
         yield (a - b) / 1000.0).getOrElse(-1.0)
-      stages.add(StageRun(sec, i.numTasks, i.name.takeWhile(_ != '\n')))
+      val scope = i.rddInfos.sortBy(-_.id).flatMap(_.scope).headOption
+        .map(_.name).getOrElse("")
+      stages.add(StageRun(sec, i.numTasks, i.name.takeWhile(_ != '\n'), scope))
     }
     override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
       if (e.taskMetrics != null) {
@@ -427,7 +431,8 @@ object Bench {
     "wall ratio between cpu counts is attributable to driver-job latency, " +
     "not to ignored cores; the same listener and min-time run give each " +
     "query's stage profile: stages (completed stages), top_stages (the " +
-    "three longest: seconds, tasks, first line of the call site) and " +
+    "three longest: seconds, tasks, first line of the call site, RDD " +
+    "scope name of the stage's last scoped RDD) and " +
     "executor_run_s/executor_cpu_s (executor run and CPU time summed over " +
     "the run's tasks)"
 
@@ -665,7 +670,7 @@ object Bench {
       "jobs" -> perQuery(_.jobs), "tasks" -> perQuery(_.tasks),
       "stages" -> perQuery(_.stages),
       "top_stages" -> perQuery(_.top.map(st => jsonObject("sec" -> st.sec,
-        "tasks" -> st.tasks, "site" -> st.site))),
+        "tasks" -> st.tasks, "site" -> st.site, "scope" -> st.scope))),
       "executor_run_s" -> perQuery(_.execRunMs / 1000.0),
       "executor_cpu_s" -> perQuery(p => r3(p.execCpuNs / 1e9)),
       "runs" -> jsonObject(allRuns.toSeq.map { case (k, rs) =>

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.operators.BandedPairs
+
 /** Multimodal (image/audio/video) column plumbing for a training-data
   * pipeline: media as opaque BINARY columns with typed metadata,
   * processed batch-wise with bounded memory.
@@ -623,42 +625,27 @@ object Multimodal {
   private[graft] def bandSets(blocks: Int): IndexedSeq[Seq[Int]] =
     (0 until 8).combinations(blocks).map(_.toSeq).toIndexedSeq
 
-  /** Composite (8·blocks)-bit band key over a 64-bit hash — ONE
-    * definition for batch, stream, store, and the DuckDB oracle
-    * mirrors, so bucket layouts agree bit-for-bit by construction.
+  /** The composite band keys of a 64-bit hash, one per [[bandSets]]
+    * entry — ONE definition for batch, stream, store, and the DuckDB
+    * oracle mirrors, so bucket layouts agree bit-for-bit.
     */
-  private[graft] def bandKeyOfSet(c: Column, idxs: Seq[Int]): Column = {
-    def blockOf(b: Int): Column =
-      shiftrightunsigned(c, b * 8).bitwiseAND(lit(255L))
-    idxs.map(blockOf).reduceLeft((acc, blk) => acc * lit(256L) + blk)
-  }
+  private[graft] def hammingKeys(blocks: Int): BandedPairs.Keys =
+    h => bandSets(blocks).map(BandedPairs.byteBlocks(h, _))
 
-  /** (band, bkey) rows of a 64-bit hash column, one per 2-block band
-    * ([[bandSets]](2): the 28 (i, j) byte-block pairs the image,
-    * stream and store faces ship as their default) — the band explode
-    * every hamming-family join keys on.
+  /** (band, bkey) rows of a 64-bit hash column over the 28 2-block
+    * bands the stream and store faces ship.
     */
   private[graft] def bandExplode(h: Column): Column =
-    posexplode(array(bandSets(2).map(bandKeyOfSet(h, _)): _*))
-      .as(Seq("band", "bkey"))
+    BandedPairs.explode(hammingKeys(2)(h))
 
-  /** Index of the FIRST band on which two hashes agree — the
-    * candidate-dedup rule shared by batch and stream (a candidate
-    * pair is kept only at this band, so the banded join never needs
-    * a distinct shuffle).
+  /** `blocks`-block bands find every pair within hamming 8 − blocks
+    * (some `blocks` clean blocks remain, by pigeonhole); reject more.
     */
-  private[graft] def firstSharedBandSet(a: Column, b: Column,
-                                        blocks: Int): Column = {
-    val sets = bandSets(blocks)
-    sets.zipWithIndex.tail.foldLeft(
-      when(bandKeyOfSet(a, sets.head) === bandKeyOfSet(b, sets.head), 0)
-    ) { case (acc, (s, bandIdx)) =>
-      acc.when(bandKeyOfSet(a, s) === bandKeyOfSet(b, s), bandIdx)
-    }
-  }
-
-  private[graft] def firstSharedBand(a: Column, b: Column): Column =
-    firstSharedBandSet(a, b, 2)
+  private[graft] def requireFullRecall(op: String, maxHamming: Int,
+                                       blocks: Int): Unit =
+    require(maxHamming <= 8 - blocks,
+      s"$op: composite $blocks-block bands guarantee full recall only " +
+        s"for maxHamming <= ${8 - blocks}; got $maxHamming")
 
   /** Hamming near-duplicate pairs over 64-bit perceptual hashes — the
     * image leg of the dedup family. Candidates come from an equi-join
@@ -666,8 +653,8 @@ object Multimodal {
     * 28 bands): a pair within hamming d dirties at most d blocks, so
     * d ≤ 6 leaves ≥ 2 clean blocks and therefore SOME clean block
     * PAIR — full recall by pigeonhole. Each candidate is kept only at
-    * its FIRST clean band (row-local when-chain — no distinct
-    * shuffle), then verified by exact `bit_count(xor)`.
+    * its FIRST clean band ([[BandedPairs]] — no distinct shuffle),
+    * then verified by exact `bit_count(xor)`.
     *
     * Why composite and not single-byte bands: pair volume is
     * Σ per-(band, key) bucket². Perceptual hashes of a diverse corpus
@@ -682,19 +669,12 @@ object Multimodal {
     */
   def imageNearDup(hashes: DataFrame, maxHamming: Int = 6,
                    bandBlocks: Int = 2): DataFrame = {
-    require(maxHamming <= 8 - bandBlocks,
-      s"imageNearDup: composite $bandBlocks-block bands guarantee full " +
-        s"recall only for maxHamming <= ${8 - bandBlocks} " +
-        s"(>= $bandBlocks clean blocks needed); got $maxHamming")
-    val sets = bandSets(bandBlocks)
+    requireFullRecall("imageNearDup", maxHamming, bandBlocks)
+    val keys = hammingKeys(bandBlocks)
     val bd = hashes.select(col("media_id"), col("ahash"),
-      posexplode(array(sets.map(s =>
-        bandKeyOfSet(col("ahash"), s)): _*)).as(Seq("band", "bkey")))
-    bd.as("a").join(bd.as("b"),
-        col("a.band") === col("b.band") && col("a.bkey") === col("b.bkey") &&
-          col("a.media_id") < col("b.media_id"))
-      .filter(col("a.band") ===
-        firstSharedBandSet(col("a.ahash"), col("b.ahash"), bandBlocks))
+      BandedPairs.explode(keys(col("ahash"))))
+    BandedPairs.pairs(bd, bd, keys, "ahash", "ahash",
+        col("a.media_id") < col("b.media_id"))
       .select(col("a.media_id").as("img_a"), col("b.media_id").as("img_b"),
         bit_count(col("a.ahash").bitwiseXOR(col("b.ahash"))).as("hamming"))
       .filter(col("hamming") <= maxHamming)
@@ -998,7 +978,7 @@ object Multimodal {
     * frame (static scenes, black frames) would inflate past the
     * threshold from one genuinely shared frame (r15 ADVICE). Frame
     * candidates come from the SAME composite-band LSH as the image
-    * operator ([[bandExplode]] / [[firstSharedBand]] —
+    * operator ([[hammingKeys]] through [[BandedPairs]] —
     * one definition), verified by exact hamming, then rolled up per
     * video pair ([[rollupFramePairs]], shared verbatim with the
     * streaming twin [[graft.streaming.StreamVideoDedup]]).
@@ -1018,24 +998,17 @@ object Multimodal {
     */
   def videoNearDup(media: Dataset[MediaRow], minSharedFrames: Int = 2,
                    maxHamming: Int = 6, bandBlocks: Int = 2): DataFrame = {
-    require(maxHamming <= 8 - bandBlocks,
-      s"videoNearDup: composite $bandBlocks-block bands guarantee full " +
-        s"recall only for maxHamming <= ${8 - bandBlocks}; got $maxHamming")
-    val sets = bandSets(bandBlocks)
-    val fh = videoFrameHashes(media).toDF()
-    val bd = fh.select(col("media_id"), col("frame_idx"), col("fhash"),
-      posexplode(array(sets.map(s =>
-        bandKeyOfSet(col("fhash"), s)): _*)).as(Seq("band", "bkey")))
-    val framePairs = bd.as("a").join(bd.as("b"),
-        col("a.band") === col("b.band") && col("a.bkey") === col("b.bkey") &&
-          col("a.media_id") < col("b.media_id"))
-      .filter(col("a.band") ===
-        firstSharedBandSet(col("a.fhash"), col("b.fhash"), bandBlocks))
-      .filter(bit_count(col("a.fhash").bitwiseXOR(col("b.fhash")))
-        <= maxHamming)
+    requireFullRecall("videoNearDup", maxHamming, bandBlocks)
+    val keys = hammingKeys(bandBlocks)
+    val bd = videoFrameHashes(media).toDF()
+      .select(col("media_id"), col("frame_idx"), col("fhash"),
+        BandedPairs.explode(keys(col("fhash"))))
+    val framePairs = BandedPairs.pairs(bd, bd, keys, "fhash", "fhash",
+        col("a.media_id") < col("b.media_id"))
       .select(col("a.media_id").as("vid_a"), col("a.frame_idx").as("frame_a"),
         col("b.media_id").as("vid_b"), col("b.frame_idx").as("frame_b"),
         bit_count(col("a.fhash").bitwiseXOR(col("b.fhash"))).as("hamming"))
+      .filter(col("hamming") <= maxHamming)
     rollupFramePairs(framePairs, minSharedFrames)
   }
 

@@ -283,7 +283,7 @@ object Dedup {
                          maxDocFreq: Long = 1000, numHashes: Int = 8,
                          bands: Int = 2): DataFrame = {
     val sh = OperatorCaches.track(shingles(docs, n, maxDocFreq))
-    // cached: the banded signature view is consumed 4× inside bandPairs
+    // cached: the signature view is read by both sides of bandPairs
     val cand = bandPairs(OperatorCaches.track(signaturesFrom(sh, numHashes)),
       numHashes, bands)
     val inter = cand
@@ -518,31 +518,35 @@ object Dedup {
           .as("est_jaccard"))
   }
 
-  /** (doc_id, band, bkey) LSH band keys from a signature frame
-    * (h0..h{n-1} columns) — the probe structure shared by the pair
-    * self-join and the incremental (batch-vs-corpus) semi-join.
+  /** (doc_id, bkeys, band, bkey) LSH band rows of a signature frame
+    * (h0..h{n-1}): a band's key is the md5 of its rows joined by "|".
     */
-  private[graft] def bandKeys(sigs: DataFrame, numHashes: Int,
-                              bands: Int): DataFrame = {
+  private def bandRows(sigs: DataFrame, numHashes: Int,
+                       bands: Int): DataFrame = {
     val rows = numHashes / bands
-    (0 until bands).map { b =>
-      val key = md5(concat_ws("|",
-        (0 until rows).map(r => col(s"h${b * rows + r}")): _*))
-      sigs.select(col("doc_id"), lit(b).as("band"), key.as("bkey"))
-    }.reduce(_ unionAll _)
+    val keys = (0 until bands).map(b => md5(concat_ws("|",
+      (0 until rows).map(r => col(s"h${b * rows + r}")): _*)))
+    sigs.select(col("doc_id"), array(keys: _*).as("bkeys"))
+      .select(col("doc_id"), col("bkeys"),
+        BandedPairs.explode(BandedPairs.arrayKeys(bands)(col("bkeys"))))
   }
 
+  /** (doc_id, band, bkey) LSH band keys — the probe structure of the
+    * incremental (batch-vs-corpus) semi-join and the curation indexes.
+    */
+  private[graft] def bandKeys(sigs: DataFrame, numHashes: Int,
+                              bands: Int): DataFrame =
+    bandRows(sigs, numHashes, bands).select("doc_id", "band", "bkey")
+
   /** Band a signature frame and self-join on the band buckets —
-    * shared by both MinHash variants.
+    * shared by both MinHash variants and the banded Jaccard.
     */
   private def bandPairs(sigs: DataFrame, numHashes: Int,
                         bands: Int): DataFrame = {
-    val banded = bandKeys(sigs, numHashes, bands)
-    banded.as("a").join(banded.as("b"),
-        col("a.band") === col("b.band") && col("a.bkey") === col("b.bkey") &&
-        col("a.doc_id") < col("b.doc_id"))
+    val banded = bandRows(sigs, numHashes, bands)
+    BandedPairs.pairs(banded, banded, BandedPairs.arrayKeys(bands),
+        "bkeys", "bkeys", col("a.doc_id") < col("b.doc_id"))
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      .distinct()
   }
 
   /** MinHash-LSH candidate pairs: band the signature (rows-per-band
@@ -550,7 +554,7 @@ object Dedup {
     */
   def minhashCandidates(docs: DataFrame, numHashes: Int = 8,
                         bands: Int = 2): DataFrame =
-    // cached: the banded view is consumed 4× (2 bands × 2 join sides)
+    // cached: the signature view is read by both join sides
     bandPairs(OperatorCaches.track(minhashSignatures(docs, numHashes)),
       numHashes, bands)
 
@@ -723,29 +727,20 @@ object Dedup {
     * per distinct signature) where the id is the group representative.
     */
   private def sigBlockPairs(sig: DataFrame, maxHamming: Int): DataFrame = {
-    val blocks = (0 until 4).map(i =>
-      sig.withColumn("block", lit(i))
-        .withColumn("bkey", expr(s"(simhash DIV ${1L << (i * 8)}) % 256")))
-      .reduce(_ unionAll _)
-    // a pair sharing k byte-blocks would join k times — keep it only at
-    // its FIRST shared block (row-local when-chain over the two carried
-    // signatures) instead of paying a distinct shuffle per candidate
-    def byteOf(x: Column, b: Int): Column =
-      expr(s"(${x.toString} DIV ${1L << (b * 8)}) % 256")
-    val firstShared = (1 until 4).foldLeft(
-      when(byteOf(col("a.simhash"), 0) === byteOf(col("b.simhash"), 0), 0)) {
-      (acc, b) => acc.when(
-        byteOf(col("a.simhash"), b) === byteOf(col("b.simhash"), b), b)
-    }
-    blocks.as("a").join(blocks.as("b"),
-        col("a.block") === col("b.block") && col("a.bkey") === col("b.bkey") &&
-        col("a.doc_id") < col("b.doc_id"))
-      .filter(col("a.block") === firstShared)
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
-              col("a.simhash").as("sa"), col("b.simhash").as("sb"))
-      .withColumn("hamming", bit_count(col("sa").bitwiseXOR(col("sb"))))
+    // one band per byte of the 32-bit signature
+    val simhashKeys: BandedPairs.Keys =
+      h => (0 until 4).map(i => BandedPairs.byteBlocks(h, Seq(i)))
+    val blocks = sig.select(col("doc_id"), col("simhash"),
+      BandedPairs.explode(simhashKeys(col("simhash"))))
+    // the higher id (doc_b) rides on the left side, the one a broadcast
+    // join streams when the two equal sides tie, so a consumer keyed on
+    // doc_b (simhashCanonical) reuses the join's partitioning instead
+    // of adding an exchange
+    BandedPairs.pairs(blocks, blocks, simhashKeys, "simhash", "simhash",
+        col("b.doc_id") < col("a.doc_id"))
+      .select(col("b.doc_id").as("doc_a"), col("a.doc_id").as("doc_b"),
+        bit_count(col("a.simhash").bitwiseXOR(col("b.simhash"))).as("hamming"))
       .filter(col("hamming") <= maxHamming)
-      .select("doc_a", "doc_b", "hamming")
   }
 
   /** Bounded-output dedup contract over [[simhashPairs]]: the pair
@@ -1297,14 +1292,39 @@ object Dedup {
       .join(keys.filter(!col("is_new")).as("b"),
         col("a.band") === col("b.band") && col("a.bkey") === col("b.bkey"),
         "left_semi")
-      .select(col("doc_id")).distinct()
+      .select(col("doc_id"))
+    curationStatus(batch, exactIds, nearIds)
+  }
+
+  /** Per-doc status of a batch vs the standing corpus: `dup_exact` for
+    * `exactIds`, else `dup_near` for `nearIds` (repeats allowed), else
+    * `new` — for [[incrementalDedup]] and both curation loops.
+    */
+  private[graft] def curationStatus(batch: DataFrame, exactIds: DataFrame,
+                                    nearIds: DataFrame): DataFrame =
     batch.select(col("doc_id"))
       .join(exactIds.withColumn("is_exact", lit(1)), Seq("doc_id"), "left")
-      .join(nearIds.withColumn("is_near", lit(1)), Seq("doc_id"), "left")
+      .join(nearIds.distinct().withColumn("is_near", lit(1)),
+        Seq("doc_id"), "left")
       .select(col("doc_id"),
         when(col("is_exact") === 1, "dup_exact")
           .when(col("is_near") === 1, "dup_near")
           .otherwise("new").as("status"))
+
+  /** A curation batch's near-dup edges, (min, max) and each pair once:
+    * the band probe's batch×corpus hits (probe_id, corpus_id) plus the
+    * batch-internal collisions of its band keys (doc_id, band, bkey).
+    */
+  private[graft] def batchEdges(bandHits: DataFrame,
+                                keys: DataFrame): DataFrame = {
+    val cross = bandHits.filter(col("probe_id") =!= col("corpus_id"))
+      .select(least(col("probe_id"), col("corpus_id")).as("doc_a"),
+        greatest(col("probe_id"), col("corpus_id")).as("doc_b"))
+    val inner = keys.as("x").join(keys.as("y"),
+        col("x.band") === col("y.band") && col("x.bkey") === col("y.bkey") &&
+        col("x.doc_id") < col("y.doc_id"))
+      .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
+    cross.unionAll(inner).distinct()
   }
 }
 

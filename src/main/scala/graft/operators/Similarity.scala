@@ -982,42 +982,6 @@ object Similarity {
         .otherwise(0L)
     }.reduce(_ + _)
 
-  /** Embedding-cosine near-duplicate pairs above a threshold, banded.
-    *
-    * Candidates are generated by a sign-bit LSH band equi-join — a pair
-    * is considered iff it shares at least one of `bands` blocks of
-    * `bitsPerBand` identical coordinate signs — then verified by exact
-    * cosine. The plan is: narrow (id, band, key) projection → keyed
-    * self-join → distinct pair set → two id-joins back to the vectors.
-    * No cross product anywhere, so the operator survives a cluster-size
-    * corpus; the crossJoin form lives on only as [[nearDupPairsExact]],
-    * the small-data oracle baseline.
-    *
-    * The 8-bit × 8-band banding is the scale-selective regime:
-    * background (cos≈0) pairs match a band with probability 2^-8, so
-    * candidates ≈ bands/2^bits ≈ 3.1% of all pairs — measured exactly
-    * 3.109% at sf0.01 and 3.084% at sf0.1. That is the 100 TB shape:
-    * candidate volume grows ~0.03·N², not N². Selectivity and recall
-    * only coexist at a genuinely high threshold: at t = 0.9
-    * (sign-flip probability acos(t)/π ≈ 0.10/coordinate) the same
-    * bands retain ≥ 99% recall, and the benchmarked q_emb_neardup
-    * runs there over [[perturbedCopies]] (the raw corpus has no pair
-    * above cos 0.7, so the benchmark substrate plants one
-    * deterministic near-dup per vector; SimilaritySpec asserts the
-    * measured recall ≥ 95% against the exact-crossJoin baseline).
-    * Low thresholds are NOT LSH-selective territory for any banding —
-    * recall at t=0.4 is ~27% with this scheme, and the wide-recall
-    * alternative (4-bit × 16 bands: 96.6% recall at t=0.4 but 64.6%
-    * of pairs as candidates — Θ(N²), NOT scale-safe) survives only as
-    * the explicitly-parameterized recall stress test in
-    * SimilaritySpec/DocOpsSpec.
-    *
-    * `bitsPerBand`/`bands` have NO defaults on purpose: the banding
-    * regime decides the recall-vs-candidate-volume trade (8×8 =
-    * selective/partial-recall, 4×16 = wide-recall/Θ(N²) candidates),
-    * and that choice is semantic — callers must pick it consciously
-    * at the query site rather than inherit a hidden default.
-    */
   /** Coordinate `j`'s noise (nibble − 7.5)/128, the nibble read from
     * the md5 hex digest `da` (j ≤ 32) or `db`. Nibble via ascii
     * arithmetic, not the 16-branch hexNibble CASE: 64 fused CASEs were
@@ -1080,46 +1044,62 @@ object Similarity {
     orig.unionByName(perturbed)
   }
 
-  /** 0-based index of the FIRST band on which two band-key vectors
-    * agree — the candidate-dedup rule of every sign-banded join (a
-    * pair sharing k bands appears k times in the band equi-join; it
-    * is kept only where `band === firstSharedKeyIdx`, so the join
-    * never needs a distinct shuffle). ONE definition for
-    * [[nearDupPairs]] (batch), the streaming audio twin, and the
-    * persistent store's audio face.
+  /** A vector's `bands` sign-band keys as one array: the signature the
+    * batch, stream and store faces carry, so their buckets agree.
     */
-  private[graft] def firstSharedKeyIdx(aKeys: Column, bKeys: Column): Column =
-    array_position(
-      zip_with(aKeys, bKeys, (x, y) => x === y), true) - 1
+  private[graft] def signBandKeys(v: Column, bitsPerBand: Int,
+                                  bands: Int): Column =
+    array((0 until bands).map(b => bandKey(v, b, bitsPerBand)): _*)
 
-  /** The per-vector sign-band projection [[nearDupPairs]] joins on:
-    * (vec_id, bkeys, band, bkey) with the full `bands`-long key
-    * vector carried (~8·bands B) so the first-shared-band rule stays
-    * a row-local expression. The streaming audio twin re-derives the
-    * same rows from [[bandKey]] with the envelope carried through
-    * (a vec_id join-back is not streaming-legal); the KEY definition
-    * is the shared piece that keeps the bucket layouts identical.
+  /** Embedding-cosine near-duplicate pairs above a threshold, banded.
+    *
+    * Candidates are generated by a sign-bit LSH band equi-join — a pair
+    * is considered iff it shares at least one of `bands` blocks of
+    * `bitsPerBand` identical coordinate signs — then verified by exact
+    * cosine. The plan is: narrow (id, keys, band, key) projection →
+    * keyed self-join, each pair kept at its first shared band
+    * ([[BandedPairs]]) → two id-joins back to the vectors.
+    * No cross product anywhere, so the operator survives a cluster-size
+    * corpus; the crossJoin form lives on only as [[nearDupPairsExact]],
+    * the small-data oracle baseline.
+    *
+    * The 8-bit × 8-band banding is the scale-selective regime:
+    * background (cos≈0) pairs match a band with probability 2^-8, so
+    * candidates ≈ bands/2^bits ≈ 3.1% of all pairs — measured exactly
+    * 3.109% at sf0.01 and 3.084% at sf0.1. That is the 100 TB shape:
+    * candidate volume grows ~0.03·N², not N². Selectivity and recall
+    * only coexist at a genuinely high threshold: at t = 0.9
+    * (sign-flip probability acos(t)/π ≈ 0.10/coordinate) the same
+    * bands retain ≥ 99% recall, and the benchmarked q_emb_neardup
+    * runs there over [[perturbedCopies]] (the raw corpus has no pair
+    * above cos 0.7, so the benchmark substrate plants one
+    * deterministic near-dup per vector; SimilaritySpec asserts the
+    * measured recall ≥ 95% against the exact-crossJoin baseline).
+    * Low thresholds are NOT LSH-selective territory for any banding —
+    * recall at t=0.4 is ~27% with this scheme, and the wide-recall
+    * alternative (4-bit × 16 bands: 96.6% recall at t=0.4 but 64.6%
+    * of pairs as candidates — Θ(N²), NOT scale-safe) survives only as
+    * the explicitly-parameterized recall stress test in
+    * SimilaritySpec/DocOpsSpec.
+    *
+    * `bitsPerBand`/`bands` have NO defaults on purpose: the banding
+    * regime decides the recall-vs-candidate-volume trade (8×8 =
+    * selective/partial-recall, 4×16 = wide-recall/Θ(N²) candidates),
+    * and that choice is semantic — callers must pick it consciously
+    * at the query site rather than inherit a hidden default.
     */
-  private[graft] def signBandProjection(all: DataFrame, bitsPerBand: Int,
-                                        bands: Int): DataFrame = {
-    val bandArr = array(
-      (0 until bands).map(b => bandKey(col("v"), b, bitsPerBand)): _*)
-    all.select(col("vec_id"), bandArr.as("bkeys"))
-      .select(col("vec_id"), col("bkeys"),
-        posexplode(col("bkeys")).as(Seq("band", "bkey")))
-  }
-
   def nearDupPairs(embeddings: DataFrame, threshold: Double,
                    bitsPerBand: Int, bands: Int,
                    dim: Int = Dim): DataFrame = {
     // cached: consumed three times (band projection + both verify sides)
     val all = OperatorCaches.track(prepared(embeddings, dim))
-    val bd = signBandProjection(all, bitsPerBand, bands)
-    val cand = bd.as("a").join(bd.as("b"),
-        col("a.band") === col("b.band") && col("a.bkey") === col("b.bkey") &&
-          col("a.vec_id") < col("b.vec_id"))
-      .filter(col("a.band") ===
-        firstSharedKeyIdx(col("a.bkeys"), col("b.bkeys")))
+    val keys = BandedPairs.arrayKeys(bands)
+    val bd = all.select(col("vec_id"),
+        signBandKeys(col("v"), bitsPerBand, bands).as("bkeys"))
+      .select(col("vec_id"), col("bkeys"),
+        BandedPairs.explode(keys(col("bkeys"))))
+    val cand = BandedPairs.pairs(bd, bd, keys, "bkeys", "bkeys",
+        col("a.vec_id") < col("b.vec_id"))
       .select(col("a.vec_id").as("vec_a"), col("b.vec_id").as("vec_b"))
     val va = all.select(col("vec_id").as("vec_a"), col("v").as("va"),
                         col("nrm").as("na"))

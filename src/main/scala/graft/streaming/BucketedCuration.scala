@@ -175,23 +175,10 @@ object BucketedCuration {
     val exactIds = store.probeExact(hashes).localCheckpoint(true)
     val bandHits = store.probeBand(keys).localCheckpoint(true)
 
-    val nearIds = bandHits.select(col("probe_id").as("doc_id")).distinct()
-    val statuses = docs.select(col("doc_id"))
-      .join(exactIds.withColumn("is_exact", lit(1)), Seq("doc_id"), "left")
-      .join(nearIds.withColumn("is_near", lit(1)), Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        when(col("is_exact") === 1, "dup_exact")
-          .when(col("is_near") === 1, "dup_near")
-          .otherwise("new").as("status"))
+    val statuses = Dedup.curationStatus(docs, exactIds,
+        bandHits.select(col("probe_id").as("doc_id")))
       .localCheckpoint(true)
-    val crossEdges = bandHits.filter(col("probe_id") =!= col("corpus_id"))
-      .select(least(col("probe_id"), col("corpus_id")).as("doc_a"),
-        greatest(col("probe_id"), col("corpus_id")).as("doc_b"))
-    val innerEdges = keys.as("x").join(keys.as("y"),
-        col("x.band") === col("y.band") && col("x.bkey") === col("y.bkey") &&
-        col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
-    val edges = crossEdges.unionAll(innerEdges).distinct().localCheckpoint(true)
+    val edges = Dedup.batchEdges(bandHits, keys).localCheckpoint(true)
 
     // maintenance: same disjointness argument as the in-memory face —
     // dup_exact hashes are already present, the rest are new to the

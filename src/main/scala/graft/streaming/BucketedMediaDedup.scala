@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.multimodal.Multimodal
 import graft.multimodal.Multimodal.MediaRow
+import graft.operators.{BandedPairs, Similarity}
 
 /** The media dedup family's standing index as a BUCKETED CATALOG
   * TABLE — the decode-once layout the r15 audit asked for: image and
@@ -146,17 +147,14 @@ final class BucketedMediaStore(spark: SparkSession, prefix: String,
                  envelopeDim: Int = 16): DataFrame = {
     val batch = StreamAudioDedup.signBands(
       media.filter(_.kind == "audio"), envelopeDim)
-    spark.table(audioTable).as("c")
-      .filter(col("c.bkey").isin(batchKeys(batch): _*))
-      .join(broadcast(batch.as("p")),
-        col("p.band") === col("c.band") && col("p.bkey") === col("c.bkey"))
-      .filter(col("p.vec_id") =!= col("c.media_id"))
-      .filter(col("p.band") === graft.operators.Similarity
-        .firstSharedKeyIdx(col("p.bkeys"), col("c.bkeys")))
-      .select(col("p.vec_id").as("media_id"),
-        col("c.media_id").as("corpus_id"),
-        graft.operators.Similarity.pairCos(col("p.v"), col("p.nrm"),
-          col("c.v"), col("c.nrm"), envelopeDim).as("cos"))
+    BandedPairs.pairs(
+        spark.table(audioTable).filter(col("bkey").isin(batchKeys(batch): _*)),
+        broadcast(batch), BandedPairs.arrayKeys(StreamAudioDedup.Bands),
+        "bkeys", "bkeys", col("b.vec_id") =!= col("a.media_id"))
+      .select(col("b.vec_id").as("media_id"),
+        col("a.media_id").as("corpus_id"),
+        Similarity.pairCos(col("b.v"), col("b.nrm"),
+          col("a.v"), col("a.nrm"), envelopeDim).as("cos"))
       .filter(col("cos") > threshold)
   }
 
@@ -167,15 +165,16 @@ final class BucketedMediaStore(spark: SparkSession, prefix: String,
   private def batchKeys(df: DataFrame): Seq[Long] =
     df.select("bkey").distinct().collect().map(_.getLong(0)).toSeq
 
+  /** Candidate (corpus `a`, batch `b`) matches of the batch's band
+    * rows against the stored fingerprints of one kind: bucket-pruned
+    * scan, broadcast batch side, each pair at its first shared band.
+    */
   private def probe(batchBands: DataFrame, corpusKind: String): DataFrame =
-    spark.table(table).as("c")
-      .filter(col("c.kind") === corpusKind)
-      .filter(col("c.bkey").isin(batchKeys(batchBands): _*))
-      .join(broadcast(batchBands.as("p")),
-        col("p.band") === col("c.band") && col("p.bkey") === col("c.bkey"))
-      .filter(col("p.media_id") =!= col("c.media_id"))
-      .filter(col("p.band") ===
-        Multimodal.firstSharedBand(col("p.fhash"), col("c.fhash")))
+    BandedPairs.pairs(
+      spark.table(table).filter(col("kind") === corpusKind)
+        .filter(col("bkey").isin(batchKeys(batchBands): _*)),
+      broadcast(batchBands), Multimodal.hammingKeys(2), "fhash", "fhash",
+      col("b.media_id") =!= col("a.media_id"))
 
   /** Batch of arriving images → verified (media_id, corpus_id,
     * hamming) near-dup matches vs the persisted image fingerprints —
@@ -185,16 +184,14 @@ final class BucketedMediaStore(spark: SparkSession, prefix: String,
     */
   def probeImages(media: Dataset[MediaRow],
                   maxHamming: Int = 6): DataFrame = {
-    require(maxHamming <= 6,
-      s"probeImages: composite 2-block bands guarantee full recall " +
-        s"only for maxHamming <= 6; got $maxHamming")
+    Multimodal.requireFullRecall("probeImages", maxHamming, 2)
     val batch = Multimodal.imageDHashes(media).toDF()
       .select(col("media_id"), col("dhash").as("fhash"),
         Multimodal.bandExplode(col("dhash")))
     probe(batch, "image")
-      .select(col("p.media_id").as("media_id"),
-        col("c.media_id").as("corpus_id"),
-        bit_count(col("p.fhash").bitwiseXOR(col("c.fhash"))).as("hamming"))
+      .select(col("b.media_id").as("media_id"),
+        col("a.media_id").as("corpus_id"),
+        bit_count(col("b.fhash").bitwiseXOR(col("a.fhash"))).as("hamming"))
       .filter(col("hamming") <= maxHamming)
   }
 
@@ -205,18 +202,16 @@ final class BucketedMediaStore(spark: SparkSession, prefix: String,
     */
   def probeVideoFrames(media: Dataset[MediaRow],
                        maxHamming: Int = 6): DataFrame = {
-    require(maxHamming <= 6,
-      s"probeVideoFrames: composite 2-block bands guarantee full " +
-        s"recall only for maxHamming <= 6; got $maxHamming")
+    Multimodal.requireFullRecall("probeVideoFrames", maxHamming, 2)
     val batch = Multimodal.videoFrameHashes(media).toDF()
       .select(col("media_id"), col("frame_idx"), col("fhash"),
         Multimodal.bandExplode(col("fhash")))
     probe(batch, "video")
-      .select(col("p.media_id").as("media_id"),
-        col("p.frame_idx").as("frame_idx"),
-        col("c.media_id").as("corpus_id"),
-        col("c.frame_idx").as("corpus_frame"),
-        bit_count(col("p.fhash").bitwiseXOR(col("c.fhash"))).as("hamming"))
+      .select(col("b.media_id").as("media_id"),
+        col("b.frame_idx").as("frame_idx"),
+        col("a.media_id").as("corpus_id"),
+        col("a.frame_idx").as("corpus_frame"),
+        bit_count(col("b.fhash").bitwiseXOR(col("a.fhash"))).as("hamming"))
       .filter(col("hamming") <= maxHamming)
   }
 

@@ -155,27 +155,12 @@ object CurationLoop {
       (e, b)
     }
     // 2. statuses + near-dup edges — batch-local work over the probe
-    // results: batch-vs-corpus collisions from the shared band scan,
-    // batch-internal collisions from a batch self-join, canonical
-    // (min, max) orientation, each pair once.
+    // results (the shared band scan plus a batch self-join)
     val (statuses, edges) = timed((p, v) => p.edgesMs = v) {
-      val nearIds = bandHits.select(col("probe_id").as("doc_id")).distinct()
-      val s = docs.select(col("doc_id"))
-        .join(exactIds.withColumn("is_exact", lit(1)), Seq("doc_id"), "left")
-        .join(nearIds.withColumn("is_near", lit(1)), Seq("doc_id"), "left")
-        .select(col("doc_id"),
-          when(col("is_exact") === 1, "dup_exact")
-            .when(col("is_near") === 1, "dup_near")
-            .otherwise("new").as("status"))
+      val s = Dedup.curationStatus(docs, exactIds,
+          bandHits.select(col("probe_id").as("doc_id")))
         .localCheckpoint(true)
-      val crossEdges = bandHits.filter(col("probe_id") =!= col("corpus_id"))
-        .select(least(col("probe_id"), col("corpus_id")).as("doc_a"),
-          greatest(col("probe_id"), col("corpus_id")).as("doc_b"))
-      val innerEdges = keys.as("x").join(keys.as("y"),
-          col("x.band") === col("y.band") && col("x.bkey") === col("y.bkey") &&
-          col("x.doc_id") < col("y.doc_id"))
-        .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
-      val ed = crossEdges.unionAll(innerEdges).distinct().localCheckpoint(true)
+      val ed = Dedup.batchEdges(bandHits, keys).localCheckpoint(true)
       (s, ed)
     }
     // 3. incremental cluster maintenance on the new edges only

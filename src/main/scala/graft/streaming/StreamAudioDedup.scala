@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.multimodal.Multimodal
 import graft.multimodal.Multimodal.MediaRow
-import graft.operators.Similarity
+import graft.operators.{BandedPairs, Similarity}
 
 /** Streaming incremental AUDIO dedup — the continuous-ingest face of
   * [[graft.multimodal.Multimodal.audioNearDup]], completing the
@@ -22,8 +22,8 @@ import graft.operators.Similarity
   *     kernel the batch operator uses (bytes never leave the
   *     partition; mapPartitions is streaming-legal);
   *   - the banded candidate join uses the SAME sign-band machinery as
-  *     `Similarity.nearDupPairs` ([[Similarity.bandKey]] keys, the
-  *     [[Similarity.firstSharedKeyIdx]] candidate-dedup rule — one
+  *     `Similarity.nearDupPairs` ([[Similarity.signBandKeys]] keys, the
+  *     [[BandedPairs]] join and its first-shared-band rule — one
   *     definition each, so stream and batch sign-bucket layouts agree
   *     bit-for-bit by construction), at audioNearDup's own
   *     8-bit × 2-band regime over the 16-window envelope;
@@ -71,16 +71,14 @@ object StreamAudioDedup {
     // a streaming Dataset would plan as a stateful stream-stream
     // join (unbounded state), while the carry costs ~8·dim B per
     // band row and keeps the query stateless. The band KEY definition
-    // ([[Similarity.bandKey]]) is the shared piece that makes stream
+    // ([[Similarity.signBandKeys]]) is the shared piece that makes stream
     // and batch bucket layouts agree.
-    val bandArr = array((0 until Bands).map(b =>
-      Similarity.bandKey(col("v"), b, BitsPerBand)): _*)
     emb.select(col("vec_id"),
         Similarity.asDouble(col("embedding")).as("v"))
       .withColumn("nrm", Similarity.norm(col("v"), envelopeDim))
-      .withColumn("bkeys", bandArr)
+      .withColumn("bkeys", Similarity.signBandKeys(col("v"), BitsPerBand, Bands))
       .select(col("vec_id"), col("v"), col("nrm"), col("bkeys"),
-        posexplode(col("bkeys")).as(Seq("band", "bkey")))
+        BandedPairs.explode(BandedPairs.arrayKeys(Bands)(col("bkeys"))))
   }
 
   /** Static sign-banded probe index over the standing audio corpus:
@@ -102,11 +100,9 @@ object StreamAudioDedup {
   def audioDedupStream(stream: Dataset[MediaRow], bandIdx: DataFrame,
                        threshold: Double = 0.98,
                        envelopeDim: Int = 16): DataFrame =
-    signBands(stream, envelopeDim)
-      .join(bandIdx, Seq("band", "bkey"))
-      .filter(col("vec_id") =!= col("corpus_id"))
-      .filter(col("band") ===
-        Similarity.firstSharedKeyIdx(col("bkeys"), col("corpus_bkeys")))
+    BandedPairs.pairs(signBands(stream, envelopeDim), bandIdx,
+        BandedPairs.arrayKeys(Bands), "bkeys", "corpus_bkeys",
+        col("a.vec_id") =!= col("b.corpus_id"))
       .select(col("vec_id").as("media_id"), col("corpus_id"),
         Similarity.pairCos(col("v"), col("nrm"),
           col("corpus_v"), col("corpus_nrm"), envelopeDim).as("cos"))

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.multimodal.Multimodal
 import graft.multimodal.Multimodal.MediaRow
+import graft.operators.BandedPairs
 
 /** Streaming incremental IMAGE dedup — the continuous-ingest face of
   * [[graft.multimodal.Multimodal.imageNearDup]], completing the
@@ -20,8 +21,8 @@ import graft.multimodal.Multimodal.MediaRow
   *     mapPartitions kernel the batch operator uses — bytes never
   *     leave the partition, and mapPartitions is streaming-legal;
   *   - the banded candidate join uses the SAME composite 2-block
-  *     16-bit band enumeration ([[Multimodal.bandExplode]] /
-  *     `firstSharedBand` — one definition, so stream
+  *     16-bit band enumeration ([[Multimodal.hammingKeys]]) and the
+  *     same [[BandedPairs]] join — one definition, so stream
   *     and batch bucket layouts agree bit-for-bit by construction);
   *   - the query is STATELESS: append output mode, no watermark, no
   *     aggregation — per-batch cost is O(|batch| · 28) index probes
@@ -62,16 +63,12 @@ object StreamImageDedup {
     */
   def imageDedupStream(stream: Dataset[MediaRow], bandIdx: DataFrame,
                        maxHamming: Int = 6): DataFrame = {
-    require(maxHamming <= 6,
-      s"imageDedupStream: composite 2-block bands guarantee full " +
-        s"recall only for maxHamming <= 6; got $maxHamming")
+    Multimodal.requireFullRecall("imageDedupStream", maxHamming, 2)
     val probes = Multimodal.imageDHashes(stream).toDF()
       .select(col("media_id"), col("dhash"),
         Multimodal.bandExplode(col("dhash")))
-    probes.join(bandIdx, Seq("band", "bkey"))
-      .filter(col("media_id") =!= col("corpus_id"))
-      .filter(col("band") ===
-        Multimodal.firstSharedBand(col("dhash"), col("corpus_hash")))
+    BandedPairs.pairs(probes, bandIdx, Multimodal.hammingKeys(2), "dhash",
+        "corpus_hash", col("a.media_id") =!= col("b.corpus_id"))
       .select(col("media_id"), col("corpus_id"),
         bit_count(col("dhash").bitwiseXOR(col("corpus_hash")))
           .as("hamming"))

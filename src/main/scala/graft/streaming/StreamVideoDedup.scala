@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.multimodal.Multimodal
 import graft.multimodal.Multimodal.MediaRow
+import graft.operators.BandedPairs
 
 /** Streaming incremental VIDEO dedup — the continuous-ingest face of
   * [[graft.multimodal.Multimodal.videoNearDup]], completing the
@@ -22,8 +23,8 @@ import graft.multimodal.Multimodal.MediaRow
   *     one hamming space with images, so a video arrival can also be
   *     probed against an IMAGE index and vice versa);
   *   - the banded candidate join uses the SAME composite 2-block
-  *     band enumeration ([[Multimodal.bandExplode]] /
-  *     `firstSharedBand`) — stream and batch bucket layouts agree
+  *     band enumeration ([[Multimodal.hammingKeys]]) and the same
+  *     [[BandedPairs]] join — stream and batch bucket layouts agree
   *     bit-for-bit by construction;
   *   - the frame-match emission is STATELESS (append mode, no
   *     watermark): per-batch cost is O(|batch frames| · 28) index
@@ -67,16 +68,12 @@ object StreamVideoDedup {
     */
   def videoFrameMatches(stream: Dataset[MediaRow], bandIdx: DataFrame,
                         maxHamming: Int = 6): DataFrame = {
-    require(maxHamming <= 6,
-      s"videoFrameMatches: composite 2-block bands guarantee full " +
-        s"recall only for maxHamming <= 6; got $maxHamming")
+    Multimodal.requireFullRecall("videoFrameMatches", maxHamming, 2)
     val probes = Multimodal.videoFrameHashes(stream).toDF()
       .select(col("media_id"), col("frame_idx"), col("fhash"),
         Multimodal.bandExplode(col("fhash")))
-    probes.join(bandIdx, Seq("band", "bkey"))
-      .filter(col("media_id") =!= col("corpus_id"))
-      .filter(col("band") ===
-        Multimodal.firstSharedBand(col("fhash"), col("corpus_hash")))
+    BandedPairs.pairs(probes, bandIdx, Multimodal.hammingKeys(2), "fhash",
+        "corpus_hash", col("a.media_id") =!= col("b.corpus_id"))
       .select(col("media_id"), col("frame_idx"),
         col("corpus_id"), col("corpus_frame"),
         bit_count(col("fhash").bitwiseXOR(col("corpus_hash")))

@@ -168,9 +168,13 @@ object TransactionPipeline {
     */
   def toLogSink(df: DataFrame, dir: String, checkpoint: String,
                 keyCol: String = "transaction_id") =
-    df.select(col(keyCol).cast("string").as("key"),
-        to_json(struct(df.columns.toIndexedSeq.map(col): _*)).as("value"))
+    logRecords(df, keyCol)
       .writeStream.format("graftlog")
       .option("path", dir)
       .option("checkpointLocation", checkpoint)
+
+  /** [[toLogSink]]'s records: key = `keyCol`, value = JSON of the row. */
+  private[graft] def logRecords(df: DataFrame, keyCol: String): DataFrame =
+    df.select(col(keyCol).cast("string").as("key"),
+      to_json(struct(df.columns.toIndexedSeq.map(col): _*)).as("value"))
 }

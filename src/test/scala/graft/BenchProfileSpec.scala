@@ -65,4 +65,12 @@ class BenchProfileSpec extends AnyFunSuite {
       assert(p.top.forall(!_.site.contains('\n')), p.top)
       assert(p.execCpuNs > 0 && p.execRunMs >= 0, p)
     }
+
+  test("Bench names the operator scope of each top stage of an AQE query") {
+    assert(spark.conf.get("spark.sql.adaptive.enabled") == "true")
+    val p = profileOf("q_star_revenue")
+    assert(p.top.nonEmpty, p)
+    assert(p.top.forall(_.scope.trim.nonEmpty), p.top)
+    assert(p.top.forall(st => !st.scope.contains(" at ")), p.top)
+  }
 }
