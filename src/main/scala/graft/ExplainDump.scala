@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import org.apache.spark.sql.SparkSession
+
 /** Writes EXPLAIN.md: formatted physical plans for every query in
   * [[SparkEntry.queries]], in name order — the artifact for reviewing
   * scan pushdown, broadcast choices, and codegen spans without
@@ -23,18 +25,29 @@ object ExplainDump {
       "argument; the temp dir is `<tmp>`), AQE disabled to show the full " +
       "static plan, ids renumbered per plan. Regenerate: " +
       "`sbt \"runMain graft.ExplainDump <sf dir>\"`.\n")
-    names.foreach { name =>
-      val df = SparkEntry.queries(name)(spark, sfDir)
-      val plan = df.queryExecution.explainString(
-        org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
-      sb.append(s"\n## $name\n\n```\n${normalize(plan, sfDir)}```\n")
-      graft.operators.OperatorCaches.releaseAll()
-      spark.catalog.clearCache()
+    plans(spark, names, sfDir).foreach { case (name, plan) =>
+      sb.append(s"\n## $name\n\n```\n$plan```\n")
     }
     Files.writeString(Paths.get("EXPLAIN.md"), sb.toString)
     println(s"wrote EXPLAIN.md (${names.size} plans)")
     spark.stop()
   }
+
+  /** The formatted physical plan of each named query in
+    * [[SparkEntry.queries]], normalized, in the given order. Operator
+    * caches and cached frames are released after each query, so no
+    * plan depends on the queries before it.
+    */
+  private[graft] def plans(spark: SparkSession, names: Seq[String],
+                           sfDir: String): Iterator[(String, String)] =
+    names.iterator.map { name =>
+      val df = SparkEntry.queries(name)(spark, sfDir)
+      val plan = df.queryExecution.explainString(
+        org.apache.spark.sql.execution.FormattedMode)
+      graft.operators.OperatorCaches.releaseAll()
+      spark.catalog.clearCache()
+      name -> normalize(plan, sfDir)
+    }
 
   /** Rewrites one plan's host- and session-specific text: the data dir
     * becomes `<sf>`, the JVM temp dir `<tmp>` (with `<sf-hash>` for the

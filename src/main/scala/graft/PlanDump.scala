@@ -8,7 +8,9 @@ import java.nio.file.{Files, Paths}
   * `runMain graft.PlanDump <outDir> <suffix> <q1,q2,...> [sfDir]`
   * writes `<outDir>/<query>_<suffix>.txt` per query. Same session
   * config as Bench (AQE on, 32 shuffle partitions) so the dumped
-  * static plan is the shape the bench executes.
+  * static plan is the shape the bench executes. The text goes through
+  * [[ExplainDump.normalize]], so a before/after pair differs only where
+  * the plan does.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
@@ -19,14 +21,8 @@ object PlanDump {
     val spark =
       GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     Files.createDirectories(Paths.get(outDir))
-    names.foreach { n =>
-      val df = SparkEntry.queries(n)(spark, sfDir)
-      val txt = df.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode)
-      Files.write(Paths.get(outDir, s"${n}_$suffix.txt"),
-        txt.getBytes("UTF-8"))
-      graft.operators.OperatorCaches.releaseAll()
-      spark.catalog.clearCache()
+    ExplainDump.plans(spark, names, sfDir).foreach { case (n, txt) =>
+      Files.write(Paths.get(outDir, s"${n}_$suffix.txt"), txt.getBytes("UTF-8"))
       println(s"[plandump] wrote ${n}_$suffix.txt")
     }
     spark.stop()

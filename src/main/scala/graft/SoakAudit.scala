@@ -69,23 +69,8 @@ object SoakAudit {
 
     // tagged-maintenance read counter (same audit surface as
     // StreamingSpec's O(batch) pin)
-    val stageIds = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
-    val maintReads = new java.util.concurrent.atomic.AtomicLong(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (js.properties != null && CurationLoop.MaintainJobGroup ==
-            js.properties.getProperty("spark.jobGroup.id"))
-          js.stageIds.foreach(id => stageIds.add(id))
-      override def onStageCompleted(
-          sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
-        if (stageIds.contains(sc.stageInfo.stageId)) {
-          val m = sc.stageInfo.taskMetrics
-          maintReads.addAndGet(
-            m.inputMetrics.recordsRead + m.shuffleReadMetrics.recordsRead)
-        }
-    }
-    spark.sparkContext.addSparkListener(listener)
+    val maintReads = graft.functions.Observability.GroupReads(
+      spark.sparkContext, CurationLoop.MaintainJobGroup)
 
     val wireSchema = StructType(Seq(
       StructField("doc_id", LongType), StructField("text", StringType)))
@@ -148,15 +133,6 @@ object SoakAudit {
     val reads = scala.collection.mutable.ArrayBuffer.empty[Long]
     val sizes = scala.collection.mutable.ArrayBuffer.empty[Long]
 
-    def settle(): Long = { // listener bus is async: wait until stable
-      val deadline = System.nanoTime() + 5L * 1000 * 1000 * 1000
-      var last = -1L
-      while (System.nanoTime() < deadline && maintReads.get() != last) {
-        last = maintReads.get(); Thread.sleep(150)
-      }
-      last
-    }
-
     val q = spark.readStream.format("graftlog").option("path", logDir)
       .option("startingOffsets", "earliest")
       .option("maxRecordsPerTrigger", perTrigger.toString).load()
@@ -165,9 +141,9 @@ object SoakAudit {
         val db = batch
           .select(from_json(col("value").cast("string"), wireSchema).as("r"))
           .select("r.doc_id", "r.text")
-        val before = settle()
+        val before = maintReads.read()
         runner.sink(db, batchId)
-        val after = settle()
+        val after = maintReads.read()
         val ph = runner.lastPhases
         phaseSeries("prep") += ph.prepMs
         phaseSeries("classify") += ph.classifyMs
@@ -228,7 +204,7 @@ object SoakAudit {
       }
       .start()
     q.processAllAvailable(); q.stop()
-    spark.sparkContext.removeSparkListener(listener)
+    maintReads.close()
 
     // final-label parity vs the batch fixpoint over the full corpus
     val expect = Dedup.connectedComponents(

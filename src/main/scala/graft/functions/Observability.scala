@@ -1,8 +1,12 @@
 package graft.functions
 
-import java.util.concurrent.ConcurrentLinkedQueue
+import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
+import java.util.concurrent.atomic.AtomicLong
 
+import org.apache.spark.SparkContext
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.graftshim.BusDrain
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQueryListener
 import org.apache.spark.sql.streaming.StreamingQueryListener._
@@ -18,6 +22,8 @@ import org.apache.spark.sql.streaming.StreamingQueryListener._
   * - `RateListener`: a StreamingQueryListener capturing per-batch
   *   input rate / processing rate / watermark, the numbers the
   *   reference scraped from Flink's reporter.
+  * - `GroupReads`: records read by one job group's stages, the audit
+  *   behind the O(batch) maintenance checks.
   */
 object Observability {
 
@@ -49,6 +55,40 @@ object Observability {
       q.add(BatchStats(p.batchId, p.numInputRows,
         p.inputRowsPerSecond, p.processedRowsPerSecond))
       while (q.size() > keep) q.poll()
+    }
+  }
+
+  /** Records read (input plus shuffle) by the stages of every job
+    * started under job group `group`, summed at stage completion.
+    * Listener events arrive on the bus's own thread, so `read` and
+    * `reset` drain the bus first: a count read right after an action
+    * holds all of that action's stages.
+    */
+  private[graft] final class GroupReads private (sc: SparkContext, group: String)
+      extends SparkListener {
+    private val stageIds = ConcurrentHashMap.newKeySet[Int]()
+    private val records = new AtomicLong(0)
+    override def onJobStart(js: SparkListenerJobStart): Unit =
+      if (js.properties != null &&
+          group == js.properties.getProperty("spark.jobGroup.id"))
+        js.stageIds.foreach(id => stageIds.add(id))
+    override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+      if (stageIds.contains(e.stageInfo.stageId)) {
+        val m = e.stageInfo.taskMetrics
+        records.addAndGet(
+          m.inputMetrics.recordsRead + m.shuffleReadMetrics.recordsRead)
+      }
+    def read(): Long = { BusDrain(sc); records.get() }
+    def reset(): Unit = { BusDrain(sc); records.set(0); stageIds.clear() }
+    def close(): Unit = sc.removeSparkListener(this)
+  }
+
+  private[graft] object GroupReads {
+    /** A counter registered on `sc`; `close` unregisters it. */
+    def apply(sc: SparkContext, group: String): GroupReads = {
+      val r = new GroupReads(sc, group)
+      sc.addSparkListener(r)
+      r
     }
   }
 }

@@ -91,17 +91,23 @@ object FraudModel {
 
   val DefaultModel = "logistic_regression"
 
+  /** The rule-based member's score: a large amount, night and weekend
+    * flags, config-weighted. Also the rule member of
+    * `FraudQueries.ensembleMulti`.
+    */
+  private[graft] def ruleBasedScore(amount: Column, ts: Column): Column =
+    graft.functions.Scoring.ruleScore(Seq(
+      (amount > 1500.0) -> 0.5,
+      graft.functions.Features.isNight(ts) -> 0.25,
+      graft.functions.Features.isWeekend(ts) -> 0.25))
+
   /** Registered scorers; every member emits a `p_fraud` column. The
     * rule-based member is the reference's RuleBasedModel analog — a
     * config-weighted flag combination, no learning.
     */
   def registry: Map[String, (DataFrame, Column, Column) => DataFrame] = Map(
     DefaultModel -> ((df, a, t) => score(df, a, t)),
-    "rule_based" -> ((df, a, t) => df.withColumn("p_fraud",
-      graft.functions.Scoring.ruleScore(Seq(
-        (a > 1500.0) -> 0.5,
-        graft.functions.Features.isNight(t) -> 0.25,
-        graft.functions.Features.isWeekend(t) -> 0.25)))),
+    "rule_based" -> ((df, a, t) => df.withColumn("p_fraud", ruleBasedScore(a, t))),
     // deterministic analogs of the reference's learned families
     // (model_manager.py:279-307): frozen tree ensemble (xgboost) and
     // isolation-depth anomaly score (isolation_forest)

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.functions.{Features => F, Scoring}
@@ -31,16 +31,22 @@ object FraudQueries {
       F.epochHour(col("ts")).as("epoch_hour"))
   }
 
+  /** The event rule score (TransactionProcessor.java:327-439 weights):
+    * amount, error event, night, weekend and round-amount flags. Shared
+    * by [[fraudScoring]] and [[modelScore]].
+    */
+  private def eventRuleScore: Column = Scoring.ruleScore(Seq(
+    (col("value") > 150.0) -> 0.25,
+    (col("event_type") === "error") -> 0.2,
+    F.isNight(col("ts")) -> 0.15,
+    F.isWeekend(col("ts")) -> 0.15,
+    F.isRoundAmount(col("value"), 10.0) -> 0.1))
+
   /** Rule scoring + decision ladder (TransactionProcessor.java:327-473
     * weights/shape) over event-derived flags, rolled up per decision.
     */
   def fraudScoring(events: DataFrame): DataFrame = {
-    val score = Scoring.ruleScore(Seq(
-      (col("value") > 150.0) -> 0.25,
-      (col("event_type") === "error") -> 0.2,
-      F.isNight(col("ts")) -> 0.15,
-      F.isWeekend(col("ts")) -> 0.15,
-      F.isRoundAmount(col("value"), 10.0) -> 0.1))
+    val score = eventRuleScore
     events
       .select(Decisions.riskLevel(score).as("risk_level"),
               Decisions.decision(score).as("decision"))
@@ -79,10 +85,7 @@ object FraudQueries {
       graft.sources.Par.fan(events), col("value"), col("ts"))
     val lr = round(col("p_fraud"), 6)
     val tree = DeterministicModels.treeEnsembleScore(col("value"), col("ts"))
-    val rule = Scoring.ruleScore(Seq(
-      (col("value") > 1500.0) -> 0.5,
-      F.isNight(col("ts")) -> 0.25,
-      F.isWeekend(col("ts")) -> 0.25))
+    val rule = graft.ml.FraudModel.ruleBasedScore(col("value"), col("ts"))
     val iso = DeterministicModels.isolationScore(col("value"), col("ts"))
     val members = Seq(lr, tree, rule, iso)
     scored.select(col("event_id"),
@@ -240,15 +243,9 @@ object FraudQueries {
   def modelScore(events: DataFrame): DataFrame = {
     val scored = graft.ml.FraudModel.score(
       graft.sources.Par.fan(events), col("value"), col("ts"))
-    val rule = Scoring.ruleScore(Seq(
-      (col("value") > 150.0) -> 0.25,
-      (col("event_type") === "error") -> 0.2,
-      F.isNight(col("ts")) -> 0.15,
-      F.isWeekend(col("ts")) -> 0.15,
-      F.isRoundAmount(col("value"), 10.0) -> 0.1))
     scored
       .withColumn("p_model_r", round(col("p_fraud"), 6))
-      .withColumn("rule_score", rule)
+      .withColumn("rule_score", eventRuleScore)
       .select(col("event_id"), col("margin"), col("p_model_r"),
         Scoring.weightedAverage(
           Seq(col("p_model_r") -> 0.6, col("rule_score") -> 0.4))

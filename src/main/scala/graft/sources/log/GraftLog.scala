@@ -89,6 +89,19 @@ object GraftLog {
         col("r.partition").as("partition"), col("r.offset").as("offset"),
         col("r.timestamp").as("timestamp"))
 
+  /** Delete the log at `dir`, if any, so a query that builds its log
+    * from scratch never appends to a previous run's records.
+    */
+  private def deleteLog(dir: String): Unit = {
+    val root = Paths.get(dir)
+    if (Files.exists(root)) {
+      val paths = Files.walk(root)
+      try paths.sorted(Comparator.reverseOrder[java.nio.file.Path]())
+        .forEach(p => Files.delete(p))
+      finally paths.close()
+    }
+  }
+
   private val wireSchema = StructType(Seq(
     StructField("event_id", LongType),
     StructField("user_id", LongType),
@@ -113,10 +126,7 @@ object GraftLog {
     * record in any engine.
     */
   def latestOrderThroughCompactedLog(orders: DataFrame, dir: String): DataFrame = {
-    val root = Paths.get(dir)
-    if (Files.exists(root))
-      Files.walk(root).sorted(Comparator.reverseOrder[java.nio.file.Path]())
-        .forEach(p => Files.delete(p))
+    deleteLog(dir)
     val routed = orders
       .repartition(col("o_custkey"))
       .sortWithinPartitions(col("o_orderdate"), col("o_orderkey"))
@@ -149,10 +159,7 @@ object GraftLog {
     * an append-only log must not accrete across runs.
     */
   def eventStatsThroughLog(events: DataFrame, dir: String): DataFrame = {
-    val root = Paths.get(dir)
-    if (Files.exists(root))
-      Files.walk(root).sorted(Comparator.reverseOrder[java.nio.file.Path]())
-        .forEach(p => Files.delete(p))
+    deleteLog(dir)
     write(events.select(
         col("user_id").cast("string").as("key"),
         to_json(struct(col("event_id"), col("user_id"), col("event_type"),
@@ -179,10 +186,7 @@ object GraftLog {
     * reads both decodes on identical records (BASELINE.md row).
     */
   def eventStatsThroughAvroLog(events: DataFrame, dir: String): DataFrame = {
-    val root = Paths.get(dir)
-    if (Files.exists(root))
-      Files.walk(root).sorted(Comparator.reverseOrder[java.nio.file.Path]())
-        .forEach(p => Files.delete(p))
+    deleteLog(dir)
     write(graft.sources.AvroWire.encodeKeyed(
         events.select(col("user_id").cast("string").as("key"),
           col("event_id"), col("user_id"), col("event_type"), col("value")),

@@ -107,13 +107,41 @@ object GraftLogFormat {
   def csegName(base: Long, endX: Long, count: Long): String =
     f"$base%020d_$endX%020d_$count%010d.cseg"
 
-  /** ALL segment files of one partition (including ones shadowed by a
-    * covering compacted segment), sorted by (base, dense-first).
+  /** One partition's segment metadata, taken from ONE directory
+    * listing plus one `_bounds.json` read: every reader of a
+    * partition's segments, start or end uses one view, so a caller
+    * never lists the directory twice for one decision.
+    *
+    *   - `all`: every segment file, including ones shadowed by a
+    *     covering compacted segment, sorted by (base, dense-first);
+    *   - `readable`: the unshadowed ones. Compaction publishes its
+    *     merged segment first and deletes the inputs second, so a
+    *     crash between the two steps leaves covered-but-undeleted
+    *     files; readers must prefer the covering segment or they
+    *     would double-read offsets;
+    *   - `start`: the log start offset (Kafka's logStartOffset),
+    *     advanced past retention-deleted segments by the bounds
+    *     marker, 0 on a never-truncated partition;
+    *   - `end`: the next offset to be assigned. Retention may delete
+    *     every segment; the bounds marker then keeps the high
+    *     watermark from regressing to 0.
     */
-  def allSegments(dir: String, partition: Int): Seq[Segment] = {
-    val d = new File(dir, s"p=$partition")
-    if (!d.isDirectory) Seq.empty
-    else d.listFiles().toIndexedSeq.flatMap { f =>
+  private[graft] final class PartitionView(val all: Seq[Segment],
+                                           bounds: Option[(Long, Long)]) {
+    val readable: Seq[Segment] = {
+      val covers = all.filter(_.sparse)
+      all.filterNot(s => covers.exists(c => c.covers(s)))
+    }
+    val start: Long = bounds.map(_._1).getOrElse(0L)
+    val end: Long = math.max(readable.lastOption.map(_.end).getOrElse(0L),
+      bounds.map(_._2).getOrElse(0L))
+  }
+
+  /** List partition `p` once and read its bounds marker once. */
+  private[graft] def view(dir: String, p: Int): PartitionView = {
+    val d = new File(dir, s"p=$p")
+    val files = Option(d.listFiles()).map(_.toIndexedSeq).getOrElse(IndexedSeq.empty)
+    val all = files.flatMap { f =>
       f.getName match {
         case SegName(b, c) => Some(Segment(f, b.toLong, c.toLong))
         case CSegName(b, e, c) =>
@@ -121,46 +149,16 @@ object GraftLogFormat {
         case _ => None
       }
     }.sortBy(s => (s.base, s.sparse))
+    new PartitionView(all, readBounds(dir, p))
   }
-
-  /** Readable segments: a compacted segment SHADOWS every segment
-    * whose offset range it covers. Compaction publishes its merged
-    * segment first and deletes the inputs second, so a crash between
-    * the two steps leaves covered-but-undeleted files — readers must
-    * prefer the covering segment or they would double-read offsets.
-    */
-  def segments(dir: String, partition: Int): Seq[Segment] = {
-    val all = allSegments(dir, partition)
-    val covers = all.filter(_.sparse)
-    all.filterNot(s => covers.exists(c => c.covers(s)))
-  }
-
-  /** End offset (== next offset to be assigned) of one partition.
-    * Retention may delete every segment; the bounds marker then keeps
-    * the high watermark from regressing to 0.
-    */
-  def endOffset(dir: String, partition: Int): Long =
-    math.max(segments(dir, partition).lastOption.map(_.end).getOrElse(0L),
-      readBounds(dir, partition).map(_._2).getOrElse(0L))
-
-  /** Log start offset of one partition (Kafka's logStartOffset):
-    * advanced past retention-deleted segments by the bounds marker,
-    * 0 on a never-truncated partition.
-    */
-  def startOffset(dir: String, partition: Int): Long =
-    readBounds(dir, partition).map(_._1).getOrElse(0L)
 
   /** End offsets for every partition of the log. */
-  def endOffsets(dir: String): Map[Int, Long] = {
-    val n = readPartitions(dir)
-    (0 until n).map(p => p -> endOffset(dir, p)).toMap
-  }
+  def endOffsets(dir: String): Map[Int, Long] =
+    (0 until readPartitions(dir)).map(p => p -> view(dir, p).end).toMap
 
   /** Start offsets for every partition of the log. */
-  def startOffsets(dir: String): Map[Int, Long] = {
-    val n = readPartitions(dir)
-    (0 until n).map(p => p -> startOffset(dir, p)).toMap
-  }
+  def startOffsets(dir: String): Map[Int, Long] =
+    (0 until readPartitions(dir)).map(p => p -> view(dir, p).start).toMap
 
   // ---- partition bounds (retention watermarks) --------------------------
 
@@ -276,7 +274,7 @@ object GraftLogFormat {
     */
   def readRange(dir: String, partition: Int, from: Long, until: Long): RangeIterator =
     new RangeIterator(
-      segments(dir, partition).iterator.filter(s => s.end > from && s.base < until),
+      view(dir, partition).readable.iterator.filter(s => s.end > from && s.base < until),
       from, until)
 
   final class RangeIterator(segs: Iterator[Segment], from: Long, until: Long)

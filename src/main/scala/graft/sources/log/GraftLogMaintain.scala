@@ -23,7 +23,7 @@ import java.io.File
   *     delete.retention expiry analog).
   *
   * Crash-safety: compaction publishes the merged `.cseg` FIRST (readers
-  * shadow covered segments — [[GraftLogFormat.segments]]) and deletes
+  * shadow covered segments — [[GraftLogFormat.PartitionView]]) and deletes
   * the inputs second; retention deletes oldest-first AFTER advancing
   * the bounds marker, so a crash leaves at worst extra-but-unreadable
   * files, never a hole. Both operations are per-partition and
@@ -51,10 +51,9 @@ object GraftLogMaintain {
                      retentionBytes: Option[Long] = None,
                      nowMicros: Long = System.currentTimeMillis() * 1000L,
                      capEnds: Map[Int, Long] = Map.empty): Map[Int, Long] = synchronized {
-    val n = GraftLogFormat.readPartitions(dir)
-    (0 until n).map { p =>
-      val segs = GraftLogFormat.segments(dir, p)
-      val end = GraftLogFormat.endOffset(dir, p)
+    (0 until GraftLogFormat.readPartitions(dir)).map { p =>
+      val v = GraftLogFormat.view(dir, p)
+      val segs = v.readable
       val cap = capEnds.getOrElse(p, Long.MaxValue)
 
       // time rule: expired prefix (stop at the first surviving segment
@@ -87,18 +86,16 @@ object GraftLogMaintain {
         val newStart = doomed.last.end
         // watermark first, files second: a crash in between leaves
         // readable-but-ignored files, not offsets that regress
-        GraftLogFormat.writeBounds(dir, p, newStart, end)
-        // shadowed duplicates inside the deleted range go too; evict
-        // each deleted file's max-ts memo entry so a long-running
+        GraftLogFormat.writeBounds(dir, p, newStart, v.end)
+        // shadowed duplicates inside the deleted range go too (the
+        // view's listing holds them: a segment published since then
+        // starts at or past the end, and the cleaner holds this lock);
+        // evict each deleted file's max-ts memo entry so a long-running
         // stream's retention-on-commit never grows the driver-side map
         // past the LIVE segment count
-        GraftLogFormat.allSegments(dir, p)
-          .filter(_.end <= newStart).foreach { s =>
-            s.file.delete()
-            maxTsMemo.remove(s.file.getAbsolutePath)
-          }
+        v.all.filter(_.end <= newStart).foreach(delete)
         p -> newStart
-      } else p -> GraftLogFormat.startOffset(dir, p)
+      } else p -> v.start
     }.toMap
   }
 
@@ -121,66 +118,54 @@ object GraftLogMaintain {
     }
   }
 
-  /** Compact one partition to the latest record per key (original
-    * offsets kept, sparse segment). No-op on an empty partition or one
-    * already fully compacted with nothing new.
+  /** Kafka's `min.cleanable.dirty.ratio` default: a commit-hook
+    * compaction runs only when at least this fraction of a partition's
+    * bytes is uncompacted, which amortizes cleaner work to O(bytes
+    * written), never O(live keys) per micro-batch.
     */
+  private[graft] val MinDirtyRatio = 0.5
+
   /** Fraction of a partition's on-disk bytes sitting in segments NOT
     * yet compacted (dense, or sparse-but-shadowed leftovers) — the
-    * Kafka dirty-ratio gate, from file metadata only. A commit-hook
-    * compaction fires only when this exceeds `min.cleanable.dirty.ratio`,
-    * which amortizes total compaction work to O(bytes written), never
-    * O(live keys) per micro-batch.
+    * Kafka dirty-ratio gate, from file metadata only.
     */
-  /** `capEnd` scopes the ratio to the at-or-before-cap prefix — the
-    * slice a capped compaction is allowed to merge. Gating a capped
-    * compaction on the WHOLE partition's ratio deadlocks the
-    * amortization when a producer runs ahead of the consumer: the
-    * beyond-cap dirty bytes keep the full-partition ratio pinned above
-    * the gate while the mergeable prefix may be one already-clean
-    * cseg, so every commit re-merges O(live keys) for nothing.
-    */
-  def dirtyRatio(dir: String, p: Int, capEnd: Option[Long] = None): Double = {
-    val inScope = (s: GraftLogFormat.Segment) => capEnd.forall(s.end <= _)
-    val visible = GraftLogFormat.segments(dir, p).filter(inScope)
-    val total = GraftLogFormat.allSegments(dir, p).filter(inScope)
-      .map(_.file.length()).sum
+  private def dirtyRatio(v: GraftLogFormat.PartitionView): Double = {
+    val total = v.all.map(_.file.length()).sum
     if (total == 0L) 0.0
     else {
-      val clean = visible.filter(_.sparse).map(_.file.length()).sum
+      val clean = v.readable.filter(_.sparse).map(_.file.length()).sum
       (total - clean).toDouble / total
     }
   }
 
-  /** Delete any segment file fully shadowed by `cover` — the sweep
-    * that reclaims inputs a crashed compaction left behind.
-    */
-  private def sweepShadowed(dir: String, p: Int,
-                            cover: GraftLogFormat.Segment): Unit =
-    GraftLogFormat.allSegments(dir, p)
-      .foreach(s => if (cover.covers(s)) {
-        s.file.delete()
-        maxTsMemo.remove(s.file.getAbsolutePath)
-      })
+  private def delete(s: GraftLogFormat.Segment): Unit = {
+    s.file.delete()
+    maxTsMemo.remove(s.file.getAbsolutePath)
+  }
 
-  /** `capEnd` (the `compaction.cap.committed` option's hook — a
-    * min.compaction.lag-style bound): only segments fully at-or-before
-    * this offset are merged, so per-key history past a stream's
-    * committed position survives for event-level co-consumers.
+  /** Compact one partition to the latest record per key (original
+    * offsets kept, sparse segment), from one listing of it. No-op on
+    * an empty partition, on one already fully compacted with nothing
+    * new, or when its dirty ratio is under `minDirtyRatio` (0 for an
+    * explicit compaction, [[MinDirtyRatio]] on the commit hook).
     */
-  def compactPartition(dir: String, p: Int,
-                       dropTombstones: Boolean = false,
-                       capEnd: Option[Long] = None): Unit = synchronized {
-    val visible = GraftLogFormat.segments(dir, p)
-    val segs = capEnd match {
-      case Some(c) => visible.takeWhile(_.end <= c)
-      case None => visible
-    }
+  private[graft] def compactPartition(dir: String, p: Int,
+                                      dropTombstones: Boolean,
+                                      minDirtyRatio: Double): Unit = synchronized {
+    val v = GraftLogFormat.view(dir, p)
+    if (dirtyRatio(v) < minDirtyRatio) return
+    val segs = v.readable
+    // the sweep after publish deletes every listed file the merged
+    // segment shadows: this run's inputs and the leftovers of a
+    // previously crashed compaction (segments published since the
+    // listing start at or past its end, so none of them is covered)
+    def sweep(cover: GraftLogFormat.Segment): Unit =
+      v.all.foreach(s => if (cover.covers(s)) delete(s))
     if (segs.isEmpty) return
     if (segs.size == 1 && segs.head.sparse && !dropTombstones) {
       // nothing to merge — but a previous run may have crashed between
       // publish and input delete; reclaim anything this cseg shadows
-      sweepShadowed(dir, p, segs.head)
+      sweep(segs.head)
       return
     }
     val base = segs.head.base
@@ -210,19 +195,16 @@ object GraftLogMaintain {
     w.close()
     val name = GraftLogFormat.csegName(base, endX, survivors.size)
     val dst = new File(new File(dir, s"p=$p"), name)
-    // publish first (shadows the inputs), delete the inputs second —
-    // the sweep covers ALL shadowed files (including leftovers of a
-    // previously crashed compaction), not just this run's inputs
+    // publish first (shadows the inputs), delete the inputs second
     java.nio.file.Files.move(tmp.toPath, dst.toPath,
       java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    sweepShadowed(dir, p,
-      GraftLogFormat.Segment(dst, base, survivors.size, sparse = true, endX = endX))
+    sweep(GraftLogFormat.Segment(dst, base, survivors.size, sparse = true, endX = endX))
   }
 
   /** Compact every partition of the log. */
   def compact(dir: String, dropTombstones: Boolean = false): Unit =
     (0 until GraftLogFormat.readPartitions(dir))
-      .foreach(p => compactPartition(dir, p, dropTombstones))
+      .foreach(p => compactPartition(dir, p, dropTombstones, minDirtyRatio = 0.0))
 
   /** First offset in partition `p` whose record timestamp is >=
     * `tsMicros`, or the end offset if every record is older — the
@@ -234,7 +216,8 @@ object GraftLogMaintain {
     * mid-segment (exhaustion-only close would leak the stream).
     */
   def offsetForTimestamp(dir: String, p: Int, tsMicros: Long): Long = {
-    GraftLogFormat.segments(dir, p).foreach { s =>
+    val v = GraftLogFormat.view(dir, p)
+    v.readable.foreach { s =>
       val it = GraftLogFormat.readEntries(s)
       try {
         while (it.hasNext) {
@@ -243,7 +226,7 @@ object GraftLogMaintain {
         }
       } finally it.close()
     }
-    GraftLogFormat.endOffset(dir, p)
+    v.end
   }
 
   /** Per-partition [[offsetForTimestamp]] across the log. */

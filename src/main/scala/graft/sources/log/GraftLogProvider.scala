@@ -96,21 +96,33 @@ final case class GraftLogOptions(all: Map[String, String]) {
       (retentionMs.isDefined || retentionBytes.isDefined))
     throw new IllegalArgumentException(
       "retention.ms/retention.bytes require cleanup.policy to include 'delete'")
-  /** Kafka's min.cleanable.dirty.ratio: a commit-hook compaction runs
-    * only when at least this fraction of a partition's bytes is
-    * uncompacted — amortizes cleaner work to O(bytes written).
+
+  /** The one start-offset resolver, shared by the batch scan and the
+    * micro-batch stream: `startingTimestamp` positions each partition
+    * at its first record at-or-after T; otherwise `startingOffsets`
+    * (earliest | latest | JSON map), where an unset option means
+    * earliest for a batch read and latest for a stream — the Kafka
+    * source's defaults.
     */
-  val minDirtyRatio: Double =
-    get("min.cleanable.dirty.ratio").map(_.toDouble).getOrElse(0.5)
-  /** min.compaction.lag analog for logs ALSO consumed as event
-    * streams: when true, the commit-hook compaction only merges
-    * segments fully at-or-before the stream's committed offsets, so
-    * per-key history beyond the read position survives for other
-    * event-level consumers. Default false — Kafka's own contract,
-    * where the cleaner owes uncommitted readers nothing.
-    */
-  val compactionCapCommitted: Boolean =
-    get("compaction.cap.committed").exists(_.toBoolean)
+  private[graft] def startOffsets(batch: Boolean): Map[Int, Long] =
+    startingTimestamp match {
+      case Some(ts) => GraftLogMaintain.offsetsForTimestamp(dir, ts)
+      case None => offsets("startingOffsets",
+        get("startingOffsets").getOrElse(if (batch) "earliest" else "latest"))
+    }
+
+  /** The batch read's `endingOffsets` (earliest | latest | JSON map). */
+  private[graft] def endOffsets: Map[Int, Long] = offsets("endingOffsets", endingOffsets)
+
+  private def offsets(option: String, spec: String): Map[Int, Long] =
+    spec.trim.toLowerCase match {
+      // "earliest" = the log-start watermark, which retention advances
+      // past deleted segments (0 on an untruncated log)
+      case "earliest" => GraftLogFormat.startOffsets(dir)
+      case "latest" => GraftLogFormat.endOffsets(dir)
+      case j if j.startsWith("{") => GraftLogOffset.parse(j).ends
+      case other => throw new IllegalArgumentException(s"bad $option: $other")
+    }
 }
 
 object GraftLogOptions {
@@ -165,29 +177,10 @@ final class GraftLogScan(opts: GraftLogOptions) extends Scan {
   override def readSchema(): StructType = GraftLogTable.ReadSchema
   override def description(): String = s"GraftLogScan ${opts.dir}"
 
-  private def resolve(spec: String, forStart: Boolean): Map[Int, Long] = {
-    spec.trim.toLowerCase match {
-      // "earliest" = the log-start watermark, which retention advances
-      // past deleted segments (0 on an untruncated log)
-      case "earliest" => GraftLogFormat.startOffsets(opts.dir)
-      case "latest" => GraftLogFormat.endOffsets(opts.dir)
-      case j if j.startsWith("{") => GraftLogOffset.parse(j).ends
-      case other => throw new IllegalArgumentException(
-        s"bad ${if (forStart) "startingOffsets" else "endingOffsets"}: $other")
-    }
-  }
-
   override def toBatch: Batch = new Batch {
-    override def planInputPartitions(): Array[InputPartition] = {
-      val start = opts.startingTimestamp match {
-        case Some(ts) => GraftLogMaintain.offsetsForTimestamp(opts.dir, ts)
-        case None => resolve(
-          if (opts.startingOffsets == "latest") "earliest" else opts.startingOffsets,
-          forStart = true)
-      }
-      val end = resolve(opts.endingOffsets, forStart = false)
-      GraftLogMicroBatchStream.plan(opts.dir, start, end)
-    }
+    override def planInputPartitions(): Array[InputPartition] =
+      GraftLogMicroBatchStream.plan(opts.dir,
+        opts.startOffsets(batch = true), opts.endOffsets)
     override def createReaderFactory(): PartitionReaderFactory =
       new GraftLogReaderFactory
   }
@@ -223,15 +216,7 @@ final class GraftLogMicroBatchStream(opts: GraftLogOptions)
     }
   }
 
-  override def initialOffset(): Offset = opts.startingTimestamp match {
-    case Some(ts) => GraftLogOffset(GraftLogMaintain.offsetsForTimestamp(opts.dir, ts))
-    case None => opts.startingOffsets.trim.toLowerCase match {
-      case "earliest" => GraftLogOffset(GraftLogFormat.startOffsets(opts.dir))
-      case "latest" => GraftLogOffset(GraftLogFormat.endOffsets(opts.dir))
-      case j if j.startsWith("{") => GraftLogOffset.parse(j)
-      case other => throw new IllegalArgumentException(s"bad startingOffsets: $other")
-    }
-  }
+  override def initialOffset(): Offset = GraftLogOffset(opts.startOffsets(batch = false))
 
   override def deserializeOffset(json: String): Offset = GraftLogOffset.parse(json)
 
@@ -315,15 +300,9 @@ final class GraftLogMicroBatchStream(opts: GraftLogOptions)
         retentionBytes = opts.retentionBytes,
         capEnds = ends)
     if (opts.cleanupPolicy("compact"))
-      (0 until GraftLogFormat.readPartitions(opts.dir)).foreach { p =>
-        // capped compaction is gated on the dirty ratio of the
-        // <=capEnd prefix it may actually merge — beyond-cap bytes a
-        // fast producer wrote must not hold the gate open (that would
-        // re-merge the clean live-key prefix every micro-batch)
-        val cap = if (opts.compactionCapCommitted) ends.get(p) else None
-        if (GraftLogMaintain.dirtyRatio(opts.dir, p, cap) >= opts.minDirtyRatio)
-          GraftLogMaintain.compactPartition(opts.dir, p, capEnd = cap)
-      }
+      (0 until GraftLogFormat.readPartitions(opts.dir)).foreach(p =>
+        GraftLogMaintain.compactPartition(opts.dir, p, dropTombstones = false,
+          minDirtyRatio = GraftLogMaintain.MinDirtyRatio))
   }
   override def stop(): Unit = ()
 }

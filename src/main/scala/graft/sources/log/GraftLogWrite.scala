@@ -78,7 +78,7 @@ final class GraftLogWriteImpl(spec: WriterSpec, queryId: String) extends Write {
 
   override def toBatch: BatchWrite = new BatchWrite {
     override def createBatchWriterFactory(i: PhysicalWriteInfo): DataWriterFactory =
-      GraftLogBatchWriterFactory(spec)
+      GraftLogWriterFactory(spec)
     override def commit(messages: Array[WriterCommitMessage]): Unit =
       GraftLogCommit.publishAll(spec.dir, GraftLogCommit.flatten(messages))
     override def abort(messages: Array[WriterCommitMessage]): Unit =
@@ -87,7 +87,7 @@ final class GraftLogWriteImpl(spec: WriterSpec, queryId: String) extends Write {
 
   override def toStreaming: StreamingWrite = new StreamingWrite {
     override def createStreamingWriterFactory(i: PhysicalWriteInfo): StreamingDataWriterFactory =
-      GraftLogStreamingWriterFactory(spec)
+      GraftLogWriterFactory(spec)
     override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit =
       GraftLogCommit.commitEpoch(spec.dir, queryId, epochId,
         GraftLogCommit.flatten(messages))
@@ -96,16 +96,17 @@ final class GraftLogWriteImpl(spec: WriterSpec, queryId: String) extends Write {
   }
 }
 
-final case class GraftLogBatchWriterFactory(spec: WriterSpec) extends DataWriterFactory {
+/** One task-writer factory for batch and streaming writes: a task's
+  * output is the same tmp segments either way; only the driver-side
+  * commit differs.
+  */
+private[graft] final case class GraftLogWriterFactory(spec: WriterSpec)
+    extends DataWriterFactory with StreamingDataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
     new GraftLogDataWriter(spec, partitionId)
-}
-
-final case class GraftLogStreamingWriterFactory(spec: WriterSpec)
-    extends StreamingDataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long,
                             epochId: Long): DataWriter[InternalRow] =
-    new GraftLogDataWriter(spec, partitionId)
+    createWriter(partitionId, taskId)
 }
 
 /** Task-side writer: one tmp segment per touched log partition. */
@@ -176,24 +177,29 @@ object GraftLogCommit {
     * atomically rename every tmp segment into the log.
     */
   def publishAll(dir: String, entries: Seq[(Int, String, Long, Int)]): Seq[(String, Int, Long, Long)] =
-    synchronized {
-      val plan = planOffsets(dir, entries)
-      plan.foreach { case (tmp, p, base, count) =>
-        GraftLogFormat.publish(dir, new File(tmp), p, base, count)
-      }
-      dropTmps(entries.filter(_._3 == 0))
-      plan
-    }
+    synchronized(planAndPublish(dir, entries, _ => ()))
 
-  private def planOffsets(dir: String,
-                          entries: Seq[(Int, String, Long, Int)]): Seq[(String, Int, Long, Long)] = {
+  /** Plan base offsets (each touched partition continues from its
+    * end; same-partition segments in producing-task order), hand the
+    * plan to `record` before anything moves (the epoch manifest), then
+    * rename every nonempty tmp into the log and drop the empty ones.
+    */
+  private def planAndPublish(dir: String, entries: Seq[(Int, String, Long, Int)],
+                             record: Seq[(String, Int, Long, Long)] => Unit)
+      : Seq[(String, Int, Long, Long)] = {
     val ends = scala.collection.mutable.Map.empty[Int, Long]
-    entries.filter(_._3 > 0).sortBy(e => (e._1, e._4, e._2))
+    val plan = entries.filter(_._3 > 0).sortBy(e => (e._1, e._4, e._2))
       .map { case (p, tmp, count, _) =>
-        val base = ends.getOrElseUpdate(p, GraftLogFormat.endOffset(dir, p))
+        val base = ends.getOrElseUpdate(p, GraftLogFormat.view(dir, p).end)
         ends(p) = base + count
         (tmp, p, base, count)
       }
+    record(plan)
+    plan.foreach { case (tmp, p, base, count) =>
+      GraftLogFormat.publish(dir, new File(tmp), p, base, count)
+    }
+    dropTmps(entries.filter(_._3 == 0))
+    plan
   }
 
   /** Idempotent epoch commit. Protocol (all driver-side):
@@ -206,7 +212,7 @@ object GraftLogCommit {
     *      gone and nothing landed, the old attempt never wrote data —
     *      discard the stale manifest and plan fresh.
     *   3. fresh: plan offsets, write manifest (atomic move), rename,
-    *      marker.
+    *      drop empty tmps, marker.
     *
     * A crash between any two steps retries into a branch that
     * completes the same plan or discards it wholesale — never a
@@ -246,13 +252,8 @@ object GraftLogCommit {
       }
     }
 
-    val plan = planOffsets(dir, entries)
-    writeManifest(manifest, plan)
-    plan.foreach { case (tmp, p, base, count) =>
-      GraftLogFormat.publish(dir, new File(tmp), p, base, count)
-    }
+    planAndPublish(dir, entries, writeManifest(manifest, _))
     touch(marker)
-    dropTmps(entries.filter(_._3 == 0))  // empty tmp segments never publish
   }
 
   private def sanitize(id: String): String = id.replaceAll("[^A-Za-z0-9._-]", "_")

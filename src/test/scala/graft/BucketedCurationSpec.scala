@@ -113,32 +113,8 @@ class BucketedCurationSpec extends AnyFunSuite {
     // buckets and a one-doc probe touching <= 8, that is a real skip.
     val store = new BucketedCurationStore(spark, "bc_io", nBuckets)
     store.init()
-    val stageIds = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
-    val records = new java.util.concurrent.atomic.AtomicLong(0)
     val group = "bc-probe-audit"
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (js.properties != null &&
-            group == js.properties.getProperty("spark.jobGroup.id"))
-          js.stageIds.foreach(id => stageIds.add(id))
-      override def onStageCompleted(
-          sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
-        if (stageIds.contains(sc.stageInfo.stageId)) {
-          val m = sc.stageInfo.taskMetrics
-          records.addAndGet(
-            m.inputMetrics.recordsRead + m.shuffleReadMetrics.recordsRead)
-        }
-    }
-    def settle(): Long = {
-      val deadline = System.nanoTime() + 8L * 1000 * 1000 * 1000
-      var last = -1L
-      while (System.nanoTime() < deadline && records.get() != last) {
-        last = records.get(); Thread.sleep(250)
-      }
-      last
-    }
-    spark.sparkContext.addSparkListener(listener)
+    val records = graft.functions.Observability.GroupReads(spark.sparkContext, group)
     try {
       (0 until 12).foreach { b =>
         val docs = (0 until 10).map(i =>
@@ -163,11 +139,11 @@ class BucketedCurationSpec extends AnyFunSuite {
       val rowsInBatchBuckets = band
         .filter(pmod(hash(col("bkey")), lit(nBuckets))
           .isin(batchBuckets.toSeq: _*)).count()
-      records.set(0); stageIds.clear()
+      records.reset()
       spark.sparkContext.setJobGroup(group, "bucketed probe audit")
       try store.probeBand(keys).count()
       finally spark.sparkContext.clearJobGroup()
-      val read = settle()
+      val read = records.read()
       assert(read > 0L, "probe jobs untagged?")
       // batch side (cached keys frame) also counts as input records
       assert(read <= rowsInBatchBuckets + 4 * nKeys,
@@ -176,7 +152,7 @@ class BucketedCurationSpec extends AnyFunSuite {
       assert(rowsInBatchBuckets < totalRows,
         "corpus must span more buckets than the probe touches")
     } finally {
-      spark.sparkContext.removeSparkListener(listener)
+      records.close()
       store.drop()
     }
   }

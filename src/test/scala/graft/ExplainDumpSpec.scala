@@ -2,8 +2,9 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Pins that EXPLAIN.md text depends on neither the host (data dir,
-  * temp dir, JVM identities) nor the session's query order (ids).
+/** Pins that EXPLAIN.md and PlanDump text depends on neither the host
+  * (data dir, temp dir, JVM identities) nor the session's query order
+  * (ids).
   */
 class ExplainDumpSpec extends AnyFunSuite {
 
@@ -30,5 +31,20 @@ class ExplainDumpSpec extends AnyFunSuite {
          |MapPartitionsRDD[1] at localCheckpoint at Similarity.scala
          |Multimodal$$$$$$Lambda@<obj>, [J@<obj>)
          |""".stripMargin)
+  }
+
+  test("dumping one query twice in a session gives byte-identical text") {
+    import TestSpark.{sf, spark}
+    val name = "q_image_neardup"
+    def raw() = SparkEntry.queries(name)(spark, sf).queryExecution
+      .explainString(org.apache.spark.sql.execution.FormattedMode)
+    // the raw text moves between two builds (fresh expression ids)...
+    assert(raw() != raw())
+    graft.operators.OperatorCaches.releaseAll()
+    spark.catalog.clearCache()
+    // ...the dumped text does not
+    val Seq((_, first), (_, second)) =
+      ExplainDump.plans(spark, Seq(name, name), sf).toSeq
+    assert(first == second)
   }
 }

@@ -299,7 +299,7 @@ class GraftLogSpec extends AnyFunSuite with TempDirs {
 
     // disk shape: each nonempty partition is now one sparse .cseg
     (0 to 1).foreach { p =>
-      val segs = GraftLogFormat.segments(dir, p)
+      val segs = GraftLogFormat.view(dir, p).readable
       assert(segs.forall(_.sparse), s"p=$p still has dense segments: $segs")
       assert(segs.size <= 1)
     }
@@ -349,17 +349,17 @@ class GraftLogSpec extends AnyFunSuite with TempDirs {
       .write.format("graftlog").option("path", dir)
       .option("log.partitions", "1").mode("append").save()
     GraftLog.compact(dir)                       // gen-1 cseg: a,b,c-tombstone
-    val gen1 = GraftLogFormat.segments(dir, 0).head
+    val gen1 = GraftLogFormat.view(dir, 0).readable.head
     val backup = java.nio.file.Files.copy(gen1.file.toPath,
       java.nio.file.Paths.get(gen1.file.getAbsolutePath + ".bak")).toFile
     GraftLog.compact(dir, dropTombstones = true) // gen-2 cseg: a,b (smaller)
     // simulate the crash window: gen-1 resurfaces beside gen-2
     java.nio.file.Files.move(backup.toPath,
       new java.io.File(gen1.file.getParentFile, gen1.file.getName).toPath)
-    assert(GraftLogFormat.allSegments(dir, 0).size == 2, "both files on disk")
+    assert(GraftLogFormat.view(dir, 0).all.size == 2, "both files on disk")
 
     // readers: the smaller-count (newer) generation shadows the older
-    val vis = GraftLogFormat.segments(dir, 0)
+    val vis = GraftLogFormat.view(dir, 0).readable
     assert(vis.size == 1 && vis.head.count == 2,
       s"equal-range tie-break must pick the newer generation: $vis")
     val rows = spark.read.format("graftlog").option("path", dir).load()
@@ -371,7 +371,7 @@ class GraftLogSpec extends AnyFunSuite with TempDirs {
 
     // the next maintenance pass reclaims the orphaned input
     GraftLog.compact(dir, dropTombstones = true)
-    assert(GraftLogFormat.allSegments(dir, 0).size == 1,
+    assert(GraftLogFormat.view(dir, 0).all.size == 1,
       "orphaned shadowed segment swept")
   }
 
@@ -402,7 +402,7 @@ class GraftLogSpec extends AnyFunSuite with TempDirs {
     // contract): cap at the current largest partition, then double
     // every partition — each must drop its oldest segments back under
     val perPartNow = (0 to 1).map(p =>
-      GraftLogFormat.segments(dir, p).map(_.file.length()).sum).max
+      GraftLogFormat.view(dir, p).readable.map(_.file.length()).sum).max
     put(21, 30, ageMs = 0)
     GraftLog.applyRetention(dir, retentionBytes = Some(perPartNow))
     val vs2 = spark.read.format("graftlog").option("path", dir)
@@ -436,6 +436,62 @@ class GraftLogSpec extends AnyFunSuite with TempDirs {
         .load().count()
     }
     assert(boom.getMessage != null)
+  }
+
+  test("one start-offset resolver: the batch plan and the stream's initialOffset agree") {
+    import java.sql.Timestamp
+    import graft.sources.log.{GraftLog, GraftLogInputPartition, GraftLogOffset, GraftLogOptions, GraftLogScan}
+    val root = tmp("glog_resolve")
+    val dir = s"$root/log"
+    val now = System.currentTimeMillis()
+    def put(lo: Int, hi: Int, ageMs: Long): Unit =
+      (lo to hi).map(i => (s"k$i", s"v$i", new Timestamp(now - ageMs)))
+        .toDF("key", "value", "timestamp")
+        .write.format("graftlog").option("path", dir)
+        .option("log.partitions", "3").mode("append").save()
+    put(1, 12, ageMs = 3 * 3600L * 1000)
+    put(13, 24, ageMs = 2 * 3600L * 1000)
+    val afterSecond = GraftLogFormat.endOffsets(dir)
+    put(25, 40, ageMs = 0)
+    // retention drops the oldest tranche, so earliest is not 0
+    GraftLog.applyRetention(dir, retentionMs = Some(150L * 60 * 1000))
+    val starts = GraftLogFormat.startOffsets(dir)
+    val ends = GraftLogFormat.endOffsets(dir)
+    assert(starts.values.sum > 0, s"retention should advance the start: $starts")
+    val mid = starts.map { case (p, s) => p -> (s + ends(p)) / 2 }
+    val midJson = mid.toSeq.sortBy(_._1)
+      .map { case (p, o) => s""""$p":$o""" }.mkString("{", ",", "}")
+
+    def opts(kv: (String, String)*) = GraftLogOptions(Map("path" -> dir) ++ kv)
+    def batchStarts(o: GraftLogOptions): Map[Int, Long] =
+      new GraftLogScan(o).toBatch.planInputPartitions()
+        .map(_.asInstanceOf[GraftLogInputPartition])
+        .map(ip => ip.partition -> ip.from).toMap
+    def streamStarts(o: GraftLogOptions): Map[Int, Long] =
+      new GraftLogScan(o).toMicroBatchStream(s"$root/ckpt").initialOffset()
+        .asInstanceOf[GraftLogOffset].ends
+
+    Seq(
+      ("earliest", opts("startingOffsets" -> "earliest"), starts),
+      ("latest", opts("startingOffsets" -> "latest"), ends),
+      ("json", opts("startingOffsets" -> midJson), mid),
+      ("timestamp", opts("startingTimestamp" -> ((now - 3600L * 1000) * 1000L).toString),
+        afterSecond)
+    ).foreach { case (name, o, expect) =>
+      val stream = streamStarts(o)
+      assert(stream == expect, s"$name: stream starts at $stream, expected $expect")
+      // the batch plan reads every partition that has records past the
+      // same start, from exactly that start
+      assert(batchStarts(o) == stream.filter { case (p, s) => s < ends(p) },
+        s"$name: batch plan ${batchStarts(o)} disagrees with stream $stream")
+    }
+
+    val bad = opts("startingOffsets" -> "yesterday")
+    val onBatch = intercept[IllegalArgumentException](batchStarts(bad))
+    val onStream = intercept[IllegalArgumentException](streamStarts(bad))
+    assert(onBatch.getMessage == onStream.getMessage,
+      s"batch: ${onBatch.getMessage}; stream: ${onStream.getMessage}")
+    assert(onBatch.getMessage == "bad startingOffsets: yesterday")
   }
 
   test("Trigger.AvailableNow drains the frozen backlog in paced batches, then stops itself") {
@@ -495,7 +551,7 @@ class GraftLogSpec extends AnyFunSuite with TempDirs {
 
     // the broker-tick compaction ran: partitions hold sparse segments
     // with only the 10 live keys (plus nothing lost for a re-reader)
-    val segs = (0 to 1).flatMap(GraftLogFormat.segments(dir, _))
+    val segs = (0 to 1).flatMap(GraftLogFormat.view(dir, _).readable)
     assert(segs.forall(_.sparse), s"commit() should have compacted, got $segs")
     val survivors = spark.read.format("graftlog").option("path", dir).load()
       .select(col("key").cast("string")).as[String].collect().toSeq
@@ -568,40 +624,6 @@ class GraftLogSpec extends AnyFunSuite with TempDirs {
     assert(spark.read.format("graftlog").option("path", dir)
       .option("cleanup.policy", "compact,delete")
       .option("retention.ms", "86400000").load().count() == 4)
-  }
-
-  test("capEnd compaction (min.compaction.lag analog) preserves history past the cap") {
-    import graft.sources.log.{GraftLogFormat, GraftLogMaintain}
-    val dir = tmp("glog_capend") + "/log"
-    def put(lo: Int, hi: Int): Unit =
-      (lo to hi).map(i => (s"k${i % 3}", s"v$i")).toDF("key", "value")
-        .write.format("graftlog").option("path", dir)
-        .option("log.partitions", "1").mode("append").save()
-    put(1, 9)   // offsets 0..8 — the "committed" range
-    put(10, 15) // offsets 9..14 — beyond the consumer's position
-    GraftLogMaintain.compactPartition(dir, 0, capEnd = Some(9L))
-    val offs = spark.read.format("graftlog").option("path", dir).load()
-      .select("offset").as[Long].collect().toSet
-    // per-key churn before the cap compacts away (3 survivors of 9)...
-    assert(offs.count(_ < 9L) == 3, s"pre-cap range should compact: $offs")
-    // ...while every record past the cap survives for event consumers
-    assert((9L to 14L).forall(offs.contains), s"post-cap history lost: $offs")
-    // the published cseg covers exactly the capped range
-    val sparse = GraftLogFormat.segments(dir, 0).filter(_.sparse)
-    assert(sparse.map(s => (s.base, s.endX)) == Seq((0L, 9L)))
-
-    // the capped gate reads the PREFIX ratio: the <=cap slice is now
-    // one clean cseg (ratio 0 — gate closed, no O(live keys) re-merge
-    // per commit), while the full-partition ratio stays pinned high
-    // by the beyond-cap bytes a fast producer wrote
-    assert(GraftLogMaintain.dirtyRatio(dir, 0, Some(9L)) == 0.0,
-      "clean prefix must close the capped compaction gate")
-    assert(GraftLogMaintain.dirtyRatio(dir, 0) > 0.5,
-      "sanity: whole-partition ratio is held open by beyond-cap bytes")
-    // new committed bytes re-open it proportionally, not absolutely
-    put(16, 18) // offsets 15..17
-    val r = GraftLogMaintain.dirtyRatio(dir, 0, Some(18L))
-    assert(r > 0.0 && r < 1.0, s"prefix ratio should see only new dirty bytes: $r")
   }
 
   test("active producer interleaved with a racing cleaner keeps the log consistent") {

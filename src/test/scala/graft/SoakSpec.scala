@@ -42,31 +42,8 @@ class SoakSpec extends AnyFunSuite with TempDirs {
           to_json(struct(col("doc_id"), col("text"))).as("value")),
       logDir, partitions = 4)
 
-    val stageIds = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
-    val maintReads = new java.util.concurrent.atomic.AtomicLong(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (js.properties != null && CurationLoop.MaintainJobGroup ==
-            js.properties.getProperty("spark.jobGroup.id"))
-          js.stageIds.foreach(id => stageIds.add(id))
-      override def onStageCompleted(
-          sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
-        if (stageIds.contains(sc.stageInfo.stageId)) {
-          val m = sc.stageInfo.taskMetrics
-          maintReads.addAndGet(
-            m.inputMetrics.recordsRead + m.shuffleReadMetrics.recordsRead)
-        }
-    }
-    def settle(): Long = {
-      val deadline = System.nanoTime() + 8L * 1000 * 1000 * 1000
-      var last = -1L
-      while (System.nanoTime() < deadline && maintReads.get() != last) {
-        last = maintReads.get(); Thread.sleep(150)
-      }
-      last
-    }
-    spark.sparkContext.addSparkListener(listener)
+    val maintReads = graft.functions.Observability.GroupReads(
+      spark.sparkContext, CurationLoop.MaintainJobGroup)
     val wireSchema = StructType(Seq(
       StructField("doc_id", LongType), StructField("text", StringType)))
     val runner = new CurationLoop.Runner(spark, consolidateEvery = 8)
@@ -81,15 +58,15 @@ class SoakSpec extends AnyFunSuite with TempDirs {
           val db = batch
             .select(from_json(col("value").cast("string"), wireSchema).as("r"))
             .select("r.doc_id", "r.text")
-          val before = settle()
+          val before = maintReads.read()
           runner.sink(db, batchId)
-          reads += (settle() - before)
+          reads += (maintReads.read() - before)
           nBatches.incrementAndGet()
           (): Unit
         }
         .start()
       q.processAllAvailable(); q.stop()
-    } finally spark.sparkContext.removeSparkListener(listener)
+    } finally maintReads.close()
 
     val n = nBatches.get().toInt
     assert(n >= 25, s"admission pacing should yield ~30 batches, got $n")

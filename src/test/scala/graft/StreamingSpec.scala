@@ -394,42 +394,19 @@ class StreamingSpec extends AnyFunSuite {
     // and pins that the per-batch cost stays flat while the corpus
     // grows 8x — a regression to any corpus-wide pass scales with the
     // corpus and trips the 3x bound by the later batches.
-    val stageIds = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
-    val records = new java.util.concurrent.atomic.AtomicLong(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (js.properties != null && CurationLoop.MaintainJobGroup ==
-            js.properties.getProperty("spark.jobGroup.id"))
-          js.stageIds.foreach(id => stageIds.add(id))
-      override def onStageCompleted(
-          sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
-        if (stageIds.contains(sc.stageInfo.stageId)) {
-          val m = sc.stageInfo.taskMetrics
-          records.addAndGet(
-            m.inputMetrics.recordsRead + m.shuffleReadMetrics.recordsRead)
-        }
-    }
-    def settle(): Long = { // listener bus is async: wait until stable
-      val deadline = System.nanoTime() + 8L * 1000 * 1000 * 1000
-      var last = -1L
-      while (System.nanoTime() < deadline && records.get() != last) {
-        last = records.get(); Thread.sleep(250)
-      }
-      last
-    }
-    spark.sparkContext.addSparkListener(listener)
+    val records = graft.functions.Observability.GroupReads(
+      spark.sparkContext, CurationLoop.MaintainJobGroup)
     try {
       var st = CurationLoop.emptyState(spark)
       val perBatch = (0 until 8).map { b =>
         val docs = (0 until 5).map(i =>
           ((b * 5 + i).toLong, s"uniq${b}x$i alpha$b beta$i gamma${b + i} delta"))
-        records.set(0); stageIds.clear()
+        records.reset()
         val audit = new CurationLoop.CurationAudit
         val (_, next) = CurationLoop.ingest(st,
           docs.toDF("doc_id", "text"), Some(audit))
         st = next
-        val r = settle()
+        val r = records.read()
         // every text is new and unique: appends are exactly the batch
         assert(audit.exactAppended == 5L, s"batch $b: ${audit.exactAppended}")
         assert(audit.bandAppended == 10L) // 5 docs x 2 bands
@@ -438,7 +415,7 @@ class StreamingSpec extends AnyFunSuite {
       assert(perBatch.forall(_ > 0L), s"maintenance jobs untagged? $perBatch")
       assert(perBatch.last <= 3 * perBatch.head + 10,
         s"maintenance cost grew with the corpus: $perBatch")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    } finally records.close()
   }
 
   test("maintainer auto-compacts: edge log bounded by paired nodes over a long random ingest") {
