@@ -309,8 +309,8 @@ object Bench {
 
   private val mapper = new ObjectMapper()
 
-  /** An insertion-ordered JSON object. Values may be Double, Int,
-    * Boolean, String, a JsonNode, or a Seq of Doubles or JsonNodes (an
+  /** An insertion-ordered JSON object. Values may be Double, Int, Long,
+    * Boolean, String, a JsonNode, or a Seq of numbers or JsonNodes (an
     * array).
     */
   private[graft] def jsonObject(fields: (String, Any)*): ObjectNode = {
@@ -318,6 +318,7 @@ object Bench {
     fields.foreach {
       case (k, v: Double)   => o.put(k, v)
       case (k, v: Int)      => o.put(k, v)
+      case (k, v: Long)     => o.put(k, v)
       case (k, v: Boolean)  => o.put(k, v)
       case (k, v: String)   => o.put(k, v)
       case (k, v: JsonNode) => o.set[JsonNode](k, v)

@@ -2,6 +2,10 @@ package graft
 
 import java.nio.file.Files
 
+import scala.collection.mutable.ArrayBuffer
+
+import com.fasterxml.jackson.databind.JsonNode
+import com.fasterxml.jackson.databind.node.{DoubleNode, NullNode, ObjectNode}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -47,6 +51,24 @@ import graft.streaming.{CurationLoop, StreamClusters}
   */
 object SoakAudit {
 
+  private val PhaseNames = Seq("prep", "classify", "edges", "clusters", "maintain")
+  private val ConsolidateEvery = 10
+
+  /** The per-batch series one soak records, in batch order. */
+  private[graft] final class Series {
+    val phaseSeries: Map[String, ArrayBuffer[Double]] =
+      PhaseNames.map(_ -> ArrayBuffer.empty[Double]).toMap
+    // each name is its own buffer
+    val ingestWall, consolidateWall, novWall, winWall, winConsolidateWall =
+      ArrayBuffer.empty[Double]
+    val reads, sizes, novStoreRows, novBatchGrams, winStoreRows, winBatchFps,
+      winBatchPairs = ArrayBuffer.empty[Long]
+  }
+
+  /** The keys whose `false` fails the soak. */
+  private[graft] val Verdicts = Seq("label_parity", "novelty_parity",
+    "novelty_store_sublinear", "winnow_parity", "winnow_cost_bounded", "flat")
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val outPath = sys.env.getOrElse("SPARK_GRAFT_SOAK_OUT", "SOAK.json")
@@ -74,9 +96,10 @@ object SoakAudit {
 
     val wireSchema = StructType(Seq(
       StructField("doc_id", LongType), StructField("text", StringType)))
-    val consolidateEvery = 10
     val runner = new CurationLoop.Runner(spark,
-      consolidateEvery = consolidateEvery)
+      consolidateEvery = ConsolidateEvery)
+    val series = new Series
+    import series._
     // StreamNovelty leg (r12 verdict #5): the maintained gram store
     // rides the same ingest; per-batch we record its ingest wall, the
     // standing store size, and the batch's gram occurrences, to prove
@@ -84,11 +107,7 @@ object SoakAudit {
     // sub-linear in ingested grams (the store dedups — later batches
     // re-see earlier vocabulary).
     var novState = graft.streaming.StreamNovelty.emptyState(spark)
-    val novOut = scala.collection.mutable.ArrayBuffer
-      .empty[Array[org.apache.spark.sql.Row]]
-    val novWall = scala.collection.mutable.ArrayBuffer.empty[Double]
-    val novStoreRows = scala.collection.mutable.ArrayBuffer.empty[Long]
-    val novBatchGrams = scala.collection.mutable.ArrayBuffer.empty[Long]
+    val novOut = ArrayBuffer.empty[Array[org.apache.spark.sql.Row]]
     // StreamWinnow leg (r13 verdict #4 + ADVICE): the maintained
     // fingerprint store rides the same ingest. Contract: (a) each
     // batch grows the store by EXACTLY its own fingerprint rows (the
@@ -117,21 +136,8 @@ object SoakAudit {
     // store fold).
     var winState = graft.streaming.StreamWinnow.emptyState(spark)
     val winPairs = scala.collection.mutable.Map[(Long, Long), Long]()
-    val winWall = scala.collection.mutable.ArrayBuffer.empty[Double]
-    val winConsolidateWall =
-      scala.collection.mutable.ArrayBuffer.empty[Double]
-    val winStoreRows = scala.collection.mutable.ArrayBuffer.empty[Long]
-    val winBatchFps = scala.collection.mutable.ArrayBuffer.empty[Long]
-    val winBatchPairs = scala.collection.mutable.ArrayBuffer.empty[Long]
     var winCompacted = false
     val winBatchCount = new java.util.concurrent.atomic.AtomicInteger(0)
-    val phaseNames = Seq("prep", "classify", "edges", "clusters", "maintain")
-    val phaseSeries = phaseNames.map(n =>
-      n -> scala.collection.mutable.ArrayBuffer.empty[Double]).toMap
-    val ingestWall = scala.collection.mutable.ArrayBuffer.empty[Double]
-    val consolidateWall = scala.collection.mutable.ArrayBuffer.empty[Double]
-    val reads = scala.collection.mutable.ArrayBuffer.empty[Long]
-    val sizes = scala.collection.mutable.ArrayBuffer.empty[Long]
 
     val q = spark.readStream.format("graftlog").option("path", logDir)
       .option("startingOffsets", "earliest")
@@ -177,7 +183,7 @@ object SoakAudit {
           winPairs((r.getLong(0), r.getLong(1))) = r.getLong(2)
         }
         val wb = winBatchCount.incrementAndGet()
-        if (wb % consolidateEvery == 0 || wb == targetBatches / 2) {
+        if (wb % ConsolidateEvery == 0 || wb == targetBatches / 2) {
           val tc0 = System.nanoTime()
           winState = if (!winCompacted && wb >= targetBatches / 2) {
             winCompacted = true // mid-soak compact: keep-all fold
@@ -264,8 +270,25 @@ object SoakAudit {
     val winStoreExact = winStoreFinal ==
       TextAnalysis.winnowFingerprints(docs).count() &&
       winStoreRows.lastOption.contains(winStoreFinal)
-    val winParity = winSuperset && winStoreExact
 
+    val json = summary(sfDir, total, perTrigger, runner.consolidationCount, series,
+      labelParity = parity, novParity = novParity, winSuperset = winSuperset,
+      winStoreExact = winStoreExact, winCompacted = winCompacted)
+    Bench.writeJson(outPath, json)
+    println(json)
+    spark.stop()
+    if (!Verdicts.forall(k => json.get(k).asBoolean)) sys.exit(1)
+  }
+
+  /** The soak artifact: the per-batch series, their trend statistics
+    * and the verdicts ([[Verdicts]]), from the series and the parity
+    * checks `main` ran against the batch operators.
+    */
+  private[graft] def summary(sfDir: String, docs: Long, perTrigger: Long,
+      consolidations: Long, series: Series, labelParity: Boolean,
+      novParity: Boolean, winSuperset: Boolean, winStoreExact: Boolean,
+      winCompacted: Boolean): ObjectNode = {
+    import series._
     val n = ingestWall.size
     val qn = math.max(1, n / 4)
     // quarter means; the LAST quarter is takeRight(qn) so the newest
@@ -303,7 +326,7 @@ object SoakAudit {
       if (s.size % 2 == 1) s(s.size / 2)
       else (s(s.size / 2 - 1) + s(s.size / 2)) / 2.0
     }
-    val cycle = consolidateEvery
+    val cycle = ConsolidateEvery
     // require >= 3 full cycles before cycle-aligned medians: at
     // exactly 2 cycles, `last` = 1 and the second cycle would be
     // compared AGAINST ITSELF (ratio 1.0, vacuously flat — r13
@@ -316,7 +339,7 @@ object SoakAudit {
           median(xs.slice(last * cycle, (last + 1) * cycle)))
       }
 
-    val phaseTrends = phaseNames.map(p =>
+    val phaseTrends = PhaseNames.map(p =>
       p -> phaseTrendOf(phaseSeries(p).toSeq))
     val wallTrend = trendOf(ingestWall.toSeq)
     val readTrend = trendOf(reads.map(_.toDouble).toSeq)
@@ -357,53 +380,49 @@ object SoakAudit {
     val flat = wallTrend.flat && readTrend.flat && novWallTrend.flat &&
       winCostTrend.flat && phaseTrends.forall(_._2.flat)
 
-    def arr(xs: Seq[Double]) = xs.map(x => f"$x%.1f").mkString("[", ",", "]")
-    val phasesJson = phaseNames.map(p =>
-      s""""$p":${arr(phaseSeries(p).toSeq)}""").mkString("{", ",", "}")
-    val trendJson = (phaseTrends :+ ("ingest_total" -> wallTrend))
-      .map { case (p, t) =>
-        f""""$p":{"q2_ms":${t.q2}%.1f,"q4_ms":${t.q4}%.1f,""" +
-        f""""ratio":${t.ratio}%.3f,"flat":${t.flat}}"""
-      }.mkString("{", ",", "}")
-    val json =
-      s"""{"metric":"curation_soak","sf":"$sfDir","docs":$total,"batches":$n,""" +
-      s""""per_trigger":$perTrigger,"consolidations":${runner.consolidationCount},""" +
-      s""""phase_ms":$phasesJson,"ingest_wall_ms":${arr(ingestWall.toSeq)},""" +
-      s""""consolidate_ms":${arr(consolidateWall.toSeq)},""" +
-      s""""maint_reads":${reads.mkString("[", ",", "]")},""" +
-      s""""batch_sizes":${sizes.mkString("[", ",", "]")},""" +
-      s""""trends_q4_over_q2":$trendJson,""" +
-      f""""ingest_wall_trend_q4_over_q2":${wallTrend.ratio}%.3f,""" +
-      f""""read_trend_q4_over_q2":${readTrend.ratio}%.3f,""" +
-      f""""consolidate_total_ms":${consolidateWall.sum}%.1f,""" +
-      s""""scaling_phases":{"consolidate":"amortized O(corpus) log compaction by design; fires every 10 batches, reported above, excluded from the flat assertion"},""" +
-      s""""novelty_wall_ms":${arr(novWall.toSeq)},""" +
-      s""""novelty_store_rows":${novStoreRows.mkString("[", ",", "]")},""" +
-      s""""novelty_batch_grams":${novBatchGrams.mkString("[", ",", "]")},""" +
-      f""""novelty_wall_trend_q4_over_q2":${novWallTrend.ratio}%.3f,""" +
-      f""""novelty_absorb_rate_q1":$novRateQ1%.4f,""" +
-      f""""novelty_absorb_rate_q4":$novRateQ4%.4f,""" +
-      s""""novelty_store_sublinear":$novSubLinear,""" +
-      s""""novelty_parity":$novParity,""" +
-      s""""winnow_wall_ms":${arr(winWall.toSeq)},""" +
-      s""""winnow_store_rows":${winStoreRows.mkString("[", ",", "]")},""" +
-      s""""winnow_batch_fps":${winBatchFps.mkString("[", ",", "]")},""" +
-      s""""winnow_consolidate_ms":${arr(winConsolidateWall.toSeq)},""" +
-      s""""winnow_batch_pairs":${winBatchPairs.mkString("[", ",", "]")},""" +
-      s""""winnow_cost_us_per_row":${arr(winCostPerRow)},""" +
-      f""""winnow_cost_trend_q4_over_q2":${winCostTrend.ratio}%.3f,""" +
-      f""""winnow_wall_trend_q4_over_q2":${winWallTrend.ratio}%.3f,""" +
-      s""""winnow_compacted_mid_soak":$winCompacted,""" +
-      s""""winnow_cost_bounded":$winCostBounded,""" +
-      s""""winnow_store_exact":$winStoreExact,""" +
-      s""""winnow_pair_superset":$winSuperset,""" +
-      s""""winnow_parity":$winParity,""" +
-      s""""label_parity":$parity,"flat":$flat}"""
-    Files.write(java.nio.file.Paths.get(outPath), json.getBytes("UTF-8"))
-    println(json)
-    spark.stop()
-    if (!parity || !novParity || !novSubLinear || !winParity ||
-        !winCostBounded || !flat)
-      sys.exit(1)
+    // each number keeps a fixed count of decimals; a statistic a short
+    // series cannot define (a quarter past its end) is null, since
+    // strict JSON has no NaN
+    def num(x: Double, digits: Int): JsonNode =
+      if (x.isNaN || x.isInfinite) NullNode.instance
+      else DoubleNode.valueOf(BigDecimal(x)
+        .setScale(digits, BigDecimal.RoundingMode.HALF_UP).toDouble)
+    def arr(xs: Seq[Double]): Seq[JsonNode] = xs.map(num(_, 1))
+    def trendJson(t: Trend) = Bench.jsonObject("q2_ms" -> num(t.q2, 1),
+      "q4_ms" -> num(t.q4, 1), "ratio" -> num(t.ratio, 3), "flat" -> t.flat)
+    Bench.jsonObject("metric" -> "curation_soak", "sf" -> sfDir,
+      "docs" -> docs, "batches" -> n, "per_trigger" -> perTrigger,
+      "consolidations" -> consolidations, "phase_ms" -> Bench.jsonObject(
+        PhaseNames.map(p => p -> arr(phaseSeries(p).toSeq)): _*),
+      "ingest_wall_ms" -> arr(ingestWall.toSeq),
+      "consolidate_ms" -> arr(consolidateWall.toSeq),
+      "maint_reads" -> reads.toSeq, "batch_sizes" -> sizes.toSeq,
+      "trends_q4_over_q2" -> Bench.jsonObject(
+        (phaseTrends :+ ("ingest_total" -> wallTrend))
+          .map { case (p, t) => p -> trendJson(t) }: _*),
+      "ingest_wall_trend_q4_over_q2" -> num(wallTrend.ratio, 3),
+      "read_trend_q4_over_q2" -> num(readTrend.ratio, 3),
+      "consolidate_total_ms" -> num(consolidateWall.sum, 1),
+      "scaling_phases" -> Bench.jsonObject("consolidate" ->
+        ("amortized O(corpus) log compaction by design; fires every " +
+          s"$cycle batches, reported above, excluded from the flat assertion")),
+      "novelty_wall_ms" -> arr(novWall.toSeq),
+      "novelty_store_rows" -> novStoreRows.toSeq, "novelty_batch_grams" -> novBatchGrams.toSeq,
+      "novelty_wall_trend_q4_over_q2" -> num(novWallTrend.ratio, 3),
+      "novelty_absorb_rate_q1" -> num(novRateQ1, 4),
+      "novelty_absorb_rate_q4" -> num(novRateQ4, 4),
+      "novelty_store_sublinear" -> novSubLinear, "novelty_parity" -> novParity,
+      "winnow_wall_ms" -> arr(winWall.toSeq),
+      "winnow_store_rows" -> winStoreRows.toSeq, "winnow_batch_fps" -> winBatchFps.toSeq,
+      "winnow_consolidate_ms" -> arr(winConsolidateWall.toSeq),
+      "winnow_batch_pairs" -> winBatchPairs.toSeq,
+      "winnow_cost_us_per_row" -> arr(winCostPerRow),
+      "winnow_cost_trend_q4_over_q2" -> num(winCostTrend.ratio, 3),
+      "winnow_wall_trend_q4_over_q2" -> num(winWallTrend.ratio, 3),
+      "winnow_compacted_mid_soak" -> winCompacted,
+      "winnow_cost_bounded" -> winCostBounded, "winnow_store_exact" -> winStoreExact,
+      "winnow_pair_superset" -> winSuperset,
+      "winnow_parity" -> (winSuperset && winStoreExact),
+      "label_parity" -> labelParity, "flat" -> flat)
   }
 }

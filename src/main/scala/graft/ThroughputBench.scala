@@ -83,7 +83,8 @@ object ThroughputBench {
       .agg(count(lit(1)).as("canonical"),
         count(when(col("admit"), 1)).as("admitted")).head()
     val rate = n / ((System.nanoTime() - t0) / 1e9)
-    println(f"""{"docs_per_sec":${rate}%.0f,"rows":$n,"canonical":${out.getLong(0)},"admitted":${out.getLong(1)}}""")
+    println(Bench.jsonObject("docs_per_sec" -> math.round(rate), "rows" -> n,
+      "canonical" -> out.getLong(0), "admitted" -> out.getLong(1)))
   }
 
   /** Wire throughput of the graftlog S1/S5 twin — records/sec through
@@ -125,7 +126,10 @@ object ThroughputBench {
       .select(from_json(col("value").cast("string"), schema).as("r"))
       .agg(count(lit(1)).as("n"), sum(col("r.amount")).as("s")).head()
     val consumeRate = n / ((System.nanoTime() - t2) / 1e9)
-    println(f"""{"log_produce_rows_per_sec":${produceRate}%.0f,"log_scan_rows_per_sec":${scanRate}%.0f,"log_consume_rows_per_sec":${consumeRate}%.0f,"rows":$n,"check":${out.getLong(0)},"scan_check":${scanOut.getLong(0)}}""")
+    println(Bench.jsonObject("log_produce_rows_per_sec" -> math.round(produceRate),
+      "log_scan_rows_per_sec" -> math.round(scanRate),
+      "log_consume_rows_per_sec" -> math.round(consumeRate), "rows" -> n,
+      "check" -> out.getLong(0), "scan_check" -> scanOut.getLong(0)))
   }
 
   /** Avro vs JSON payload decode through the SAME log boundary — the
@@ -214,7 +218,13 @@ object ThroughputBench {
     // parity: both payloads decode to the identical aggregate
     val parity = avroOut.getLong(0) == jsonOut.getLong(0) &&
       avroOut.getDouble(1) == jsonOut.getDouble(1)
-    println(f"""{"log_avro_produce_rows_per_sec":${avroProduce}%.0f,"log_avro_consume_rows_per_sec":${avroConsume}%.0f,"log_avro_consume_warm_rows_per_sec":${avroWarm}%.0f,"log_json_produce_rows_per_sec":${jsonProduce}%.0f,"log_json_consume_rows_per_sec":${jsonConsume}%.0f,"log_json_consume_warm_rows_per_sec":${jsonWarm}%.0f,"rows":$n,"parity":$parity}""")
+    println(Bench.jsonObject("log_avro_produce_rows_per_sec" -> math.round(avroProduce),
+      "log_avro_consume_rows_per_sec" -> math.round(avroConsume),
+      "log_avro_consume_warm_rows_per_sec" -> math.round(avroWarm),
+      "log_json_produce_rows_per_sec" -> math.round(jsonProduce),
+      "log_json_consume_rows_per_sec" -> math.round(jsonConsume),
+      "log_json_consume_warm_rows_per_sec" -> math.round(jsonWarm), "rows" -> n,
+      "parity" -> parity))
   }
 
   def main(args: Array[String]): Unit = {
@@ -283,6 +293,7 @@ object ThroughputBench {
       if (s.isEmpty) 0.0 else s.map(_.processedRowsPerSecond).max
     }
 
-    println(f"""{"batch_rows_per_sec":${batchRate}%.0f,"stream_rows_per_sec":${streamRate}%.0f,"rows":$n,"check":${agg.head.getLong(1)}}""")
+    println(Bench.jsonObject("batch_rows_per_sec" -> math.round(batchRate),
+      "stream_rows_per_sec" -> math.round(streamRate), "rows" -> n, "check" -> agg.head.getLong(1)))
   }
 }

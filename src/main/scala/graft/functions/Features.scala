@@ -90,9 +90,9 @@ object Features {
   // ---- geo features (FeatureExtractor.java:173-211,401-417) ----
 
   /** Haversine distance in km — FeatureExtractor.java:407-417, as
-    * pure column math (see graft.plans.HaversineDistance for the
-    * codegen Expression form). Not correctly rounded across libms —
-    * oracle queries round the result.
+    * pure column math: the reference CatalystSpec holds the native
+    * kernel (graft.plans.HaversineDistance) bit-equal to. Not correctly
+    * rounded across libms — oracle queries round the result.
     */
   def haversineKm(lat1: Column, lon1: Column,
                   lat2: Column, lon2: Column): Column = {

@@ -95,10 +95,7 @@ object Joins {
     require(!left.columns.contains(valueCol),
       s"asOfJoinNative would duplicate left column '$valueCol'")
     val spark = left.sparkSession
-    if (!spark.experimental.extraStrategies
-        .contains(graft.plans.AsOfJoinStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ graft.plans.AsOfJoinStrategy
+    graft.plans.GraftExtensions.useStrategy(spark, graft.plans.AsOfJoinStrategy)
     val l = left.queryExecution.analyzed
     val r = right.select(col(key), col(ts), col(valueCol))
       .queryExecution.analyzed

@@ -155,9 +155,7 @@ object TopN {
                         graft.plans.PartialTopKExec.DefaultMaxKeys)
       : DataFrame = {
     val spark = df.sparkSession
-    if (!spark.experimental.extraStrategies.contains(graft.plans.TopKStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ graft.plans.TopKStrategy
+    graft.plans.GraftExtensions.useStrategy(spark, graft.plans.TopKStrategy)
     val analyzed = df.queryExecution.analyzed
     def attr(name: String) = analyzed.output
       .find(_.name == name)

@@ -1,11 +1,12 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, Literal, Size}
 import org.apache.spark.sql.types.IntegerType
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, CollectSet, HyperLogLogPlusPlus}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.execution.SparkStrategy
 
 /** Optimizer rule for the 100 TB path: rewrite exact
   * `size(collect_set(x))` distinct counts into HyperLogLog++
@@ -33,10 +34,10 @@ object ApproxDistinctRewrite extends Rule[LogicalPlan] {
     }
 }
 
-/** Session extensions: `haversine_km` and `dot_d` as SQL-registered native
-  * expression plus the approx-distinct rewrite. Install with
-  * `SparkSession.builder().withExtensions(new GraftExtensions)` or
-  * `spark.sql.extensions=graft.plans.GraftExtensions`.
+/** The one way graft's native kernels reach a running session:
+  * `install` registers `haversine_km`, `dot_d` and `bounded_levenshtein`
+  * as SQL functions and adds the approx-distinct rewrite and the top-k
+  * and as-of join strategies, each at most once however often it runs.
   */
 object GraftExtensions {
   /** `bounded_levenshtein(l, r, k)` — k must be a foldable INT
@@ -45,7 +46,7 @@ object GraftExtensions {
     * before constant folding, so foldable non-literals (`1+2`, `-1`
     * parsed as UnaryMinus) are evaluated here.
     */
-  private[plans] val boundedLevBuilder: Seq[Expression] => Expression = {
+  private val boundedLevBuilder: Seq[Expression] => Expression = {
     case Seq(a, b, k)
         if k.foldable && k.dataType == IntegerType && k.eval() != null =>
       BoundedLevenshtein(a, b, k.eval().asInstanceOf[Int])
@@ -56,68 +57,38 @@ object GraftExtensions {
            (if (other(2).foldable) "" else " that is not a constant")))
   }
 
-  /** Install into an already-running session (builder extensions only
-    * apply to new SparkContexts): temp-function registration + the
-    * rewrite via experimental extra optimizations.
-    */
-  def install(spark: org.apache.spark.sql.SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "haversine_km",
-      (children: Seq[Expression]) => children match {
-        case Seq(a, b, c, d) => HaversineDistance(a, b, c, d)
-        case _ => throw new IllegalArgumentException(
-          s"haversine_km expects 4 arguments, got ${children.size}")
-      },
-      "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "dot_d",
-      (children: Seq[Expression]) => children match {
-        case Seq(a, b) => DotProduct(a, b)
-        case _ => throw new IllegalArgumentException(
-          s"dot_d expects 2 arguments, got ${children.size}")
-      },
-      "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bounded_levenshtein", boundedLevBuilder, "scala_udf")
+  private def arityError(name: String, n: Int, children: Seq[Expression]) =
+    new IllegalArgumentException(s"$name expects $n arguments, got ${children.size}")
+
+  /** Each SQL function's name and builder. */
+  private val functions: Seq[(String, Seq[Expression] => Expression)] = Seq(
+    ("haversine_km", {
+      case Seq(a, b, c, d) => HaversineDistance(a, b, c, d)
+      case cs => throw arityError("haversine_km", 4, cs)
+    }),
+    ("dot_d", {
+      case Seq(a, b) => DotProduct(a, b)
+      case cs => throw arityError("dot_d", 2, cs)
+    }),
+    ("bounded_levenshtein", boundedLevBuilder))
+
+  /** Add `strategy` to the session's extra strategies unless it is
+    * there; the operators that build a graft logical node call this. */
+  private[graft] def useStrategy(spark: SparkSession,
+                                 strategy: SparkStrategy): Unit =
+    if (!spark.experimental.extraStrategies.contains(strategy))
+      spark.experimental.extraStrategies =
+        spark.experimental.extraStrategies :+ strategy
+
+  def install(spark: SparkSession): Unit = {
+    functions.foreach { case (name, builder) =>
+      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
+        name, builder, "scala_udf")
+    }
     if (!spark.experimental.extraOptimizations.contains(ApproxDistinctRewrite))
       spark.experimental.extraOptimizations =
         spark.experimental.extraOptimizations :+ ApproxDistinctRewrite
-    if (!spark.experimental.extraStrategies.contains(TopKStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ TopKStrategy
-    if (!spark.experimental.extraStrategies.contains(AsOfJoinStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ AsOfJoinStrategy
-  }
-}
-
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      new org.apache.spark.sql.catalyst.FunctionIdentifier("haversine_km"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[HaversineDistance].getName, "haversine_km"),
-      (children: Seq[Expression]) => children match {
-        case Seq(a, b, c, d) => HaversineDistance(a, b, c, d)
-        case _ => throw new IllegalArgumentException(
-          s"haversine_km expects 4 arguments, got ${children.size}")
-      }))
-    ext.injectFunction((
-      new org.apache.spark.sql.catalyst.FunctionIdentifier("dot_d"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[DotProduct].getName, "dot_d"),
-      (children: Seq[Expression]) => children match {
-        case Seq(a, b) => DotProduct(a, b)
-        case _ => throw new IllegalArgumentException(
-          s"dot_d expects 2 arguments, got ${children.size}")
-      }))
-    ext.injectFunction((
-      new org.apache.spark.sql.catalyst.FunctionIdentifier("bounded_levenshtein"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[BoundedLevenshtein].getName, "bounded_levenshtein"),
-      GraftExtensions.boundedLevBuilder))
-    ext.injectOptimizerRule(_ => ApproxDistinctRewrite)
-    ext.injectPlannerStrategy(_ => TopKStrategy)
-    ext.injectPlannerStrategy(_ => AsOfJoinStrategy)
+    useStrategy(spark, TopKStrategy)
+    useStrategy(spark, AsOfJoinStrategy)
   }
 }

@@ -57,7 +57,6 @@ final case class GraftLogOptions(all: Map[String, String]) {
     .getOrElse(throw new IllegalArgumentException(
       "graftlog requires option 'path' (the log root directory)"))
   val partitions: Int = get("log.partitions").map(_.toInt).getOrElse(4)
-  val startingOffsets: String = get("startingOffsets").getOrElse("latest")
   val endingOffsets: String = get("endingOffsets").getOrElse("latest")
   val maxRecordsPerTrigger: Option[Long] = get("maxRecordsPerTrigger").map(_.toLong)
   /** First offset with record ts >= this (micros) — the

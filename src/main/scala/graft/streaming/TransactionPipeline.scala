@@ -6,7 +6,7 @@ import org.apache.spark.sql.types._
 
 import graft.functions.{Features => F, Scoring}
 import graft.operators.Decisions
-import graft.plans.ProfileLookup
+import graft.plans.{HaversineDistance, ProfileLookup}
 
 /** The main fraud pipeline (reference: FraudDetectionJob.java:33-107),
   * re-expressed as one declarative Structured Streaming plan:
@@ -102,7 +102,7 @@ object TransactionPipeline {
   def scoreAndDecide(modeled: DataFrame): DataFrame = {
     val amount = col("amount")
     val ts = col("timestamp")
-    val geoDist = F.haversineKm(
+    val geoDist = HaversineDistance(
       col("geolocation.lat"), col("geolocation.lon"),
       col("merchant_location.lat"), col("merchant_location.lon"))
     val score = Scoring.ruleScore(Seq(

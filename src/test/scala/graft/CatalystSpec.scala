@@ -5,27 +5,67 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.Features
-import graft.plans.{ApproxDistinctRewrite, GraftExtensions, HaversineDistance}
+import graft.plans.{ApproxDistinctRewrite, AsOfJoinStrategy, GraftExtensions,
+  HaversineDistance, TopKStrategy}
 
 class CatalystSpec extends AnyFunSuite {
   import TestSpark._
   import spark.implicits._
 
   test("HaversineDistance expression equals the column-math composition") {
-    val df = Seq(
-      (40.7128, -74.0060, 34.0522, -118.2437),
-      (0.0, 0.0, 0.0, 0.0),
-      (-33.86, 151.21, 51.5, -0.13))
-      .toDF("lat1", "lon1", "lat2", "lon2")
-    val out = df.select(
-      HaversineDistance(col("lat1"), col("lon1"), col("lat2"), col("lon2"))
-        .as("expr_d"),
-      Features.haversineKm(col("lat1"), col("lon1"), col("lat2"), col("lon2"))
-        .as("col_d")).collect()
-    out.foreach { r =>
-      assert(r.getDouble(0) == r.getDouble(1),
-        s"codegen expression diverged: ${r.getDouble(0)} vs ${r.getDouble(1)}")
+    // (lat, lon) structs shaped like the stream's geolocation and
+    // merchant_location; a null struct or coordinate is a missing field
+    def pt(lat: Double, lon: Double): Option[(Option[Double], Option[Double])] =
+      Some((Some(lat), Some(lon)))
+    val ny = pt(40.75, -73.99) // the generator's merchant location
+    // the stream's geo rule fires past 1,000 km; that is this many
+    // degrees of latitude due north
+    val ruleDeg = math.toDegrees(1000.0 / 6371.0)
+    val antipodal = (0 until 60).map { i =>
+      val (lat, lon) = (i * 1.37 - 40.0, i * 0.5 - 10.0)
+      (pt(lat, lon), pt(-lat, lon + 180.0))
     }
+    val rows = Seq(
+      (pt(40.7128, -74.0060), pt(34.0522, -118.2437)),
+      (pt(0.0, 0.0), pt(0.0, 0.0)),
+      (pt(-33.86, 151.21), pt(51.5, -0.13)),
+      (Some((None, Some(-74.0))), ny),
+      (ny, None),
+      (ny, ny),
+      (pt(40.75 + ruleDeg - 0.01, -73.99), ny),
+      (pt(40.75 + ruleDeg + 0.01, -73.99), ny)) ++ antipodal
+    val (lat1, lon1, lat2, lon2) =
+      (col("g._1"), col("g._2"), col("m._1"), col("m._2"))
+    val out = rows.toDF("g", "m").select(
+      HaversineDistance(lat1, lon1, lat2, lon2).as("expr_d"),
+      Features.haversineKm(lat1, lon1, lat2, lon2).as("col_d")).collect()
+      .map(r => (Option(r.get(0)).map(_.asInstanceOf[Double]),
+                 Option(r.get(1)).map(_.asInstanceOf[Double])))
+    out.foreach { case (e, c) =>
+      assert(e.map(java.lang.Double.doubleToLongBits) ==
+        c.map(java.lang.Double.doubleToLongBits),
+        s"codegen expression diverged: $e vs $c")
+    }
+    val d = out.map(_._1)
+    assert(d(3).isEmpty && d(4).isEmpty, "a missing coordinate gives null")
+    assert(d(5).contains(0.0))
+    assert(d(6).exists(_ < 1000.0) && d(7).exists(_ > 1000.0),
+      s"rule rows at ${d(6)} and ${d(7)} km")
+    // sin² + cos² can round past 1, so `1 − a` goes below zero
+    assert(d.drop(8).exists(_.exists(_.isNaN)),
+      "no antipodal row took sqrt of a negative")
+  }
+
+  test("install registers each strategy and the rule exactly once") {
+    GraftExtensions.install(spark)
+    GraftExtensions.install(spark)
+    graft.operators.TopN.topPerKeyNative(
+      Seq(("a", 1, 1)).toDF("k", "o", "t"), "k", "o", "t", 1)
+    val strategies = spark.experimental.extraStrategies
+    assert(strategies.count(_ == TopKStrategy) == 1 &&
+      strategies.count(_ == AsOfJoinStrategy) == 1, strategies)
+    assert(spark.experimental.extraOptimizations
+      .count(_ == ApproxDistinctRewrite) == 1)
   }
 
   test("HaversineDistance survives both codegen and interpreted paths") {

@@ -13,8 +13,14 @@ import graft.streaming.TransactionPipeline
   * (`DontCompileHugeMethods`), so a fused stage whose `processNext`
   * grows past it runs every row in the interpreter, with no error
   * anywhere. The stream's fused stage — enrich, model, decide and the
-  * log sink's record projection — sits close to that limit; this spec
-  * fails the column that crosses it.
+  * log sink's record projection — is the one near that limit; this
+  * spec fails the column that crosses it.
+  *
+  * The JSON parse stays out of that stage. In Spark 4.1.2
+  * `JsonToStructs` (`from_json`) implements `CodegenFallback`, so its
+  * `Project` runs row by row between the scan's stage and the fused
+  * one, and engine code cannot move it in. `StructsToJson` (`to_json`,
+  * the sink's record) is `RuntimeReplaceable` and does fuse.
   */
 class PipelineCodegenSpec extends AnyFunSuite with TempDirs {
   import TestSpark._

@@ -93,4 +93,31 @@ class SoakSpec extends AnyFunSuite with TempDirs {
     assert(got == expect, "label parity with the batch fixpoint")
     assert(expect.values.toSet.size < 300, "the near-dup families merged")
   }
+
+  test("a one-batch soak writes a valid JSON artifact, its undefined trends null") {
+    val s = new SoakAudit.Series
+    s.phaseSeries.values.foreach(_ += 5.0)
+    s.ingestWall += 25.0; s.consolidateWall += 0.0
+    s.reads += 10L; s.sizes += 100L
+    s.novWall += 3.0; s.novStoreRows += 50L; s.novBatchGrams += 60L
+    s.winWall += 4.0; s.winConsolidateWall += 0.0
+    s.winStoreRows += 20L; s.winBatchFps += 20L; s.winBatchPairs += 0L
+    val path = tempDir("graft_soaksummary") + "/SOAK.json"
+    Bench.writeJson(path, SoakAudit.summary("sf", docs = 100L,
+      perTrigger = 100L, consolidations = 0L, s, labelParity = true,
+      novParity = true, winSuperset = true, winStoreExact = true,
+      winCompacted = false))
+    val text = new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(path)), "UTF-8")
+    assert(!text.contains("NaN"), text)
+    val root = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(text) // strict: a bare NaN token does not parse
+    assert(root.get("batches").asInt == 1)
+    assert(root.get("ingest_wall_ms").get(0).asDouble == 25.0)
+    val total = root.get("trends_q4_over_q2").get("ingest_total")
+    assert(total.get("q2_ms").isNull && total.get("ratio").isNull)
+    assert(total.get("q4_ms").asDouble == 25.0)
+    assert(SoakAudit.Verdicts.forall(k => root.get(k).isBoolean))
+    assert(!root.get("flat").asBoolean, "one batch cannot show a flat trend")
+  }
 }
